@@ -1,12 +1,18 @@
-"""Benchmark harness — one JSON line on stdout.
+"""Benchmark harness — JSON lines on stdout, the compact summary last.
 
 Runs the engine's headline queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]. Each query executes
 fully via the noop sink (no collect cost, no result pruning — every
 computed column materializes).
 
+    python bench.py                  # the HEADLINE suite, sidecar record
+    python bench.py q1 q2 ...        # just these queries, no sidecar
+
 Output: {"metric": "...", "value": <total sec>, "unit": "sec",
-         "queries": {"<name>": sec, ...}, "sf": <sf>}
+         "queries": {"<name>": sec, ...}, "sf": <sf>, "cpus": <cpus>,
+         "layers": {"<name>": {"build_jobs": n, "exec_jobs": n,
+                               "stages": n, "tasks": n, ...,
+                               "plan": {"exchanges": n, ...}}}, ...}
 """
 
 from __future__ import annotations
@@ -131,9 +137,24 @@ HEADLINE = [
 ]
 
 
-def main() -> None:
+def _layers(probe, name: str, df) -> dict:
+    """Spark's own counters for the query's first build and exec (their
+    job groups), read after the timed reps so the status store has
+    caught up, plus the executed plan's node counts."""
+    build = probe.group_jobs(f"build:{name}:0")
+    execs = probe.group_jobs(f"exec:{name}:0")
+    rec: dict = {"build_jobs": len(build), "exec_jobs": len(execs)}
+    rec.update((k, round(v, 3))
+               for k, v in probe.stage_totals(build + execs).items())
+    rec["plan"] = probe.plan_counts(df)
+    return rec
+
+
+def main(subset: list[str]) -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
+    cpus_env = os.environ["SPARK_GRAFT_CPUS"]
+    cpus: int | str = int(cpus_env) if cpus_env.isdigit() else cpus_env
     # external-load fingerprint, sampled BEFORE the engine spins up
     # (the suite itself pushes the 1-min average to ~10-30 on 32
     # cores, so an end-of-run sample would only measure ourselves)
@@ -142,11 +163,14 @@ def main() -> None:
     except OSError:
         load_1min = None
 
+    from perfbench.probes import SparkProbe
     from travel_data_pipeline_spark import registry
     from travel_data_pipeline_spark.session import get_spark
 
     spark = get_spark("tdp-bench")
-    spark.sparkContext.setLogLevel("ERROR")
+    sc = spark.sparkContext
+    sc.setLogLevel("ERROR")
+    probe = SparkProbe(spark)
 
     # JVM/codegen warmup outside the measured window
     spark.range(1_000_000).selectExpr("sum(id)").collect()
@@ -170,31 +194,40 @@ def main() -> None:
 
     calib_sec = _calibration_probe()
 
-    names = [n for n in HEADLINE if n in registry.QUERIES]
+    names = subset or HEADLINE
     timings: dict[str, float] = {}
     builds: dict[str, float] = {}
-    errors: dict[str, str] = {}
+    layers: dict[str, dict] = {}
+    # a name the registry lacks is a DNF, never a silently shorter suite
+    errors: dict[str, str] = {n: "not registered" for n in names
+                              if n not in registry.QUERIES}
     for name in names:
+        if name in errors:
+            print(f"bench: {name} failed: {errors[name]}", file=sys.stderr)
+            continue
         best = float("inf")
         try:
             # best-of-3 (raised from 2, VERDICT r04): damps
             # scan-cache/JIT variance AND the co-tenant noise that made
             # the committed r04 artifact disagree with the day's bests
-            for _ in range(3):
+            for rep in range(3):
                 # the timed window stays execute-only for artifact
                 # comparability with BENCH_r01-r05; build time is
                 # recorded SEPARATELY because some builders now run
                 # planning actions (two_phase_ordered's quantile
                 # probe, PPJoin's routing bound) or eager checkpoints
                 # that would otherwise escape measurement
+                sc.setJobGroup(f"build:{name}:{rep}", name)
                 tb = time.perf_counter()
                 df = registry.QUERIES[name](spark, sf_dir)
                 build = time.perf_counter() - tb
+                sc.setJobGroup(f"exec:{name}:{rep}", name)
                 t0 = time.perf_counter()
                 df.write.format("noop").mode("overwrite").save()
                 best = min(best, time.perf_counter() - t0)
                 builds[name] = round(min(builds.get(name, build), build), 3)
             timings[name] = round(best, 3)
+            layers[name] = _layers(probe, name, df)
         except Exception as exc:  # one broken query must not DNF the suite
             errors[name] = f"{type(exc).__name__}: {exc}"[:300]
             print(f"bench: {name} failed: {errors[name]}", file=sys.stderr)
@@ -224,6 +257,8 @@ def main() -> None:
         "sf": sf_val,
         "load_1min": load_1min,
         "calib_sec": calib_sec,
+        "cpus": cpus,
+        "layers": layers,
     }
     if errors:
         payload["errors"] = errors
@@ -302,7 +337,10 @@ def main() -> None:
     calib_divert = (prev_calib is not None
                     and calib_sec > prev_calib * 1.25)
     divert = not errors and (load_divert or calib_divert)
-    if divert:
+    if subset:
+        # a names run never replaces, nor diverts into, a record
+        targets = []
+    elif divert:
         # The message names the signal that actually fired (ADVICE
         # r13): a calib-triggered divert prints the probe comparison
         # (prev_load may be None/irrelevant there), a load-triggered
@@ -356,12 +394,14 @@ def main() -> None:
         "sf": sf_val,
         "load_1min": load_1min,
         "calib_sec": calib_sec,
+        "cpus": cpus,
         "summary": True,
     }
     if errors:
         summary["dnf"] = True
     print(json.dumps(summary))
+    spark.stop()
 
 
 if __name__ == "__main__":
-    main()
+    main(list(dict.fromkeys(sys.argv[1:])))

@@ -467,6 +467,20 @@ def test_two_phase_kth_out_of_range_and_callable(spark):
                           num_buckets=4).collect()
     truth = sorted(rows, key=lambda r: (r[1], r[0]))[k_fn(100) - 1]
     assert len(got) == 1 and (got[0]["id"], got[0]["v"]) == truth
+    # any non-string iterable of ranks: a range and a generator
+    ranked = sorted(rows, key=lambda r: (r[1], r[0]))
+    for ks, want in ((range(10, 40, 10), [10, 20, 30]),
+                     ((x for x in (95, 5)), [5, 95])):
+        got = W.two_phase_kth(df, order, F.col("v"), ks, num_buckets=4,
+                              rank_col="rk").collect()
+        assert sorted(r["rk"] for r in got) == want
+        assert all((r["id"], r["v"]) == ranked[r["rk"] - 1] for r in got)
+    # every k out of range: n_col still carries the phase-1 total
+    empty = W.two_phase_kth(df, order, F.col("v"), [0, 101],
+                            num_buckets=4, n_col="n")
+    assert empty.count() == 0 and not empty.schema["n"].nullable
+    assert "cast(100 as bigint) AS n#" in \
+        empty._jdf.queryExecution().analyzed().toString()
 
 
 def test_two_phase_kth_multi_k_rank_and_n_cols(spark):

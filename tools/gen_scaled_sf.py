@@ -8,6 +8,8 @@ key offsets, so the suite's parallelism can actually be measured:
 
     python tools/gen_scaled_sf.py [src_dir] [dst_dir] [k]
     # default: /root/testdata/sf0.1 -> /tmp/sfscale/sf1.0, k=10
+    SPARK_GRAFT_SF_DIR=/tmp/sfscale/sf1.0 SPARK_GRAFT_CPUS=4 \
+        python bench.py flight_value_w2_j4 ...   # time a subset there
 
 Replication rules (schema-faithful, fully deterministic — no RNG):
   * customer/orders/lineitem/part/supplier/events/documents/embeddings
@@ -78,7 +80,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     os.makedirs(dst, exist_ok=True)
 
-    bases: dict[str, int] = {}
+    bases: dict[tuple[str, str], int] = {}
     for col, (tbl, pk) in KEY_BASE.items():
         if (tbl, pk) not in bases:
             mx = (spark.read.parquet(f"{src}/{tbl}.parquet")

@@ -160,6 +160,7 @@ def main(amplify: int = 20) -> None:
     # registered queries' inputs, with a tie-heavy key. Validates both
     # throughput and exactness (spot-check ranks at the extremes).
     from travel_data_pipeline_spark.operators.windows import (
+        two_phase_kth,
         two_phase_ordered,
     )
 
@@ -181,9 +182,9 @@ def main(amplify: int = 20) -> None:
     # --- Theil-Sen median over a multi-year day-pair relation ------------
     # The day-pair relation is O(days^2) in the TIME SPAN: the
     # registered query sees ~30 days (435 pairs), a multi-year log
-    # ~2k days (~2M pairs). The median must ride two_phase_ordered,
-    # never a single-partition sort; exactness is checked against a
-    # sequential numpy median of the same slopes.
+    # ~2k days (~2M pairs). The median must ride two_phase_kth, as the
+    # registered query does, never a single-partition sort; exactness is
+    # checked against a sequential numpy median of the same slopes.
     n_days = 2_000
     day = (spark.range(n_days)
            .select(F.col("id").alias("t"),
@@ -196,11 +197,9 @@ def main(amplify: int = 20) -> None:
                   ((F.col("cb").cast("double") - F.col("ca").cast("double"))
                    / (F.col("j").cast("double") - F.col("i").cast("double")))
                   .alias("sl")))
-    ts_ranked = two_phase_ordered(sl, ["sl", "i", "j"],
-                                  F.col("sl"), rank_col="rn",
-                                  num_buckets=256)
+    med = two_phase_kth(sl, ["sl", "i", "j"], bucket_on=F.col("sl"),
+                        k=lambda n: (n + 1) // 2, n_col="np").first()
     n_pairs = n_days * (n_days - 1) // 2
-    med = ts_ranked.filter(F.col("rn") == (n_pairs + 1) // 2).first()
     t_ts = time.perf_counter() - t0
     import numpy as _np
 
@@ -208,7 +207,8 @@ def main(amplify: int = 20) -> None:
                      dtype=_np.float64)
     ii, jj = _np.triu_indices(n_days, k=1)
     ref = _np.sort((cnts[jj] - cnts[ii]) / (jj - ii))[(n_pairs + 1) // 2 - 1]
-    assert med is not None and abs(med.sl - ref) < 1e-12, (med, ref)
+    assert med is not None and med.np == n_pairs, (med, n_pairs)
+    assert abs(med.sl - ref) < 1e-12, (med, ref)
 
     # --- iterative BPE training over the amplified corpus ----------------
     # 5 argmax+merge rounds over amplify x the sf corpus; the fold is

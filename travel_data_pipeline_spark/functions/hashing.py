@@ -35,10 +35,6 @@ def md5_long_sql(expr: str) -> str:
     return f"CAST(('0x' || substr(md5({expr}), 1, {HEX_CHARS})) AS BIGINT)"
 
 
-def md5_long_seeded_sql(expr: str, seed: int) -> str:
-    return md5_long_sql(f"concat('s{seed}:', {expr})")
-
-
 # ---------------------------------------------------------------------------
 # Universal-hash family for MinHash: ONE md5 per input, k affine
 # derivations h_s = (a_s * base + b_s) mod M — ~k x cheaper than k md5s

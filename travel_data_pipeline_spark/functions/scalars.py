@@ -76,26 +76,6 @@ def month_of(ts: ColumnOrName) -> Column:
     return F.month(_col(ts))
 
 
-# -- X7: month arithmetic (trailing N month starts) ---------------------------
-# exchage_rate_crawler.py:503-515 — manual year-borrow loop becomes
-# add_months over a generated sequence.
-def trailing_month_starts(anchor: ColumnOrName, n: int) -> Column:
-    """Array of the first days of the n months ending at anchor's month."""
-    start = F.add_months(F.trunc(_col(anchor), "month"), -(n - 1))
-    return F.sequence(start, F.trunc(_col(anchor), "month"),
-                      F.expr("interval 1 month"))
-
-
-# -- X8: dual-timezone timestamps ---------------------------------------------
-# exchage_rate_crawler.py:256-264; google_trends_processor.py:130-134.
-def kst_of(utc_ts: ColumnOrName) -> Column:
-    return F.from_utc_timestamp(_col(utc_ts), "Asia/Seoul")
-
-
-def fmt_iso_instant(ts: ColumnOrName) -> Column:
-    return F.date_format(_col(ts), "yyyy-MM-dd'T'HH:mm:ssXXX")
-
-
 # -- X9: log-compression -------------------------------------------------------
 # google_trends_processor.py:187-194 — log10(1+x) for x>0; identity x<0; 0 at 0.
 def log_compress(x: ColumnOrName) -> Column:
@@ -142,11 +122,6 @@ def pct_change(cur: ColumnOrName, base: ColumnOrName) -> Column:
     return (_col(cur) - _col(base)) / _col(base) * F.lit(100.0)
 
 
-# -- X14: rounding ------------------------------------------------------------------
-def round2(x: ColumnOrName) -> Column:
-    return F.round(_col(x), 2)
-
-
 # -- X15: sign -> category -> score ---------------------------------------------------
 # _archive/flight_avg_merge.py:47-48 — diff sign -> 상승/하락/동일 -> {-1,1,0}.
 def sign_category(diff: ColumnOrName,
@@ -178,23 +153,6 @@ def nan_to_zero(c: ColumnOrName) -> Column:
 def nan_to_null(c: ColumnOrName) -> Column:
     x = _col(c)
     return F.when(F.isnan(x), F.lit(None).cast("double")).otherwise(x)
-
-
-# -- X18: discount flag -------------------------------------------------------------------
-# _archive/flight_price_preprocessing.py:8-10 — price != priceBeforeDiscount,
-# with priceBeforeDiscount defaulting to price.
-def discount_flag(price: ColumnOrName, before: ColumnOrName) -> Column:
-    return _col(price) != F.coalesce(_col(before), _col(price))
-
-
-# -- X19: JSON encode/decode ---------------------------------------------------------------
-# google_trends_processor.py:110, 240-242; exchange_rate_trigger.py:45-48.
-def to_json_events(df_cols: Column | None = None) -> Column:
-    return F.to_json(F.struct("*") if df_cols is None else df_cols)
-
-
-def from_json_events(c: ColumnOrName, schema) -> Column:
-    return F.from_json(_col(c), schema)
 
 
 # -- X21: map-entry upsert ------------------------------------------------------------------

@@ -80,14 +80,6 @@ def standardize_join(facts: DataFrame, alias_dim: DataFrame,
     return out.drop("_std_key")
 
 
-def multikey_left(fact: DataFrame, agg: DataFrame,
-                  on: Sequence[str]) -> DataFrame:
-    """J4 — multi-key left equi-join (flight x monthly-avg,
-    _archive/flight_avg_merge.py:29-34). Catalyst picks broadcast vs
-    sort-merge by size; AQE converts at runtime if stats allow."""
-    return fact.join(agg, list(on), "left")
-
-
 def explode_join(fact: DataFrame, dim: DataFrame, dim_list_col: str,
                  fact_key: str, exploded_name: str | None = None,
                  how: str = "left") -> DataFrame:

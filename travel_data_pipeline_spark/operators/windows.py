@@ -4,7 +4,7 @@ family the reference lacks but the engine exposes.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Iterable, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -51,21 +51,6 @@ def unpivot(df: DataFrame, id_cols: Sequence[str], value_cols: Sequence[str],
             var_name: str = "key", value_name: str = "value") -> DataFrame:
     """Built on DataFrame.unpivot (Spark >= 3.4) — melts to long form."""
     return df.unpivot(list(id_cols), list(value_cols), var_name, value_name)
-
-
-# ---------------------------------------------------------------------------
-# Ranking family (absent in reference; capability matrix §2.5) —
-# lead/lag/rank/dense_rank/ntile over explicit windows.
-# ---------------------------------------------------------------------------
-
-def with_sequence_stats(df: DataFrame, part_keys: Sequence[str], order_col: str,
-                        value: str) -> DataFrame:
-    w = Window.partitionBy(*part_keys).orderBy(F.col(order_col))
-    return (df
-            .withColumn("prev_value", F.lag(value).over(w))
-            .withColumn("next_value", F.lead(value).over(w))
-            .withColumn("rnk", F.rank().over(
-                Window.partitionBy(*part_keys).orderBy(F.col(value).desc()))))
 
 
 # ---------------------------------------------------------------------------
@@ -294,7 +279,7 @@ def two_phase_kth(df: DataFrame, order_cols: Sequence[Column | str],
     without a global sort OR a full two-phase rank — the exact
     order-statistic sibling of ``two_phase_ordered`` (r14).
 
-    ``k`` may be an int, a list/tuple of ints (optimization r15: a
+    ``k`` may be an int, any non-string iterable of ints (optimization r15: a
     bounded set of order statistics — quartile grids — picked in ONE
     pass instead of one full rank per statistic), or a callable
     ``n_rows -> k`` / ``n_rows -> [k, ...]`` evaluated on the phase-1
@@ -344,8 +329,9 @@ def two_phase_kth(df: DataFrame, order_cols: Sequence[Column | str],
     n_rows = sum(c for _, c in counts)
     if callable(k):
         k = k(n_rows)
-    ks = sorted({int(x) for x in k}) if isinstance(k, (list, tuple, set)) \
-        else [int(k)]
+    ks = (sorted({int(x) for x in k})
+          if isinstance(k, Iterable) and not isinstance(k, (str, bytes))
+          else [int(k)])
     # (bucket, local_k, global_k) for every in-range requested rank
     hits: list[tuple[int, int, int]] = []
     for kv in ks:
@@ -360,7 +346,7 @@ def two_phase_kth(df: DataFrame, order_cols: Sequence[Column | str],
         if rank_col is not None:
             out = out.withColumn(rank_col, F.lit(None).cast("long"))
         if n_col is not None:
-            out = out.withColumn(n_col, F.lit(None).cast("long"))
+            out = out.withColumn(n_col, F.lit(int(n_rows)).cast("long"))
         return out
     targets = sorted({b for b, _, _ in hits})
     w = Window.partitionBy("_tpb").orderBy(*order_cols)

@@ -39,11 +39,6 @@ def parse_cells(cells: DataFrame) -> DataFrame:
         X.parse_rate("rate_cell").alias("rate"))
 
 
-def parsed_cells(spark: SparkSession) -> DataFrame:
-    return parse_cells(
-        FX.to_spark(spark, FX.EXCHANGE_CELLS_ROWS, FX.EXCHANGE_CELLS_SCHEMA))
-
-
 def exchange_scores_from(cells: DataFrame, master: DataFrame) -> DataFrame:
     """Core plan over caller-supplied raw cells + master dim (the
     landed-raw entry path reuses this with the same expressions)."""

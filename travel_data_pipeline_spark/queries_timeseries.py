@@ -607,10 +607,10 @@ def theil_sen_daily_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale bound: the pair relation is O(days^2) in the TIME SPAN, not
     the corpus — ~30 days -> 435 pairs, a multi-year log at ~2k days
-    -> ~2M pairs. The median therefore rides ``two_phase_ordered``
-    (bucket-parallel rank + broadcast offsets) instead of an
-    unpartitioned window, so even the multi-year shape never funnels
-    millions of rows through one reducer
+    -> ~2M pairs. The median therefore rides ``two_phase_kth``
+    (per-bucket counts, then a rank inside the one bucket holding the
+    median) instead of an unpartitioned window, so even the multi-year
+    shape never funnels millions of rows through one reducer
     (tools/stress_ops.py stresses exactly that: 2k synthetic days,
     ~2M pairs, two-phase median == sequential python median)."""
     from travel_data_pipeline_spark.operators.windows import (

@@ -58,12 +58,6 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
 
 
-def register_temp_views(spark: SparkSession, sf_dir: str) -> None:
-    """Expose all tables as temp views for the SQL API surface."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
-
-
 def read_csv(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
     """S4 — CSV scan with explicit schema (never inferSchema in prod;
     reference: pd.read_csv at _archive/flight_avg_merge.py:22-23)."""
