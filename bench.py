@@ -137,6 +137,15 @@ HEADLINE = [
 ]
 
 
+def _isolate(spark) -> None:
+    """Drop every cache and pin a rep left behind (perfbench's
+    ``worker._isolate``), so the next rep or query builds cold instead
+    of reading a persisting query's cached relation."""
+    spark.catalog.clearCache()
+    for rdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
+        rdd.unpersist(True)
+
+
 def _layers(probe, name: str, df) -> dict:
     """Spark's own counters for the query's first build and exec (their
     job groups), read after the timed reps so the status store has
@@ -226,9 +235,12 @@ def main(subset: list[str]) -> None:
                 df.write.format("noop").mode("overwrite").save()
                 best = min(best, time.perf_counter() - t0)
                 builds[name] = round(min(builds.get(name, build), build), 3)
+                if rep == 2:
+                    layers[name] = _layers(probe, name, df)
+                _isolate(spark)  # outside both timed windows
             timings[name] = round(best, 3)
-            layers[name] = _layers(probe, name, df)
         except Exception as exc:  # one broken query must not DNF the suite
+            _isolate(spark)
             errors[name] = f"{type(exc).__name__}: {exc}"[:300]
             print(f"bench: {name} failed: {errors[name]}", file=sys.stderr)
 

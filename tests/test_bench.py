@@ -88,3 +88,17 @@ def test_bench_names_form(sf_smoke):
     assert set(layer["plan"]) == {"exchanges", "bnlj", "scans",
                                   "python_nodes"}
     assert _sidecars() == before
+
+
+def test_bench_isolate_drops_pins(spark, sf_smoke):
+    # theil_sen_daily_trend persists its pair relation
+    # (two_phase_kth(materialize=True)); without the isolation step
+    # bench.py's reps 2-3 read that cached relation
+    sys.path.insert(0, REPO_ROOT)
+    from bench import _isolate
+    from travel_data_pipeline_spark import registry
+
+    registry.QUERIES["theil_sen_daily_trend"](spark, sf_smoke).collect()
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() > 0
+    _isolate(spark)
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == 0

@@ -3,6 +3,10 @@
 
 from __future__ import annotations
 
+import ast
+import re
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -228,3 +232,163 @@ def test_unpivot_roundtrip_count(spark, sf_smoke):
                        ["l_quantity", "l_extendedprice", "l_discount"],
                        "measure", "value")
     assert longf.count() == li.count() * 3
+
+
+# --- order-pinned float sum (functions/parity.py) --------------------------
+# 1e16 absorbs a following 1.0 (one ulp there is 2.0), so this sum depends
+# on addition order: folded in k order it is 1.0, in other orders 0.0 or
+# 2.0.
+
+_CANCEL = [(1, 1e16), (2, 1.0), (3, -1e16), (4, 1.0)]
+
+
+def _hand_fold(value, key):
+    """The spelling ordered_sum replaced, kept here as its reference."""
+    return F.aggregate(F.array_sort(F.collect_list(F.struct(key, value))),
+                       F.lit(0.0), lambda a, x: a + x[value])
+
+
+@pytest.mark.parametrize("partitions", [1, 7, 200])
+def test_ordered_sum_bits_match_hand_fold_and_duckdb(spark, partitions):
+    import random
+
+    import duckdb
+
+    from travel_data_pipeline_spark.functions.parity import (
+        ordered_sum, ordered_sum_sql,
+    )
+
+    rows = [(g, k, x) for g in range(3) for k, x in _CANCEL]
+    random.Random(partitions).shuffle(rows)
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
+    try:
+        df = (spark.createDataFrame(rows, "g int, k int, x double")
+              .repartition(partitions))
+        got = (df.groupBy("g")
+               .agg(ordered_sum("x", "k").alias("s"),
+                    _hand_fold("x", "k").alias("h"))
+               .orderBy("g").collect())
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (g INT, k INT, x DOUBLE)")
+    con.executemany("INSERT INTO t VALUES (?, ?, ?)", rows)
+    duck = con.execute(f"SELECT g, {ordered_sum_sql('x', 'k')} FROM t "
+                       "GROUP BY g ORDER BY g").fetchall()
+    assert [r.s for r in got] == [r.h for r in got] == [1.0] * 3
+    assert [s for _, s in duck] == [1.0] * 3
+
+
+def test_ordered_sum_empty_group_is_zero_on_both_engines(spark):
+    import duckdb
+
+    from travel_data_pipeline_spark.functions.parity import (
+        ordered_fold, ordered_sum, ordered_sum_sql,
+    )
+
+    df = spark.createDataFrame(_CANCEL, "k int, x double")
+    kept = df.filter(F.col("k") > 9)
+    got = kept.agg(ordered_sum("x", "k").alias("s")).first().s
+    arr = kept.agg(F.array_sort(F.collect_list(F.struct("k", "x")))
+                   .alias("xs")).select(ordered_fold("xs", "x").alias("s"))
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (k INT, x DOUBLE)")
+    con.executemany("INSERT INTO t VALUES (?, ?)", _CANCEL)
+    duck = con.execute(f"SELECT {ordered_sum_sql('x', 'k')} FROM t "
+                       "WHERE k > 9").fetchone()[0]
+    unseeded = con.execute("SELECT list_reduce(list(x ORDER BY k), "
+                           "(a, b) -> a + b) FROM t WHERE k > 9").fetchone()[0]
+    assert got == arr.first().s == duck == 0.0
+    assert unseeded is None  # why the helper keeps only the seeded form
+
+
+def test_ordered_fold_term_function(spark):
+    from travel_data_pipeline_spark.functions.parity import ordered_fold
+
+    df = spark.createDataFrame(_CANCEL, "k int, x double")
+    xs = F.array_sort(F.collect_list(F.struct("k", "x")))
+    got = df.agg(ordered_fold(xs, "x").alias("s"),
+                 ordered_fold(xs, lambda r: r["x"] * 2.0).alias("s2")).first()
+    assert (got.s, got.s2) == (1.0, 2.0)
+
+
+# Regrowth guard: order-pinned float sums go through functions/parity.py.
+# Each hand-spelled site left is listed with why the pair cannot say it.
+_FOLD_ALLOW = {
+    ("queries_round10.py", "ipw_ate_stratified"):
+        "FILTER (term IS NOT NULL) drops one-armed strata from the fold",
+    ("queries_round11.py", "_aipw_oracle"):
+        "FILTER drops one-armed strata; an empty fold is NULL on purpose",
+    ("queries_round11.py", "_js_oracle"):
+        "FILTER drops degenerate strata; an empty fold is NULL on purpose",
+    ("queries_round11.py", "_placebo_oracle"):
+        "FILTER drops one-armed strata; an empty fold is NULL on purpose",
+    ("queries_round11.py", "_ate_boot_oracle"):
+        "FILTER drops one-armed strata; an empty fold is NULL on purpose",
+    ("queries_round18.py", "theta_method_forecast"):
+        "exponential-smoothing recurrence, not a sum",
+}
+_DUCK_FOLD = re.compile(
+    r"list_reduce\(\s*(?:list_prepend\(\s*0\.0,\s*)?list\(")
+
+
+def _is_f(node, name):
+    return (isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == name
+            and isinstance(node.func.value, ast.Name)
+            and node.func.value.id == "F")
+
+
+def _sorted_list(node):
+    """A collected (or named, already collected) list, maybe transformed."""
+    if _is_f(node, "transform") and node.args:
+        node = node.args[0]
+    if (_is_f(node, "array_sort") or _is_f(node, "sort_array")) and node.args:
+        return _is_f(node.args[0], "collect_list")
+    return isinstance(node, ast.Constant) and isinstance(node.value, str)
+
+
+def _hand_spelled_folds(src):
+    """Lines of 0.0-seeded Spark folds over a collected list and of
+    DuckDB list_reduce folds over an aggregate list()."""
+    tree = ast.parse(src)
+    for node in ast.walk(tree):
+        if (_is_f(node, "aggregate") and len(node.args) == 3
+                and _sorted_list(node.args[0])
+                and _is_f(node.args[1], "lit")
+                and ast.literal_eval(node.args[1].args[0]) == 0.0):
+            yield node.lineno
+    for m in _DUCK_FOLD.finditer(src):
+        yield src.count("\n", 0, m.start()) + 1
+
+
+def _enclosing(tree, line):
+    for stmt in tree.body:
+        first = min([stmt.lineno] + [d.lineno for d in
+                                     getattr(stmt, "decorator_list", [])])
+        if first <= line <= stmt.end_lineno:
+            if isinstance(stmt, (ast.FunctionDef, ast.ClassDef)):
+                return stmt.name
+            if isinstance(stmt, ast.Assign):
+                return ast.unparse(stmt.targets[0])
+    return "<module>"
+
+
+def test_no_hand_spelled_ordered_sums():
+    pkg = Path(__file__).resolve().parents[1] / "travel_data_pipeline_spark"
+    hits, seen = [], set()
+    for path in sorted(pkg.rglob("*.py")):
+        if path.relative_to(pkg).as_posix() == "functions/parity.py":
+            continue
+        src = path.read_text()
+        tree = ast.parse(src)
+        for line in _hand_spelled_folds(src):
+            key = (path.relative_to(pkg).as_posix(), _enclosing(tree, line))
+            seen.add(key)
+            if key not in _FOLD_ALLOW:
+                hits.append(f"{key[0]}:{line} ({key[1]})")
+    assert not hits, ("order-pinned float sum spelled by hand; use "
+                      f"functions/parity.ordered_sum*: {hits}")
+    assert set(_FOLD_ALLOW) <= seen, f"stale: {set(_FOLD_ALLOW) - seen}"

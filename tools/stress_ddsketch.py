@@ -31,8 +31,6 @@ sys.path.insert(0, REPO)
 
 
 def main(n_rows: int = 200_000_000) -> None:
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
-
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 

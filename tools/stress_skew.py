@@ -53,8 +53,6 @@ U_DENOM = 1 << 31
 
 
 def main(n_rows: int = 200_000_000) -> None:
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
-
     from pyspark.sql import functions as F
 
     from travel_data_pipeline_spark import registry  # noqa: F401
@@ -143,8 +141,6 @@ def main_agg(n_rows: int = 200_000_000) -> None:
     little for an associative agg) — measured, not assumed. Both arms
     reduce to one deterministic checksum row (DECIMAL(18,2) per-key
     sums re-summed as DECIMAL(38,2): order-free exact)."""
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
-
     from pyspark.sql import functions as F
 
     from travel_data_pipeline_spark import registry  # noqa: F401

@@ -42,8 +42,8 @@ VOCAB = 200
 def main(n_docs: int = 5_000_000) -> None:
     # local[32] puts all executor threads in ONE JVM; the 200M-token
     # shuffle needs a real heap (8g default dies in GCLocker storms —
-    # the stress_graph sizing, a cluster spreads the same relation)
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
+    # set SPARK_GRAFT_DRIVER_MEM as for stress_graph; a cluster spreads
+    # the same relation)
 
     from pyspark.sql import functions as F
 

@@ -1,4 +1,20 @@
-"""Spark-parity rounding spelling for DuckDB oracles.
+"""Spark/DuckDB spellings that keep float results bit-identical.
+
+Two pairs cover float SUMS, one per discipline:
+
+- ``ordered_sum`` / ``ordered_sum_sql`` (ORDER-PINNED): a 0.0-seeded
+  left fold over the group's values sorted by an explicit key, on both
+  engines. Use it where the summed values are raw doubles whose result
+  must be bit-identical: the addition order is fixed by the key, not
+  by partitioning, so any shuffle width gives the same bits.
+  ``ordered_fold`` is its array form, for a sorted list that feeds
+  several sums (one ``collect_list``, several folds).
+- ``rd_term`` / ``rd_term_sql`` (ORDER-FREE): round each term to 12 dp
+  and sum as DECIMAL(38,12), exact and associative, so a plain
+  ``SUM`` parallelises with no sort. Use it where the terms are
+  bounded (|term| <= ~4e3) and a 1e-12 quantum per term is acceptable.
+
+Rounding:
 
 DuckDB's ``round(DOUBLE, n)`` scales by 10^n in BINARY; the multiply
 error can carry a value across a .5 boundary its true decimal
@@ -55,3 +71,40 @@ def rd_term(col, n: int = 12):
     from pyspark.sql import functions as F
 
     return F.round(col, n).cast(f"decimal(38,{n})")
+
+
+_OSV = "_osv"  # the summed value's field in ordered_sum's struct
+
+
+def ordered_sum_sql(value: str, order: str) -> str:
+    """ORDER-PINNED float sum (DuckDB side): 0.0-seeded left fold of
+    ``value`` in ``order``. The seed makes an empty (all-filtered)
+    group 0.0, as Spark's fold gives, where a bare ``list_reduce``
+    raises or returns NULL."""
+    return (f"list_reduce(list_prepend(0.0, list({value} ORDER BY {order})), "
+            "(x, y) -> x + y)")
+
+
+def ordered_fold(arr, value):
+    """0.0-seeded left fold over a sorted struct array — the array form
+    of :func:`ordered_sum`, for a sorted list that feeds several sums.
+    ``value`` names the summed field, or maps an element to its term
+    (``lambda r: r["a"] * r["b"]``)."""
+    from pyspark.sql import functions as F
+
+    term = value if callable(value) else (lambda r: r[value])
+    return F.aggregate(arr, F.lit(0.0), lambda a, r: a + term(r))
+
+
+def ordered_sum(value, *order):
+    """Spark twin of :func:`ordered_sum_sql`: the aggregate that sorts
+    the group's ``struct(*order, value)`` and folds ``value`` from
+    0.0. Ties on ``order`` are broken by ``value`` itself, so the bits
+    do not depend on arrival order."""
+    from pyspark.sql import functions as F
+
+    if isinstance(value, str):
+        value = F.col(value)
+    return ordered_fold(
+        F.array_sort(F.collect_list(F.struct(*order, value.alias(_OSV)))),
+        _OSV)

@@ -298,7 +298,13 @@ def simhash_near_pairs(fingerprints: DataFrame, id_col: str = "doc_id",
 
     ``materialize`` pins the capped band relation that both self-join
     branches consume: ``"checkpoint"`` (default) is an eager
-    localCheckpoint; ``"persist"`` defers to the first action."""
+    localCheckpoint; ``"persist"`` defers to the first action.
+    localCheckpoint blocks are unreplicated and carry no lineage, so on
+    a real cluster losing an executor fails the query instead of
+    recomputing it; pass ``materialize="persist"`` there. The same
+    holds for every ``materialize=`` knob that delegates here or copies
+    this pin (trigram_lm_perplexity, substring_dup_spans,
+    image_ahash_neardup, dedup_scorecard)."""
     if materialize not in ("checkpoint", "persist"):
         raise ValueError(
             f"materialize must be 'checkpoint' or 'persist', "

@@ -24,6 +24,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from travel_data_pipeline_spark.functions.parity import (
+    ordered_sum, ordered_sum_sql,
+)
 from travel_data_pipeline_spark.registry import register
 from travel_data_pipeline_spark.sources.readers import load_table
 
@@ -137,9 +140,8 @@ c{k} AS (
 ),
 r{k} AS (
     SELECT c{k}.d AS node,
-           {1 - DAMPING} / nn.n + {DAMPING} * list_reduce(
-               list_prepend(0.0, list(contrib ORDER BY s)),
-               (a, b) -> a + b) AS r
+           {1 - DAMPING} / nn.n
+               + {DAMPING} * {ordered_sum_sql("contrib", "s")} AS r
     FROM c{k} CROSS JOIN nn
     GROUP BY c{k}.d, nn.n
 )""")
@@ -199,11 +201,7 @@ def copurchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                            ((F.col("w") / F.col("st").cast("double"))
                             * F.col("r")).alias("contrib")))
         folded = (contrib.groupBy("d")
-                  .agg(F.aggregate(
-                      F.array_sort(F.collect_list(
-                          F.struct("s", "contrib"))),
-                      F.lit(0.0),
-                      lambda a, x: a + x["contrib"]).alias("nsum")))
+                  .agg(ordered_sum("contrib", "s").alias("nsum")))
         ranks = (folded.crossJoin(F.broadcast(nn))
                  .select(F.col("d").alias("node"),
                          (F.lit(1 - DAMPING) / F.col("n")

@@ -26,7 +26,9 @@ from travel_data_pipeline_spark.functions.hashing import (
     md5_long,
     md5_long_sql,
 )
-from travel_data_pipeline_spark.functions.parity import round_sql
+from travel_data_pipeline_spark.functions.parity import (
+    ordered_sum, ordered_sum_sql, round_sql,
+)
 from travel_data_pipeline_spark.registry import register
 from travel_data_pipeline_spark.sources.readers import load_table
 
@@ -175,8 +177,7 @@ scored AS (
 ),
 folded AS (
     SELECT doc_id, COUNT(*) AS n_bigrams,
-           list_reduce(list_prepend(0.0, list(nll ORDER BY pos)),
-                       (a, b) -> a + b) AS total
+           {ordered_sum_sql("nll", "pos")} AS total
     FROM scored GROUP BY doc_id
 )
 SELECT doc_id, CAST(n_bigrams AS BIGINT) AS n_bigrams,
@@ -221,10 +222,7 @@ def bigram_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
                               .cast("double"))).alias("nll")))
     folded = (scored.groupBy("doc_id")
               .agg(F.count("*").alias("n_bigrams"),
-                   F.aggregate(
-                       F.array_sort(F.collect_list(F.struct("pos", "nll"))),
-                       F.lit(0.0),
-                       lambda a, x: a + x["nll"]).alias("total")))
+                   ordered_sum("nll", "pos").alias("total")))
     return folded.select(
         "doc_id", "n_bigrams",
         F.round(F.exp(F.col("total") / F.col("n_bigrams")), 6).alias("ppl"))

@@ -21,7 +21,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from travel_data_pipeline_spark.functions.hashing import md5_long, md5_long_sql
-from travel_data_pipeline_spark.functions.parity import round_sql
+from travel_data_pipeline_spark.functions.parity import (
+    ordered_fold, ordered_sum, ordered_sum_sql, round_sql,
+)
 from travel_data_pipeline_spark.operators import ml
 from travel_data_pipeline_spark.operators.text import token_array
 from travel_data_pipeline_spark.registry import register
@@ -703,7 +705,7 @@ def target_encode_loo_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
 # float32 -> double widening is exact in both engines.
 # ---------------------------------------------------------------------------
 
-@register("embedding_label_centroids", """
+@register("embedding_label_centroids", f"""
 WITH vals AS (
     -- range bound derives from each row's actual embedding length
     -- (ADVICE r04: a hardcoded dim would silently desynchronize the
@@ -715,12 +717,11 @@ WITH vals AS (
 ),
 folded AS (
     SELECT label, dim_idx, count(*) AS n,
-           list(v ORDER BY vec_id) AS vs
+           {ordered_sum_sql("v", "vec_id")} AS s
     FROM vals GROUP BY label, dim_idx
 )
 SELECT label, dim_idx, CAST(n AS BIGINT) AS n,
-       round(list_reduce(vs, (x, y) -> x + y) / CAST(n AS DOUBLE), 6) + 0.0
-         AS centroid
+       round(s / CAST(n AS DOUBLE), 6) + 0.0 AS centroid
 FROM folded
 """)
 def embedding_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -737,13 +738,10 @@ def embedding_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
          .alias("dim_idx", "v"))
     folded = (vals.groupBy("label", "dim_idx")
               .agg(F.count("*").alias("n"),
-                   F.array_sort(F.collect_list(F.struct("vec_id", "v")))
-                    .alias("vs")))
-    total = F.aggregate(F.transform("vs", lambda s: s["v"]),
-                        F.lit(0.0), lambda a, x: a + x)
+                   ordered_sum("v", "vec_id").alias("s")))
     return folded.select(
         "label", "dim_idx", "n",
-        (F.round(total / F.col("n").cast("double"), 6) + 0.0)
+        (F.round(F.col("s") / F.col("n").cast("double"), 6) + 0.0)
          .alias("centroid"))
 
 
@@ -756,11 +754,6 @@ def embedding_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 # order is pinned (chi2/PSI recipe), and the final slope/intercept are
 # single expressions with the parity rounding spelling in the oracle.
 # ---------------------------------------------------------------------------
-
-def _rank_fold(value_expr: str) -> str:
-    return (f"list_reduce(list({value_expr} ORDER BY rk), "
-            "(x, y) -> x + y)")
-
 
 @register("zipf_slope_vocab", f"""
 WITH tf AS (
@@ -777,12 +770,12 @@ ranked AS (
 ),
 folded AS (
     SELECT count(*) AS n,
-           {_rank_fold('ln(CAST(rk AS DOUBLE))')} AS sx,
-           {_rank_fold('ln(CAST(freq AS DOUBLE))')} AS sy,
-           {_rank_fold('ln(CAST(rk AS DOUBLE)) * ln(CAST(rk AS DOUBLE))')}
-             AS sxx,
-           {_rank_fold('ln(CAST(rk AS DOUBLE)) * ln(CAST(freq AS DOUBLE))')}
-             AS sxy
+           {ordered_sum_sql('ln(CAST(rk AS DOUBLE))', 'rk')} AS sx,
+           {ordered_sum_sql('ln(CAST(freq AS DOUBLE))', 'rk')} AS sy,
+           {ordered_sum_sql('ln(CAST(rk AS DOUBLE)) * ln(CAST(rk AS DOUBLE))',
+                            'rk')} AS sxx,
+           {ordered_sum_sql('ln(CAST(rk AS DOUBLE)) * ln(CAST(freq AS DOUBLE))',
+                            'rk')} AS sxy
     FROM ranked
 )
 SELECT CAST(n AS BIGINT) AS n_terms,
@@ -821,18 +814,13 @@ def zipf_slope_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
                       F.log(F.col("rk").cast("double")).alias("lx"),
                       F.log(F.col("freq").cast("double")).alias("ly")))
 
-    def fold(col):
-        arr = F.transform(
-            F.array_sort(F.collect_list(F.struct("rk", col.alias("v")))),
-            lambda s: s["v"])
-        return F.aggregate(arr, F.lit(0.0), lambda a, x: a + x)
-
+    lx, ly = F.col("lx"), F.col("ly")
     folded = ranked.agg(
         F.count("*").alias("n"),
-        fold(F.col("lx")).alias("sx"),
-        fold(F.col("ly")).alias("sy"),
-        fold(F.col("lx") * F.col("lx")).alias("sxx"),
-        fold(F.col("lx") * F.col("ly")).alias("sxy"))
+        ordered_sum(lx, "rk").alias("sx"),
+        ordered_sum(ly, "rk").alias("sy"),
+        ordered_sum(lx * lx, "rk").alias("sxx"),
+        ordered_sum(lx * ly, "rk").alias("sxy"))
     n = F.col("n").cast("double")
     # degenerate guard (ADVICE-r04 discipline): a single-term
     # vocabulary has zero ln(rank) variance -> NULL in both engines
@@ -910,8 +898,7 @@ scored_words AS (
 phrases AS (
     SELECT doc_id, pid,
            array_to_string(list(token ORDER BY pos), ' ') AS phrase,
-           list_reduce(list(wscore ORDER BY pos), (x, y) -> x + y)
-             AS pscore
+           {ordered_sum_sql("wscore", "pos")} AS pscore
     FROM scored_words GROUP BY doc_id, pid
 ),
 agg AS (
@@ -962,8 +949,7 @@ def rake_keyword_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
                   F.struct("pos", "token", "wscore"))).alias("ws")))
     phrase = F.array_join(
         F.transform("ws", lambda s: s["token"]), " ")
-    pscore = F.aggregate(F.transform("ws", lambda s: s["wscore"]),
-                         F.lit(0.0), lambda a, x: a + x)
+    pscore = ordered_fold("ws", "wscore")
     phrases = folded.select(phrase.alias("phrase"),
                             pscore.alias("pscore"))
     agg = (phrases.groupBy("phrase")

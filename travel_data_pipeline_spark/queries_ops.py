@@ -46,7 +46,9 @@ from travel_data_pipeline_spark.functions.hashing import (
     md5_long,
     md5_long_sql,
 )
-from travel_data_pipeline_spark.functions.parity import round_sql
+from travel_data_pipeline_spark.functions.parity import (
+    ordered_sum, ordered_sum_sql, round_sql,
+)
 from travel_data_pipeline_spark.registry import register
 from travel_data_pipeline_spark.sources.readers import load_table
 
@@ -384,12 +386,12 @@ terms AS (
 ),
 folded AS (
     SELECT event_type,
-           list(term ORDER BY bin) AS ts
+           {ordered_sum_sql("term", "bin")} AS s
     FROM terms GROUP BY event_type
 )
 SELECT f.event_type,
        CAST(t.rn AS BIGINT) AS n_ref, CAST(t.cn AS BIGINT) AS n_cur,
-       {round_sql('list_reduce(ts, (x, y) -> x + y)', 6)} + 0.0 AS psi
+       {round_sql('s', 6)} + 0.0 AS psi
 FROM folded f JOIN tot t USING (event_type)
 """)
 def drift_psi_event_values(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -423,13 +425,9 @@ def drift_psi_event_values(spark: SparkSession, sf_dir: str) -> DataFrame:
                      F.expr(_PSI_TERM).alias("term")))
     folded = (terms.groupBy("event_type")
               .agg(F.max("rn").alias("n_ref"), F.max("cn").alias("n_cur"),
-                   F.array_sort(F.collect_list(F.struct("bin", "term")))
-                    .alias("ts")))
-    return folded.select(
-        "event_type", "n_ref", "n_cur",
-        (F.round(F.aggregate(F.transform("ts", lambda t: t["term"]),
-                             F.lit(0.0), lambda a, x: a + x), 6) + 0.0)
-         .alias("psi"))
+                   ordered_sum("term", "bin").alias("s")))
+    return folded.select("event_type", "n_ref", "n_cur",
+                         (F.round("s", 6) + 0.0).alias("psi"))
 
 
 # ---------------------------------------------------------------------------

@@ -38,7 +38,9 @@ from travel_data_pipeline_spark.functions.hashing import (
     md5_long,
     md5_long_sql,
 )
-from travel_data_pipeline_spark.functions.parity import round_sql
+from travel_data_pipeline_spark.functions.parity import (
+    ordered_fold, ordered_sum, ordered_sum_sql, round_sql,
+)
 from travel_data_pipeline_spark.registry import register
 from travel_data_pipeline_spark.sources.readers import load_table
 
@@ -95,12 +97,12 @@ terms AS (
 ),
 folded AS (
     SELECT source, MIN(tot_s) AS n_docs, COUNT(*) AS n_bins,
-           list(term ORDER BY bin) AS ts
+           {ordered_sum_sql("term", "bin")} AS w1
     FROM terms GROUP BY source
 )
 SELECT source, CAST(n_docs AS BIGINT) AS n_docs,
        CAST(n_bins AS BIGINT) AS n_bins,
-       {round_sql('list_reduce(ts, (x, y) -> x + y)')} AS w1_bins
+       {round_sql('w1')} AS w1_bins
 FROM folded
 """)
 def length_drift_wasserstein(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -139,13 +141,9 @@ def length_drift_wasserstein(spark: SparkSession, sf_dir: str) -> DataFrame:
               .groupBy("source")
               .agg(F.min("tot_s").alias("n_docs"),
                    F.count("*").alias("n_bins"),
-                   F.array_sort(F.collect_list(
-                       F.struct("bin", "term"))).alias("ts")))
-    return folded.select(
-        "source", "n_docs", "n_bins",
-        F.round(F.aggregate(F.transform("ts", lambda t: t["term"]),
-                            F.lit(0.0), lambda a, x: a + x), 6)
-        .alias("w1_bins"))
+                   ordered_sum("term", "bin").alias("w1")))
+    return folded.select("source", "n_docs", "n_bins",
+                         F.round("w1", 6).alias("w1_bins"))
 
 
 # ---------------------------------------------------------------------------
@@ -441,7 +439,7 @@ UNION ALL
 SELECT 'ALL', CAST(SUM(n) AS BIGINT), CAST(SUM(n_t) AS BIGINT),
        {round_sql('CAST(SUM(n_t) AS DOUBLE) / CAST(SUM(n) AS DOUBLE)')},
        CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE),
-       {round_sql('list_reduce(list(term ORDER BY segment) FILTER (term IS NOT NULL), (x, y) -> x + y)')}
+       {round_sql('list_reduce(list_prepend(0.0, list(term ORDER BY segment) FILTER (term IS NOT NULL)), (x, y) -> x + y)')}
            + 0.0
 FROM terms
 """)
@@ -498,9 +496,7 @@ def ipw_ate_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
                         / F.col("n").cast("double"), 6).alias("e_hat"),
                 F.lit(None).cast("double").alias("mean_treat"),
                 F.lit(None).cast("double").alias("mean_ctrl"),
-                (F.round(F.aggregate(
-                    F.transform("ts", lambda t: t["term"]),
-                    F.lit(0.0), lambda a, x: a + x), 6) + F.lit(0.0))
+                (F.round(ordered_fold("ts", "term"), 6) + F.lit(0.0))
                 .alias("ate")))
     return per_rows.unionByName(all_row)
 
@@ -671,7 +667,7 @@ top AS (
 ),
 z AS (
     SELECT SUM(freq) AS f_tot,
-           list_reduce(list(w ORDER BY token), (x, y) -> x + y) AS z_w
+           {ordered_sum_sql("w", "token")} AS z_w
     FROM top
 )
 SELECT t.token, CAST(t.freq AS BIGINT) AS freq,
@@ -703,13 +699,8 @@ def negative_sampling_table(spark: SparkSession, sf_dir: str) -> DataFrame:
            .orderBy(F.col("freq").desc(), F.col("token").asc())
            .limit(_NS_K)
            .withColumn("w", F.sqrt(fd * F.sqrt(fd))))
-    z = top.agg(
-        F.sum("freq").alias("f_tot"),
-        F.array_sort(F.collect_list(F.struct("token", "w"))).alias("ws")
-    ).select(
-        "f_tot",
-        F.aggregate(F.transform("ws", lambda t: t["w"]),
-                    F.lit(0.0), lambda a, x: a + x).alias("z_w"))
+    z = top.agg(F.sum("freq").alias("f_tot"),
+                ordered_sum("w", "token").alias("z_w"))
     pf = F.col("freq").cast("double") / F.col("f_tot").cast("double")
     return (top.crossJoin(F.broadcast(z))
             .select("token", "freq",
@@ -733,6 +724,7 @@ def negative_sampling_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _HILL_K = 200
+_HILL_S = ordered_sum_sql("term", "rnk")
 
 
 @register("hill_tail_index", f"""
@@ -754,10 +746,8 @@ terms AS (
     FROM ranked r CROSS JOIN xk WHERE r.rnk < xk.k
 )
 SELECT CAST(xk.k AS BIGINT) AS k, xk.x_k,
-       {round_sql('list_reduce(list(term ORDER BY rnk), (x, y) -> x + y) / CAST(xk.k - 1 AS DOUBLE)')}
-           AS hill_gamma,
-       {round_sql('CAST(xk.k - 1 AS DOUBLE) / list_reduce(list(term ORDER BY rnk), (x, y) -> x + y)')}
-           AS hill_alpha
+       {round_sql(f'{_HILL_S} / CAST(xk.k - 1 AS DOUBLE)')} AS hill_gamma,
+       {round_sql(f'CAST(xk.k - 1 AS DOUBLE) / {_HILL_S}')} AS hill_alpha
 FROM terms CROSS JOIN xk
 GROUP BY xk.k, xk.x_k
 """)
@@ -783,9 +773,8 @@ def hill_tail_index(spark: SparkSession, sf_dir: str) -> DataFrame:
                      (F.log(F.col("o_totalprice")) - F.log(F.col("x_k")))
                      .alias("term")))
     folded = terms.groupBy(F.col("kk").alias("k"), "x_k").agg(
-        F.array_sort(F.collect_list(F.struct("rnk", "term"))).alias("ts"))
-    s = F.aggregate(F.transform("ts", lambda t: t["term"]),
-                    F.lit(0.0), lambda a, x: a + x)
+        ordered_sum("term", "rnk").alias("s"))
+    s = F.col("s")
     return folded.select(
         "k", "x_k",
         F.round(s / (F.col("k") - 1).cast("double"), 6)
@@ -1068,7 +1057,9 @@ def image_ahash_neardup(spark: SparkSession, sf_dir: str,
     ``materialize`` pins the fingerprint relation consumed by THREE
     join legs (cand via the banding, fa, fb): ``"checkpoint"``
     (default) is an eager localCheckpoint, ``"persist"`` the r14
-    experiment — see the site comment for the r15 A/B verdict."""
+    experiment — see the site comment for the r15 A/B verdict.
+    Unreplicated checkpoint blocks on a cluster: see
+    ``operators.dedup.simhash_near_pairs``."""
     if materialize not in ("checkpoint", "persist"):
         raise ValueError(
             f"materialize must be 'checkpoint' or 'persist', "
@@ -1304,12 +1295,13 @@ terms AS (
     FROM cums CROSS JOIN tot CROSS JOIN span
 ),
 folded AS (
-    SELECT lang, source, MIN(n) AS n, list(term ORDER BY bin) AS ts
+    SELECT lang, source, MIN(n) AS n,
+           {ordered_sum_sql("term", "bin")} AS s
     FROM terms GROUP BY lang, source
 )
 SELECT lang, source, CAST(n AS BIGINT) AS n,
-       {round_sql('list_reduce(ts, (x, y) -> x + y)')} AS emd,
-       CAST(CASE WHEN {round_sql('list_reduce(ts, (x, y) -> x + y)')}
+       {round_sql('s')} AS emd,
+       CAST(CASE WHEN {round_sql('s')}
                  <= {_TC_T!r} THEN 1 ELSE 0 END AS INT) AS within_t
 FROM folded
 """)
@@ -1349,10 +1341,8 @@ def t_closeness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                           term.alias("term"))
               .groupBy("lang", "source")
               .agg(F.min("n").alias("n"),
-                   F.array_sort(F.collect_list(
-                       F.struct("bin", "term"))).alias("ts")))
-    emd = F.round(F.aggregate(F.transform("ts", lambda t: t["term"]),
-                              F.lit(0.0), lambda a, x: a + x), 6)
+                   ordered_sum("term", "bin").alias("s")))
+    emd = F.round("s", 6)
     return folded.select(
         "lang", "source", "n", emd.alias("emd"),
         F.when(emd <= F.lit(_TC_T), 1).otherwise(0)
@@ -1416,7 +1406,7 @@ scored AS (
 ),
 docs_scored AS (
     SELECT doc_id, COUNT(*) AS n_terms,
-           list_reduce(list(s ORDER BY term), (x, y) -> x + y) AS s_tot
+           {ordered_sum_sql("s", "term")} AS s_tot
     FROM scored GROUP BY doc_id
 ),
 graded AS (
@@ -1486,13 +1476,9 @@ def bm25_ndcg_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
               .select("doc_id", "term", (idf * tfn).alias("s")))
     graded = (scored.groupBy("doc_id")
               .agg(F.count("*").alias("n_terms"),
-                   F.array_sort(F.collect_list(F.struct("term", "s")))
-                   .alias("ss"))
+                   ordered_sum("s", "term").alias("s_tot"))
               .select(
-                  "doc_id",
-                  F.aggregate(F.transform("ss", lambda t: t["s"]),
-                              F.lit(0.0), lambda a, x: a + x)
-                  .alias("s_tot"),
+                  "doc_id", "s_tot",
                   F.when(F.col("n_terms") >= 3, 7)
                   .when(F.col("n_terms") == 2, 3).otherwise(1)
                   .alias("gain"))
@@ -1525,13 +1511,8 @@ def bm25_ndcg_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid = (ranking.select(F.col("rnk").alias("k"))
             .crossJoin(F.broadcast(cs)).crossJoin(F.broadcast(ics)))
 
-    def fold_first_k(arr, k):
-        return F.aggregate(
-            F.transform(F.slice(arr, F.lit(1), k), lambda t: t["c"]),
-            F.lit(0.0), lambda a, x: a + x)
-
-    dcg = fold_first_k(F.col("cs"), F.col("k"))
-    idcg = fold_first_k(F.col("ics"), F.col("k"))
+    dcg = ordered_fold(F.slice("cs", F.lit(1), F.col("k")), "c")
+    idcg = ordered_fold(F.slice("ics", F.lit(1), F.col("k")), "c")
     return grid.select(
         F.col("k").cast("int").alias("k"),
         F.round(dcg, 6).alias("dcg"),
@@ -1629,8 +1610,8 @@ terms AS (
     FROM binned b CROSS JOIN exact e
 ),
 folded AS (
-    SELECT list_reduce(list(rel_t ORDER BY bin), (x, y) -> x + y) AS rel,
-           list_reduce(list(res_t ORDER BY bin), (x, y) -> x + y) AS res
+    SELECT {ordered_sum_sql("rel_t", "bin")} AS rel,
+           {ordered_sum_sql("res_t", "bin")} AS res
     FROM terms
 )
 SELECT CAST(e.n AS BIGINT) AS n,
@@ -1701,10 +1682,8 @@ def brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     folded = terms.agg(
         F.array_sort(F.collect_list(F.struct("bin", "rel_t", "res_t")))
         .alias("ts")).select(
-        F.aggregate(F.transform("ts", lambda t: t["rel_t"]),
-                    F.lit(0.0), lambda a, x: a + x).alias("rel"),
-        F.aggregate(F.transform("ts", lambda t: t["res_t"]),
-                    F.lit(0.0), lambda a, x: a + x).alias("res"))
+        ordered_fold("ts", "rel_t").alias("rel"),
+        ordered_fold("ts", "res_t").alias("res"))
     unc = obar * (F.lit(1.0) - obar)
     return (exact.crossJoin(F.broadcast(folded))
             .select(
@@ -1767,11 +1746,9 @@ FROM (
     SELECT CAST(MIN(n) AS BIGINT) AS n_units,
            CAST(MIN(n_b) AS BIGINT) AS min_bucket,
            CAST(MAX(n_b) AS BIGINT) AS max_bucket,
-           {round_sql('list_reduce(list(t ORDER BY bucket), (x, y) -> x + y)')}
-               AS chi2,
+           {round_sql(ordered_sum_sql('t', 'bucket'))} AS chi2,
            CAST({_SPLIT_BUCKETS - 1} AS INT) AS dof,
-           CAST(CASE WHEN list_reduce(list(t ORDER BY bucket),
-                                      (x, y) -> x + y)
+           CAST(CASE WHEN {ordered_sum_sql('t', 'bucket')}
                      <= {_CHI2_CRIT_15!r} THEN 1 ELSE 0 END AS INT)
                AS uniform_ok
     FROM terms
@@ -1810,8 +1787,7 @@ def hash_split_uniformity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
              * (F.col("n_b").cast("double") - exp) / exp)
         terms = buckets.crossJoin(F.broadcast(tot)).select(
             "bucket", "n_b", "n", t.alias("t"))
-        chi2 = F.aggregate(F.transform("ts", lambda s: s["t"]),
-                           F.lit(0.0), lambda a, x: a + x)
+        chi2 = ordered_fold("ts", "t")
         return (terms.agg(
             F.min("n").alias("n_units"),
             F.min("n_b").alias("min_bucket"),
@@ -1952,8 +1928,7 @@ res AS (
     CROSS JOIN base b
 ),
 tot_re AS (
-    SELECT list_reduce(list(re_raw ORDER BY channel),
-                       (x, y) -> x + y) AS s_re
+    SELECT {ordered_sum_sql("re_raw", "channel")} AS s_re
     FROM res
 )
 SELECT channel,
@@ -2045,11 +2020,7 @@ def markov_removal_attribution(spark: SparkSession,
                    F.col("p_conv").cast("double").alias("p_rm")))
     res = res.withColumn(
         "re_raw", F.lit(1.0) - F.col("p_rm") / F.col("p_all"))
-    tot_re = res.agg(
-        F.array_sort(F.collect_list(F.struct("channel", "re_raw")))
-        .alias("ts")).select(
-        F.aggregate(F.transform("ts", lambda t: t["re_raw"]),
-                    F.lit(0.0), lambda a, v: a + v).alias("s_re"))
+    tot_re = res.agg(ordered_sum("re_raw", "channel").alias("s_re"))
     return (res.crossJoin(F.broadcast(tot_re))
             .select("channel",
                     F.round("p_all", 6).alias("p_conv_all"),
@@ -2110,9 +2081,9 @@ ev AS (
 ),
 folded AS (
     SELECT event_type, COUNT(*) AS n_eval,
-           list_reduce(list(ape ORDER BY day), (x, y) -> x + y)
+           {ordered_sum_sql("ape", "day")}
                / CAST(COUNT(*) AS DOUBLE) AS mape,
-           list_reduce(list(ape_naive ORDER BY day), (x, y) -> x + y)
+           {ordered_sum_sql("ape_naive", "day")}
                / CAST(COUNT(*) AS DOUBLE) AS mape_naive
     FROM ev GROUP BY event_type
 )
@@ -2151,11 +2122,9 @@ def holt_backtest_mape(spark: SparkSession, sf_dir: str) -> DataFrame:
               .agg(F.count("*").alias("n_eval"),
                    F.array_sort(F.collect_list(
                        F.struct("day", "ape", "ape_naive"))).alias("ts")))
-    s = lambda fld: F.aggregate(  # noqa: E731
-        F.transform("ts", lambda t: t[fld]),
-        F.lit(0.0), lambda a, x: a + x)
-    mape = s("ape") / F.col("n_eval").cast("double")
-    mnaive = s("ape_naive") / F.col("n_eval").cast("double")
+    n_eval = F.col("n_eval").cast("double")
+    mape = ordered_fold("ts", "ape") / n_eval
+    mnaive = ordered_fold("ts", "ape_naive") / n_eval
     # degenerate-denominator branch (repo rule): a constant naive
     # series (every post-burn-in day equals the previous) would give
     # Infinity in Spark and crash the oracle's decimal parse — report
@@ -2310,7 +2279,7 @@ UNION ALL
 SELECT 'reliability', reliability FROM brier_q
 UNION ALL
 SELECT 'ece',
-       {round_sql("list_reduce(list(ece_term ORDER BY bin), (x, y) -> x + y)")}
+       {round_sql(ordered_sum_sql("ece_term", "bin"))}
 FROM bins_q
 UNION ALL
 SELECT 'ndcg_at_10', ndcg FROM ndcg_q WHERE k = 10
@@ -2341,13 +2310,9 @@ def eval_scorecard(spark: SparkSession, sf_dir: str) -> DataFrame:
     rel = bd.select(F.lit("reliability").alias("metric"),
                     F.col("reliability").alias("value"))
     ece = (cdf_calibration_bins(spark, sf_dir)
-           .agg(F.array_sort(F.collect_list(
-               F.struct("bin", "ece_term"))).alias("ts"))
+           .agg(ordered_sum("ece_term", "bin").alias("s"))
            .select(F.lit("ece").alias("metric"),
-                   F.round(F.aggregate(
-                       F.transform("ts", lambda t: t["ece_term"]),
-                       F.lit(0.0), lambda a, x: a + x), 6)
-                   .alias("value")))
+                   F.round("s", 6).alias("value")))
     ndcg = (bm25_ndcg_at_k(spark, sf_dir)
             .filter(F.col("k") == 10)
             .select(F.lit("ndcg_at_10").alias("metric"),

@@ -37,7 +37,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from travel_data_pipeline_spark.functions.hashing import md5_long_sql
-from travel_data_pipeline_spark.functions.parity import round_sql
+from travel_data_pipeline_spark.functions.parity import (
+    ordered_fold, ordered_sum, ordered_sum_sql, round_sql,
+)
 from travel_data_pipeline_spark.registry import register
 from travel_data_pipeline_spark.sources.readers import load_table
 
@@ -167,9 +169,7 @@ def _aipw_frame(spark: SparkSession, sf_dir: str,
             # F.aggregate would return the 0.0 init — branch to NULL
             # explicitly (repo degenerate-fold rule; review r08)
             *[F.when(F.size("ts") == 0, F.lit(None).cast("double"))
-              .otherwise(rnd0(F.aggregate(
-                  F.transform("ts", lambda t: t[f]),
-                  F.lit(0.0), lambda a, x: a + x)))
+              .otherwise(rnd0(ordered_fold("ts", f)))
               .alias(out)
               for f, out in (("aug_t", "aug_treat"),
                              ("aug_c", "aug_ctrl"),
@@ -589,9 +589,8 @@ ev AS (
 ),
 folded AS (
     SELECT event_type, COUNT(*) AS n_eval, SUM(cnt) AS actual,
-           list_reduce(list(err ORDER BY day), (x, y) -> x + y) AS serr,
-           list_reduce(list(err_naive ORDER BY day), (x, y) -> x + y)
-               AS serr_n
+           {ordered_sum_sql("err", "day")} AS serr,
+           {ordered_sum_sql("err_naive", "day")} AS serr_n
     FROM ev GROUP BY event_type
 )
 SELECT event_type, CAST(n_eval AS BIGINT) AS n_eval,
@@ -626,10 +625,8 @@ def holt_winters_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
                    F.sum("cnt").alias("actual"),
                    F.array_sort(F.collect_list(F.struct(
                        "day", "err", "err_naive"))).alias("ts")))
-    s = lambda fld: F.aggregate(  # noqa: E731
-        F.transform("ts", lambda t: t[fld]),
-        F.lit(0.0), lambda a, x: a + x)
-    serr, serr_n = s("err"), s("err_naive")
+    serr = ordered_fold("ts", "err")
+    serr_n = ordered_fold("ts", "err_naive")
     actual_zero = F.col("actual") == 0
     return folded.select(
         "event_type", F.col("n_eval").cast("long").alias("n_eval"),
@@ -1037,8 +1034,8 @@ xl AS (
     WHERE p.cos >= {_XL_TAU} AND da.lang <> db.lang
 )
 SELECT lang_a, lang_b, CAST(COUNT(*) AS BIGINT) AS n_pairs,
-       {round_sql('list_reduce(list(cos ORDER BY vec_a, vec_b),'
-                  ' (x, y) -> x + y) / COUNT(*)')} AS mean_cos,
+       {round_sql(ordered_sum_sql('cos', 'vec_a, vec_b') + ' / COUNT(*)')}
+           AS mean_cos,
        {round_sql('MAX(cos)')} AS max_cos
 FROM xl GROUP BY lang_a, lang_b
 """
@@ -1068,15 +1065,13 @@ def crosslingual_semantic_pairs(spark: SparkSession,
                   F.col("cosine_sim").alias("cos")))
     folded = (xl.groupBy("lang_a", "lang_b")
               .agg(F.count("*").alias("n_pairs"),
-                   F.array_sort(F.collect_list(
-                       F.struct("vec_a", "vec_b", "cos"))).alias("ts"),
+                   ordered_sum("cos", "vec_a", "vec_b").alias("s"),
                    F.max("cos").alias("max_cos")))
     return folded.select(
         "lang_a", "lang_b",
         F.col("n_pairs").cast("long").alias("n_pairs"),
-        F.round(F.aggregate(F.transform("ts", lambda t: t["cos"]),
-                            F.lit(0.0), lambda a, x: a + x)
-                / F.col("n_pairs").cast("double"), 6).alias("mean_cos"),
+        F.round(F.col("s") / F.col("n_pairs").cast("double"), 6)
+        .alias("mean_cos"),
         F.round("max_cos", 6).alias("max_cos"))
 
 
@@ -1368,14 +1363,10 @@ def embedding_outlier_mahalanobis(spark: SparkSession,
         F.posexplode("v").alias("dim_idx", "val"))
     folded = (vals.groupBy("label", "dim_idx")
               .agg(F.count("*").alias("n"),
-                   F.transform(
-                       F.array_sort(F.collect_list(
-                           F.struct("vec_id", "val"))),
-                       lambda s: s["val"]).alias("vs")))
-    fsum = lambda c: F.aggregate(c, F.lit(0.0),  # noqa: E731
-                                 lambda a, x: a + x)
-    mu = fsum(F.col("vs")) / F.col("n").cast("double")
-    ex2 = (fsum(F.transform("vs", lambda x: x * x))
+                   F.array_sort(F.collect_list(
+                       F.struct("vec_id", "val"))).alias("vs")))
+    mu = ordered_fold("vs", "val") / F.col("n").cast("double")
+    ex2 = (ordered_fold("vs", lambda s: s["val"] * s["val"])
            / F.col("n").cast("double"))
     stats = folded.select(
         "label", "dim_idx", mu.alias("mu"),
@@ -1671,8 +1662,6 @@ def james_stein_segment_lifts(spark: SparkSession,
         F.count("d").alias("m"),
         F.array_sort(F.collect_list(F.when(keep, F.struct(
             "segment", "d", "se2")))).alias("ts"))
-    fsum = lambda fn: F.aggregate(  # noqa: E731
-        F.transform("ts", fn), F.lit(0.0), lambda a, x: a + x)
     nulld2 = F.lit(None).cast("double")
     # m == 0 (every stratum degenerate): the folds are empty — DuckDB
     # yields NULL naturally (NULL/NULL, fold of NULL list); branch
@@ -1680,16 +1669,15 @@ def james_stein_segment_lifts(spark: SparkSession,
     g = folded.select(
         "m", "ts",
         F.when(F.col("m") == 0, nulld2)
-        .otherwise(fsum(lambda t: t["d"] / t["se2"])
-                   / fsum(lambda t: F.lit(1.0) / t["se2"]))
+        .otherwise(ordered_fold("ts", lambda t: t["d"] / t["se2"])
+                   / ordered_fold("ts", lambda t: F.lit(1.0) / t["se2"]))
         .alias("d_bar"))
     s2 = g.select(
         "m", "d_bar",
         F.when(F.col("m") == 0, nulld2)
-        .otherwise(F.aggregate(F.transform(
+        .otherwise(ordered_fold(
             "ts", lambda t: (t["d"] - F.col("d_bar"))
-            * (t["d"] - F.col("d_bar")) / t["se2"]),
-            F.lit(0.0), lambda a, x: a + x)).alias("s_stat"))
+            * (t["d"] - F.col("d_bar")) / t["se2"])).alias("s_stat"))
     cfac = s2.select(
         "m", "d_bar", "s_stat",
         F.when(F.col("m") == 0, nulld2)
@@ -1793,10 +1781,8 @@ def ate_placebo_refutation(spark: SparkSession, sf_dir: str) -> DataFrame:
                     # list(...) FILTER semantics (review r08)
                     F.when(F.size("ts") == 0,
                            F.lit(None).cast("double"))
-                    .otherwise(F.round(F.aggregate(
-                        F.transform("ts", lambda t: t["term"]),
-                        F.lit(0.0), lambda a, x: a + x), 6)
-                        + F.lit(0.0)).alias("ate")))
+                    .otherwise(F.round(ordered_fold("ts", "term"), 6)
+                               + F.lit(0.0)).alias("ate")))
     res = outs[0]
     for o in outs[1:]:
         res = res.unionByName(o)
@@ -1895,7 +1881,9 @@ def dedup_scorecard(spark: SparkSession, sf_dir: str,
     (and the standalone containment_pairs path already measured
     checkpoint ahead for exactly this consumer); ``"persist"`` keeps
     the r08-r14 variant re-testable. A/B r15 (alternating cold
-    processes, sf0.1): see OPTIMIZATION_r15.md."""
+    processes, sf0.1): see OPTIMIZATION_r15.md. Unreplicated
+    checkpoint blocks on a cluster: see
+    ``operators.dedup.simhash_near_pairs``."""
     if materialize not in ("checkpoint", "persist"):
         raise ValueError(
             f"materialize must be 'checkpoint' or 'persist', "
@@ -2116,9 +2104,7 @@ def ate_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.struct("segment", "term")))).alias("ts"))
                 .select("b", F.when(
                     F.size("ts") == 0, F.lit(None).cast("double"))
-                    .otherwise(F.aggregate(
-                        F.transform("ts", lambda t: t["term"]),
-                        F.lit(0.0), lambda a, x: a + x)).alias("ate"))
+                    .otherwise(ordered_fold("ts", "term")).alias("ate"))
                 .filter(F.col("ate").isNotNull()))
     wr = Window.orderBy(F.col("ate").asc(), F.col("b").asc())
     ranked = rep_ates.select(
@@ -2153,9 +2139,7 @@ def ate_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
           .select(F.col("n_units").cast("long").alias("n_units"),
                   F.when(F.size("ts") == 0,
                          F.lit(None).cast("double"))
-                  .otherwise(F.aggregate(
-                      F.transform("ts", lambda t: t["term"]),
-                      F.lit(0.0), lambda a, x: a + x))
+                  .otherwise(ordered_fold("ts", "term"))
                   .alias("point_ate")))
     # sm/smm scale-12 decimals cross 2^53 — string-bridge the casts
     # (parity.py magnitude hazard; review r08)

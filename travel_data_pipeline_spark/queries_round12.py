@@ -34,7 +34,9 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from travel_data_pipeline_spark.functions.parity import round_sql
+from travel_data_pipeline_spark.functions.parity import (
+    ordered_fold, ordered_sum, ordered_sum_sql, round_sql,
+)
 from travel_data_pipeline_spark.queries_cleaning import (
     _NORM as _CLEAN_NORM,
 )
@@ -327,8 +329,7 @@ cells AS (
 ),
 folded AS (
     SELECT COUNT(*) AS n_cells,
-           list_reduce(list(term ORDER BY from_type, to_type),
-                       (x, y) -> x + y) AS s
+           {ordered_sum_sql("term", "from_type, to_type")} AS s
     FROM cells
 ),
 ns AS (SELECT COUNT(*) AS n_states FROM sd)
@@ -363,10 +364,8 @@ def markov_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
                       * F.log(F.col("p"))).alias("term")))
     folded = cells.agg(
         F.count("*").alias("n_cells"),
-        F.array_sort(F.collect_list(
-            F.struct("from_type", "to_type", "term"))).alias("ts"))
-    s = F.aggregate(F.transform("ts", lambda t: t["term"]),
-                    F.lit(0.0), lambda a, x: a + x)
+        ordered_sum("term", "from_type", "to_type").alias("s"))
+    s = F.col("s")
     ns = sd.agg(F.count("*").alias("n_states"))
     nulld = F.lit(None).cast("double")
     return (folded.crossJoin(F.broadcast(ns))
@@ -430,12 +429,9 @@ ev AS (
 ),
 folded AS (
     SELECT event_type, COUNT(*) AS n_eval, SUM(cnt) AS actual,
-           list_reduce(list(abs(CAST(cnt AS DOUBLE) - f_n)
-                            ORDER BY day), (x, y) -> x + y) AS sn,
-           list_reduce(list(abs(CAST(cnt AS DOUBLE) - f_s)
-                            ORDER BY day), (x, y) -> x + y) AS ss,
-           list_reduce(list(abs(CAST(cnt AS DOUBLE) - f_h)
-                            ORDER BY day), (x, y) -> x + y) AS sh,
+           {ordered_sum_sql("abs(CAST(cnt AS DOUBLE) - f_n)", "day")} AS sn,
+           {ordered_sum_sql("abs(CAST(cnt AS DOUBLE) - f_s)", "day")} AS ss,
+           {ordered_sum_sql("abs(CAST(cnt AS DOUBLE) - f_h)", "day")} AS sh,
            list(ROW(cnt, f_n, f_s, f_h) ORDER BY day) AS rows_
     FROM ev GROUP BY event_type
 ),
@@ -500,10 +496,8 @@ def forecast_ensemble_wape(spark: SparkSession,
                    F.array_sort(F.collect_list(F.struct(
                        "day", "cnt", "f_n", "f_s", "f_h")))
                    .alias("rows")))
-    fsum = lambda fn: F.aggregate(  # noqa: E731
-        F.transform("rows", fn), F.lit(0.0), lambda a, x: a + x)
-    err = lambda fld: fsum(  # noqa: E731
-        lambda r: F.abs(r["cnt"].cast("double") - r[fld]))
+    err = lambda fld: ordered_fold(  # noqa: E731
+        "rows", lambda r: F.abs(r["cnt"].cast("double") - r[fld]))
     sn, ss, sh = err("f_n"), err("f_s"), err("f_h")
     wtd = folded.select(
         "event_type", "n_eval", "actual", "rows",
@@ -523,11 +517,9 @@ def forecast_ensemble_wape(spark: SparkSession,
         return F.when(F.col("zc") > 0, zero_branch).otherwise(inv_branch)
 
     w_n, w_s, w_h = weight("sn"), weight("ss"), weight("sh")
-    se = F.aggregate(
-        F.transform("rows", lambda r: F.abs(
-            r["cnt"].cast("double")
-            - (w_n * r["f_n"] + w_s * r["f_s"] + w_h * r["f_h"]))),
-        F.lit(0.0), lambda a, x: a + x)
+    se = ordered_fold("rows", lambda r: F.abs(
+        r["cnt"].cast("double")
+        - (w_n * r["f_n"] + w_s * r["f_s"] + w_h * r["f_h"])))
     zero = F.col("actual") == 0
     nulld = F.lit(None).cast("double")
     ad = F.col("actual").cast("double")
@@ -631,13 +623,10 @@ def seasonal_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
               .agg(F.count("*").cast("double").alias("n_eval"),
                    F.array_sort(F.collect_list(F.struct(
                        "day", "r", "sr", "tr"))).alias("ts")))
-    fsum = lambda fn: F.aggregate(  # noqa: E731
-        F.transform("ts", fn), F.lit(0.0), lambda a, x: a + x)
-
     def var(fld):
-        m = fsum(lambda t: t[fld]) / F.col("n_eval")
-        return (fsum(lambda t: t[fld] * t[fld]) / F.col("n_eval")
-                - m * m)
+        m = ordered_fold("ts", fld) / F.col("n_eval")
+        return (ordered_fold("ts", lambda t: t[fld] * t[fld])
+                / F.col("n_eval") - m * m)
 
     vr, vsr, vtr = var("r"), var("sr"), var("tr")
     nulld = F.lit(None).cast("double")

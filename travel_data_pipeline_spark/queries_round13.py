@@ -30,7 +30,9 @@ from travel_data_pipeline_spark.functions.hashing import (
     md5_long,
     md5_long_sql,
 )
-from travel_data_pipeline_spark.functions.parity import round_sql
+from travel_data_pipeline_spark.functions.parity import (
+    ordered_sum, ordered_sum_sql, round_sql,
+)
 from travel_data_pipeline_spark.registry import register
 from travel_data_pipeline_spark.sources.readers import load_table
 
@@ -411,10 +413,7 @@ cc AS (
 ),
 ent AS (
     SELECT doc_id, source, SUM(c) AS n,
-           list_reduce(
-               list_prepend(0.0, list(c * ln(CAST(c AS DOUBLE))
-                                      ORDER BY ch)),
-               (a, b) -> a + b) AS clogc
+           {ordered_sum_sql("c * ln(CAST(c AS DOUBLE))", "ch")} AS clogc
     FROM cc GROUP BY doc_id, source
 ),
 h AS (
@@ -446,11 +445,8 @@ def char_entropy_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
           .agg(F.count("*").alias("c")))
     ent = (cc.groupBy("doc_id", "source")
            .agg(F.sum("c").alias("n"),
-                F.aggregate(
-                    F.array_sort(F.collect_list(F.struct("ch", "c"))),
-                    F.lit(0.0),
-                    lambda a, x: a + x["c"]
-                    * F.log(x["c"].cast("double"))).alias("clogc")))
+                ordered_sum(F.col("c") * F.log(F.col("c").cast("double")),
+                            "ch").alias("clogc")))
     h = ent.select(
         "source",
         F.when(F.col("n") <= 1, F.lit(0.0))
@@ -525,8 +521,7 @@ scored AS (
 ),
 folded AS (
     SELECT doc_id, COUNT(*) AS n_bigrams,
-           list_reduce(list_prepend(0.0, list(nll ORDER BY pos)),
-                       (a, b) -> a + b) AS total
+           {ordered_sum_sql("nll", "pos")} AS total
     FROM scored GROUP BY doc_id
 )
 SELECT doc_id, CAST(n_bigrams AS BIGINT) AS n_bigrams,
@@ -573,10 +568,7 @@ def kn_bigram_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
               .select("doc_id", "pos", (-F.log(p)).alias("nll")))
     folded = (scored.groupBy("doc_id")
               .agg(F.count("*").alias("n_bigrams"),
-                   F.aggregate(
-                       F.array_sort(F.collect_list(F.struct("pos", "nll"))),
-                       F.lit(0.0),
-                       lambda a, x: a + x["nll"]).alias("total")))
+                   ordered_sum("nll", "pos").alias("total")))
     return folded.select(
         "doc_id", F.col("n_bigrams").cast("long").alias("n_bigrams"),
         F.round(F.exp(F.col("total") / F.col("n_bigrams")), 6)
@@ -1186,9 +1178,7 @@ def shapley_channel_attribution(spark: SparkSession,
     # pinned fold over the bounded 8-term list per channel so the
     # double sum order matches the oracle's literal left-to-right sum
     return (contrib.groupBy("channel")
-            .agg(F.aggregate(
-                F.array_sort(F.collect_list(F.struct("s_without", "t"))),
-                F.lit(0.0), lambda a, x: a + x["t"]).alias("phi"))
+            .agg(ordered_sum("t", "s_without").alias("phi"))
             .select("channel", F.round("phi", 6).alias("shapley")))
 
 

@@ -41,7 +41,9 @@ from travel_data_pipeline_spark.functions.hashing import (
     md5_long,
     md5_long_sql,
 )
-from travel_data_pipeline_spark.functions.parity import round_sql
+from travel_data_pipeline_spark.functions.parity import (
+    ordered_sum, ordered_sum_sql, round_sql,
+)
 from travel_data_pipeline_spark.registry import register
 from travel_data_pipeline_spark.sources.readers import load_table
 
@@ -98,12 +100,8 @@ steps AS MATERIALIZED (
 ),
 hfold AS (
     SELECT t, d, n_risk,
-           list_reduce(list_prepend(0.0,
-               list(CAST(d2 AS DOUBLE) / n2 ORDER BY t2)),
-               (a, b) -> a + b) AS h,
-           list_reduce(list_prepend(0.0,
-               list(CAST(d2 AS DOUBLE) / (n2 * n2) ORDER BY t2)),
-               (a, b) -> a + b) AS vh
+           {ordered_sum_sql("CAST(d2 AS DOUBLE) / n2", "t2")} AS h,
+           {ordered_sum_sql("CAST(d2 AS DOUBLE) / (n2 * n2)", "t2")} AS vh
     FROM steps s
     JOIN (SELECT t AS t2, d AS d2, CAST(n_risk AS DOUBLE) AS n2
           FROM steps) i ON i.t2 <= s.t
@@ -297,8 +295,7 @@ def _hits_oracle() -> str:
         iters.append(f"""
 ar{t} AS MATERIALIZED (
     SELECT e.p AS node,
-           list_reduce(list_prepend(0.0,
-               list(e.w * {prev_h}.v ORDER BY e.s)), (x, y) -> x + y) AS r
+           {ordered_sum_sql(f"e.w * {prev_h}.v", "e.s")} AS r
     FROM edges e JOIN {prev_h} ON {prev_h}.node = e.s
     GROUP BY e.p
 ),
@@ -306,8 +303,7 @@ am{t} AS (SELECT MAX(r) AS m FROM ar{t}),
 a{t} AS MATERIALIZED (SELECT node, r / m AS v FROM ar{t} CROSS JOIN am{t}),
 hr{t} AS MATERIALIZED (
     SELECT e.s AS node,
-           list_reduce(list_prepend(0.0,
-               list(e.w * a{t}.v ORDER BY e.p)), (x, y) -> x + y) AS r
+           {ordered_sum_sql(f"e.w * a{t}.v", "e.p")} AS r
     FROM edges e JOIN a{t} ON a{t}.node = e.p
     GROUP BY e.s
 ),
@@ -401,21 +397,15 @@ def hits_from_edges(spark: SparkSession, edges: DataFrame,
         # for; plan audit read 660 exchanges before this)
         ar = _pin(edges.join(hub, edges.s == hub.node)
                   .groupBy(edges.p.alias("node"))
-                  .agg(F.aggregate(
-                      F.array_sort(F.collect_list(
-                          F.struct(edges.s.alias("s"),
-                                   (edges.w * F.col("v")).alias("c")))),
-                      F.lit(0.0), lambda x, y: x + y["c"]).alias("r")))
+                  .agg(ordered_sum(edges.w * F.col("v"), edges.s.alias("s"))
+                       .alias("r")))
         am = ar.agg(F.max("r").alias("m"))
         auth = (ar.crossJoin(F.broadcast(am))
                 .select("node", (F.col("r") / F.col("m")).alias("v")))
         hr = _pin(edges.join(auth, edges.p == auth.node)
                   .groupBy(edges.s.alias("node"))
-                  .agg(F.aggregate(
-                      F.array_sort(F.collect_list(
-                          F.struct(edges.p.alias("p"),
-                                   (edges.w * F.col("v")).alias("c")))),
-                      F.lit(0.0), lambda x, y: x + y["c"]).alias("r")))
+                  .agg(ordered_sum(edges.w * F.col("v"), edges.p.alias("p"))
+                       .alias("r")))
         hm = hr.agg(F.max("r").alias("m"))
         hub = (hr.crossJoin(F.broadcast(hm))
                .select("node", (F.col("r") / F.col("m")).alias("v")))
@@ -685,9 +675,8 @@ ov AS (
     FROM grid g
 )
 SELECT CAST({_RBO_D} AS INT) AS depth,
-       {round_sql(f'''list_reduce(list_prepend(0.0,
-           list(w * (a / CAST(d AS DOUBLE)) ORDER BY d)),
-           (x, y) -> x + y)''')} AS rbo
+       {round_sql(ordered_sum_sql("w * (a / CAST(d AS DOUBLE))", "d"))}
+           AS rbo
 FROM ov
 """
 
@@ -723,11 +712,9 @@ def rank_biased_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "left")
           .groupBy("d", "w")
           .agg(F.count("l_partkey").alias("a")))
-    return (ov.agg(F.aggregate(
-        F.array_sort(F.collect_list(F.struct(
-            "d", (F.col("w") * (F.col("a") / F.col("d").cast("double")))
-            .alias("t")))),
-        F.lit(0.0), lambda x, y: x + y["t"]).alias("rbo"))
+    return (ov.agg(ordered_sum(F.col("w") * (F.col("a")
+                                             / F.col("d").cast("double")),
+                               "d").alias("rbo"))
         .select(F.lit(_RBO_D).cast("int").alias("depth"),
                 F.round("rbo", 6).alias("rbo")))
 
@@ -943,10 +930,8 @@ grid AS (
 mom AS (
     SELECT w,
            COUNT(*) AS n,
-           list_reduce(list_prepend(0.0, list(f ORDER BY source)),
-                       (a, b) -> a + b) AS s,
-           list_reduce(list_prepend(0.0, list(f * f ORDER BY source)),
-                       (a, b) -> a + b) AS ss
+           {ordered_sum_sql("f", "source")} AS s,
+           {ordered_sum_sql("f * f", "source")} AS ss
     FROM grid GROUP BY w
 ),
 z AS (
@@ -959,9 +944,8 @@ z AS (
     FROM grid g JOIN mom m ON m.w = g.w
 )
 SELECT a.source AS source_a, b.source AS source_b,
-       {round_sql(f'''list_reduce(list_prepend(0.0,
-           list(abs(a.z - b.z) ORDER BY a.w)), (x, y) -> x + y)
-           / {_BD_K}.0''')} AS delta
+       {round_sql(ordered_sum_sql("abs(a.z - b.z)", "a.w")
+                  + f" / {_BD_K}.0")} AS delta
 FROM z a JOIN z b ON a.w = b.w AND a.source < b.source
 GROUP BY a.source, b.source
 """)
@@ -985,13 +969,8 @@ def burrows_delta_stylometry(spark: SparkSession,
                      / F.col("toks").cast("double")).alias("f")))
     mom = (grid.groupBy("w")
            .agg(F.count("*").alias("n"),
-                F.aggregate(F.array_sort(F.collect_list(
-                    F.struct("source", F.col("f").alias("x")))),
-                    F.lit(0.0), lambda a, x: a + x["x"]).alias("s"),
-                F.aggregate(F.array_sort(F.collect_list(
-                    F.struct("source",
-                             (F.col("f") * F.col("f")).alias("x")))),
-                    F.lit(0.0), lambda a, x: a + x["x"]).alias("ss")))
+                ordered_sum("f", "source").alias("s"),
+                ordered_sum(F.col("f") * F.col("f"), "source").alias("ss")))
     var = ((F.col("ss") - F.col("s") * F.col("s") / F.col("n"))
            / (F.col("n") - F.lit(1.0)))
     z = (grid.join(F.broadcast(mom), "w")
@@ -1008,9 +987,7 @@ def burrows_delta_stylometry(spark: SparkSession,
              .select("source_a", "source_b", "w",
                      F.abs(F.col("za") - F.col("zb")).alias("dz")))
     return (pairs.groupBy("source_a", "source_b")
-            .agg((F.aggregate(F.array_sort(F.collect_list(
-                F.struct("w", F.col("dz").alias("x")))),
-                F.lit(0.0), lambda acc, x: acc + x["x"])
+            .agg((ordered_sum("dz", "w")
                 / F.lit(float(_BD_K))).alias("d"))
             .select("source_a", "source_b",
                     F.round("d", 6).alias("delta")))
@@ -1048,16 +1025,11 @@ ladder AS MATERIALIZED (
 ),
 mom AS (
     SELECT COUNT(*) AS n,
-           list_reduce(list_prepend(0.0, list(lx ORDER BY rung)),
-                       (a, b) -> a + b) AS sx,
-           list_reduce(list_prepend(0.0, list(ly ORDER BY rung)),
-                       (a, b) -> a + b) AS sy,
-           list_reduce(list_prepend(0.0, list(lx * lx ORDER BY rung)),
-                       (a, b) -> a + b) AS sxx,
-           list_reduce(list_prepend(0.0, list(ly * ly ORDER BY rung)),
-                       (a, b) -> a + b) AS syy,
-           list_reduce(list_prepend(0.0, list(lx * ly ORDER BY rung)),
-                       (a, b) -> a + b) AS sxy
+           {ordered_sum_sql("lx", "rung")} AS sx,
+           {ordered_sum_sql("ly", "rung")} AS sy,
+           {ordered_sum_sql("lx * lx", "rung")} AS sxx,
+           {ordered_sum_sql("ly * ly", "rung")} AS syy,
+           {ordered_sum_sql("lx * ly", "rung")} AS sxy
     FROM ladder
 )
 SELECT CAST(n AS BIGINT) AS n_rungs,
@@ -1088,17 +1060,13 @@ def scaling_law_loglog_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
                    F.log(F.col("n_tokens").cast("double")).alias("lx"),
                    F.log(F.col("vocab").cast("double")).alias("ly")))
 
-    def fold(expr):
-        return F.aggregate(
-            F.array_sort(F.collect_list(F.struct("rung", expr.alias("x")))),
-            F.lit(0.0), lambda a, x: a + x["x"])
-
+    lx, ly = F.col("lx"), F.col("ly")
     mom = lad.agg(F.count("*").alias("n"),
-                  fold(F.col("lx")).alias("sx"),
-                  fold(F.col("ly")).alias("sy"),
-                  fold(F.col("lx") * F.col("lx")).alias("sxx"),
-                  fold(F.col("ly") * F.col("ly")).alias("syy"),
-                  fold(F.col("lx") * F.col("ly")).alias("sxy"))
+                  ordered_sum(lx, "rung").alias("sx"),
+                  ordered_sum(ly, "rung").alias("sy"),
+                  ordered_sum(lx * lx, "rung").alias("sxx"),
+                  ordered_sum(ly * ly, "rung").alias("syy"),
+                  ordered_sum(lx * ly, "rung").alias("sxy"))
     n = F.col("n").cast("double")
     sx, sy = F.col("sx"), F.col("sy")
     sxx, syy, sxy = F.col("sxx"), F.col("syy"), F.col("sxy")
@@ -1287,23 +1255,21 @@ def _gm_oracle() -> str:
         steps.append(f"""
 d{t} AS MATERIALIZED (
     SELECT v.label, v.vec_id,
-           GREATEST(sqrt(list_reduce(list_prepend(0.0,
-               list((v.v - m.m) * (v.v - m.m) ORDER BY v.dim_idx)),
-               (a, b) -> a + b)), {_GM_EPS!r}) AS d
+           GREATEST(sqrt({ordered_sum_sql("(v.v - m.m) * (v.v - m.m)",
+                                          "v.dim_idx")}),
+                    {_GM_EPS!r}) AS d
     FROM vals v JOIN {prev} m
       ON m.label = v.label AND m.dim_idx = v.dim_idx
     GROUP BY v.label, v.vec_id
 ),
 w{t} AS MATERIALIZED (
     SELECT label,
-           list_reduce(list_prepend(0.0, list(1.0 / d ORDER BY vec_id)),
-                       (a, b) -> a + b) AS wsum
+           {ordered_sum_sql("1.0 / d", "vec_id")} AS wsum
     FROM d{t} GROUP BY label
 ),
 m{t} AS MATERIALIZED (
     SELECT v.label, v.dim_idx,
-           round(CAST(format('{{}}', list_reduce(list_prepend(0.0,
-               list(v.v / d.d ORDER BY v.vec_id)), (a, b) -> a + b)
+           round(CAST(format('{{}}', {ordered_sum_sql("v.v / d.d", "v.vec_id")}
                / w.wsum) AS DECIMAL(38,18)), 6) + 0.0 AS m
     FROM vals v
     JOIN d{t} d ON d.label = v.label AND d.vec_id = v.vec_id
@@ -1320,8 +1286,7 @@ WITH vals AS MATERIALIZED (
 ),
 m0 AS MATERIALIZED (
     SELECT label, dim_idx,
-           round(CAST(format('{{}}', list_reduce(list_prepend(0.0,
-               list(v ORDER BY vec_id)), (a, b) -> a + b)
+           round(CAST(format('{{}}', {ordered_sum_sql("v", "vec_id")}
                / CAST(COUNT(*) AS DOUBLE)) AS DECIMAL(38,18)), 6) + 0.0
              AS m
     FROM vals GROUP BY label, dim_idx
@@ -1350,13 +1315,8 @@ def geometric_median_embeddings(spark: SparkSession,
         .repartition(spark.sparkContext.defaultParallelism, "label")
         .localCheckpoint(eager=True))
 
-    def pinned(key_col, expr):
-        return F.aggregate(
-            F.array_sort(F.collect_list(F.struct(key_col, expr.alias("x")))),
-            F.lit(0.0), lambda a, x: a + x["x"])
-
     m = (vals.groupBy("label", "dim_idx")
-         .agg((F.round(pinned(F.col("vec_id"), F.col("v"))
+         .agg((F.round(ordered_sum("v", "vec_id")
                        / F.count("*").cast("double"), 6) + 0.0)
               .alias("m"))
          .localCheckpoint(eager=True))  # m feeds dist AND the output
@@ -1365,18 +1325,18 @@ def geometric_median_embeddings(spark: SparkSession,
         dist = (vals.join(F.broadcast(m), ["label", "dim_idx"])
                 .groupBy("label", "vec_id")
                 .agg(F.greatest(
-                    F.sqrt(pinned(F.col("dim_idx"),
-                                  (F.col("v") - F.col("m"))
-                                  * (F.col("v") - F.col("m")))),
+                    F.sqrt(ordered_sum((F.col("v") - F.col("m"))
+                                       * (F.col("v") - F.col("m")),
+                                       "dim_idx")),
                     F.lit(_GM_EPS)).alias("d")))
         wsum = (dist.groupBy("label")
-                .agg(pinned(F.col("vec_id"),
-                            F.lit(1.0) / F.col("d")).alias("wsum")))
+                .agg(ordered_sum(F.lit(1.0) / F.col("d"), "vec_id")
+                     .alias("wsum")))
         m = (vals.join(dist, ["label", "vec_id"])
              .join(F.broadcast(wsum), "label")
              .groupBy("label", "dim_idx", "wsum")
-             .agg(pinned(F.col("vec_id"),
-                         F.col("v") / F.col("d")).alias("num"))
+             .agg(ordered_sum(F.col("v") / F.col("d"), "vec_id")
+                  .alias("num"))
              .select("label", "dim_idx",
                      (F.round(F.col("num") / F.col("wsum"), 6) + 0.0)
                      .alias("m"))

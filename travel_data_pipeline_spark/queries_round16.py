@@ -22,7 +22,9 @@ from travel_data_pipeline_spark.functions.hashing import (
     md5_long,
     md5_long_sql,
 )
-from travel_data_pipeline_spark.functions.parity import round_sql
+from travel_data_pipeline_spark.functions.parity import (
+    ordered_fold, ordered_sum, ordered_sum_sql, round_sql,
+)
 from travel_data_pipeline_spark.registry import register
 from travel_data_pipeline_spark.sources.readers import load_table
 
@@ -415,10 +417,8 @@ wide AS MATERIALIZED (
 ),
 folded AS (
     SELECT CAST(SUM(d1) AS BIGINT) AS o1,
-           list_reduce(list_prepend(0.0, list({_LR_E1} ORDER BY t)),
-                       (a, b) -> a + b) AS e1,
-           list_reduce(list_prepend(0.0, list({_LR_V} ORDER BY t)),
-                       (a, b) -> a + b) AS v
+           {ordered_sum_sql(_LR_E1, "t")} AS e1,
+           {ordered_sum_sql(_LR_V, "t")} AS v
     FROM wide
 )
 SELECT o1, {round_sql('e1')} AS e1, {round_sql('v')} AS var_lr,
@@ -485,10 +485,8 @@ def logrank_arms(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("d1").cast("long").alias("o1"),
         F.array_sort(F.collect_list(
             F.struct("t", "d1", "d2", "n1", "n2"))).alias("ss"))
-    e1_sum = F.aggregate(F.col("ss"), F.lit(0.0),
-                         lambda a, x: a + terms(x)[0])
-    v_sum = F.aggregate(F.col("ss"), F.lit(0.0),
-                        lambda a, x: a + terms(x)[1])
+    e1_sum = ordered_fold("ss", lambda x: terms(x)[0])
+    v_sum = ordered_fold("ss", lambda x: terms(x)[1])
     folded = folded.select("o1", e1_sum.alias("e1"), v_sum.alias("v"))
     chi2 = (F.when(F.col("v") <= 0.0, F.lit(None).cast("double"))
             .otherwise(F.round((F.col("o1") - F.col("e1"))
@@ -537,9 +535,7 @@ folded AS (
            -- read 0, not the empty-aggregate NULL (review r11)
            (SELECT CAST(COALESCE(SUM(pos), 0) AS BIGINT) FROM items)
              AS n_pos,
-           list_reduce(list_prepend(0.0,
-               list(CAST(cum_pos AS DOUBLE) / rnk ORDER BY rnk)
-               ), (a, b) -> a + b) AS ap_sum
+           {ordered_sum_sql("CAST(cum_pos AS DOUBLE) / rnk", "rnk")} AS ap_sum
     FROM ranked WHERE pos = 1
 )
 SELECT n_items, n_pos,
@@ -574,13 +570,9 @@ def average_precision_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_df = items.agg(F.count("*").cast("long").alias("n_items"),
                      F.sum("pos").cast("long").alias("n_pos"))
     folded = (ranked.filter(F.col("pos") == 1)
-              .agg(F.aggregate(
-                  F.array_sort(F.collect_list(F.struct(
-                      F.col("rnk"),
-                      (F.col("cum_pos").cast("double")
-                       / F.col("rnk").cast("double")).alias("term")))),
-                  F.lit(0.0), lambda a, x: a + x["term"])
-                  .alias("ap_sum")))
+              .agg(ordered_sum(F.col("cum_pos").cast("double")
+                               / F.col("rnk").cast("double"), "rnk")
+                   .alias("ap_sum")))
     ap = (F.when(F.col("n_pos") == 0, F.lit(None).cast("double"))
           .otherwise(F.round(F.col("ap_sum") / F.col("n_pos"), 6)))
     return (folded.crossJoin(F.broadcast(n_df))
@@ -1539,9 +1531,7 @@ top AS (
 ),
 aa AS (
     SELECT n.a, n.b,
-           list_reduce(list_prepend(0.0,
-               list(1.0 / ln(CAST(dz.d AS DOUBLE)) ORDER BY n.z)),
-               (x, y) -> x + y) AS adamic_adar
+           {ordered_sum_sql("1.0 / ln(CAST(dz.d AS DOUBLE))", "n.z")} AS adamic_adar
     FROM nonedge n
     JOIN top tp ON tp.a = n.a AND tp.b = n.b
     JOIN deg dz ON dz.node = n.z
@@ -1721,11 +1711,8 @@ def adamic_adar_from_edges(spark: SparkSession,
           .join(deg.select(F.col("node").alias("z"),
                            F.col("d").alias("dz")), "z")
           .groupBy("a", "b")
-          .agg(F.aggregate(
-              F.array_sort(F.collect_list(F.struct("z", "dz"))),
-              F.lit(0.0),
-              lambda acc, x: acc + F.lit(1.0)
-              / F.log(x["dz"].cast("double"))).alias("adamic_adar")))
+          .agg(ordered_sum(F.lit(1.0) / F.log(F.col("dz").cast("double")),
+                           "z").alias("adamic_adar")))
     da = deg.select(F.col("node").alias("a"), F.col("d").alias("deg_a"))
     db = deg.select(F.col("node").alias("b"), F.col("d").alias("deg_b"))
     out = (top.join(F.broadcast(aa), ["a", "b"])
@@ -1780,15 +1767,13 @@ tot AS (
 ),
 folds AS (
     SELECT
-        list_reduce(list_prepend(0.0,
-            list(sgd * sgd / n_g ORDER BY nk)), (x, y) -> x + y)
+        {ordered_sum_sql("sgd * sgd / n_g", "nk")}
           AS sum_b,
-        list_reduce(list_prepend(0.0,
-            list((CAST(n_g AS DOUBLE) / tot.n)
-                 * ((sgd / n_g) / (tot.sd / tot.n))
-                 * ((sgd / n_g) / (tot.sd / tot.n))
-                 * ((n_g * qgd / (sgd * sgd) - 1.0) / 2.0)
-                 ORDER BY nk)), (x, y) -> x + y) AS sum_w
+        {ordered_sum_sql("(CAST(n_g AS DOUBLE) / tot.n)"
+                         " * ((sgd / n_g) / (tot.sd / tot.n))"
+                         " * ((sgd / n_g) / (tot.sd / tot.n))"
+                         " * ((n_g * qgd / (sgd * sgd) - 1.0) / 2.0)", "nk")}
+          AS sum_w
     FROM pern_d CROSS JOIN tot
     GROUP BY tot.n, tot.sd
 )
@@ -1834,14 +1819,8 @@ def ge2_inequality_decomposition(spark: SparkSession,
              / (F.col("sgd") * F.col("sgd")) - 1.0) / 2.0
     term_w = (ngd / F.col("n")) * (mu_g / mu) * (mu_g / mu) * ge2_g
     folds = (joined.groupBy("n", "sd")
-             .agg(F.aggregate(
-                 F.array_sort(F.collect_list(
-                     F.struct("nk", term_b.alias("tb")))),
-                 F.lit(0.0), lambda a, x: a + x["tb"]).alias("sum_b"),
-                 F.aggregate(
-                 F.array_sort(F.collect_list(
-                     F.struct("nk", term_w.alias("tw")))),
-                 F.lit(0.0), lambda a, x: a + x["tw"]).alias("sum_w")))
+             .agg(ordered_sum(term_b, "nk").alias("sum_b"),
+                  ordered_sum(term_w, "nk").alias("sum_w")))
     out = tot.crossJoin(F.broadcast(folds.select("sum_b", "sum_w")))
     ge2_total = (F.col("n") * F.col("qd")
                  / (F.col("sd") * F.col("sd")) - 1.0) / 2.0
@@ -2064,8 +2043,7 @@ grid AS (
 ),
 folded AS (
     SELECT source_a, source_b,
-           list_reduce(list_prepend(0.0, list({term} ORDER BY bucket)),
-                       (x, y) -> x + y) AS s
+           {ordered_sum_sql(term, "bucket")} AS s
     FROM grid GROUP BY source_a, source_b
 )
 SELECT source_a, source_b,
@@ -2116,21 +2094,13 @@ def jsd_source_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("source_a", "source_b", "t1", "t2", "bucket",
                     F.coalesce("c1", F.lit(0)).alias("c1"),
                     F.coalesce("c2", F.lit(0)).alias("c2")))
-    def term(x):
-        pp = x["c1"].cast("double") / x["t1"]
-        qq = x["c2"].cast("double") / x["t2"]
-        mm = (pp + qq) / 2.0
-        return (F.when(x["c1"] == 0, 0.0)
-                .otherwise(pp * F.log(pp / mm))
-                + F.when(x["c2"] == 0, 0.0)
-                .otherwise(qq * F.log(qq / mm)))
-
+    pp = F.col("c1").cast("double") / F.col("t1")
+    qq = F.col("c2").cast("double") / F.col("t2")
+    mm = (pp + qq) / 2.0
+    term = (F.when(F.col("c1") == 0, 0.0).otherwise(pp * F.log(pp / mm))
+            + F.when(F.col("c2") == 0, 0.0).otherwise(qq * F.log(qq / mm)))
     folded = (grid.groupBy("source_a", "source_b")
-              .agg(F.aggregate(
-                  F.array_sort(F.collect_list(F.struct(
-                      "bucket", "c1", "c2", "t1", "t2"))),
-                  F.lit(0.0), lambda acc, x: acc + term(x))
-                  .alias("s")))
+              .agg(ordered_sum(term, "bucket").alias("s")))
     ln2 = float(repr(math.log(2.0)))
     return folded.select(
         "source_a", "source_b",
@@ -3359,9 +3329,8 @@ SELECT brand, n_parts, first_promo_rank, reciprocal_rank FROM rows_out
 UNION ALL
 SELECT 'ALL', (SELECT CAST(count(*) AS BIGINT) FROM cnts),
        CAST(0 AS BIGINT),
-       {round_sql('''(SELECT list_reduce(list_prepend(0.0,
-            list(1.0 / rnk ORDER BY brand)), (a, b) -> a + b)
-            / count(*) FROM ranked)''')}
+       {round_sql(f"(SELECT {ordered_sum_sql('1.0 / rnk', 'brand')}"
+                  " / count(*) FROM ranked)")}
 """)
 def mrr_brand_promo(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reciprocal rank of the first PROMO part in each brand's
@@ -3395,9 +3364,7 @@ def mrr_brand_promo(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.lit(1.0) / F.col("rnk"), 6).alias("reciprocal_rank"))
     n_all = cnts.agg(F.count("*").cast("long").alias("n"))
     mrr = (ranked.agg(
-        F.aggregate(F.array_sort(F.collect_list(F.struct(
-            "brand", (F.lit(1.0) / F.col("rnk")).alias("rr")))),
-            F.lit(0.0), lambda a, x: a + x["rr"]).alias("s"),
+        ordered_sum(F.lit(1.0) / F.col("rnk"), "brand").alias("s"),
         F.count("*").alias("nb"))
         .crossJoin(F.broadcast(n_all))
         .select(F.lit("ALL").alias("brand"),

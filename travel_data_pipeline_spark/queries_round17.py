@@ -40,7 +40,9 @@ from travel_data_pipeline_spark.functions.hashing import (
     md5_long,
     md5_long_sql,
 )
-from travel_data_pipeline_spark.functions.parity import round_sql
+from travel_data_pipeline_spark.functions.parity import (
+    ordered_sum, ordered_sum_sql, round_sql,
+)
 from travel_data_pipeline_spark.registry import register
 from travel_data_pipeline_spark.sources.readers import load_table
 
@@ -379,8 +381,7 @@ per_block AS (
 kept AS (SELECT * FROM per_block WHERE s > 0.0),
 per_size AS (
     SELECT b, CAST(count(*) AS BIGINT) AS n_blocks,
-           list_reduce(list_prepend(0.0, list(r / s ORDER BY blk)),
-                       (x, y) -> x + y) AS srs
+           {ordered_sum_sql("r / s", "blk")} AS srs
     FROM kept GROUP BY b
 ),
 ps2 AS (
@@ -450,12 +451,8 @@ def hurst_rs_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept = per_block.filter(F.col("s") > 0.0)
     per_size = (kept.groupBy("b")
                 .agg(F.count("*").cast("long").alias("n_blocks"),
-                     F.aggregate(
-                         F.array_sort(F.collect_list(
-                             F.struct("blk", (F.col("r") / F.col("s"))
-                                      .alias("rs")))),
-                         F.lit(0.0),
-                         lambda acc, x: acc + x["rs"]).alias("srs")))
+                     ordered_sum(F.col("r") / F.col("s"), "blk")
+                     .alias("srs")))
     per_size = per_size.withColumn(
         "mean_rs", F.col("srs") / F.col("n_blocks").cast("double"))
     dxs, sxx_l = _hurst_lnb()
@@ -1570,11 +1567,10 @@ terms AS (
 ),
 kept AS (SELECT * FROM terms WHERE den4 > 0),
 inner_s AS (
-    SELECT {", ".join(f'''
-        list_reduce(list_prepend(0.0, list(
-            CAST(l AS DOUBLE) * (CAST(CAST(num{a} AS VARCHAR) AS DOUBLE)
-                                 / CAST(CAST(den4 AS VARCHAR) AS DOUBLE))
-            ORDER BY v)), (x, y) -> x + y) AS s{a}''' for a in range(_R17_ARMS))}
+    SELECT {", ".join(ordered_sum_sql(
+        f"CAST(l AS DOUBLE) * (CAST(CAST(num{a} AS VARCHAR) AS DOUBLE)"
+        " / CAST(CAST(den4 AS VARCHAR) AS DOUBLE))", "v") + f" AS s{a}"
+        for a in range(_R17_ARMS))}
     FROM kept
 ),
 a2 AS (
@@ -1628,13 +1624,8 @@ def ad_ksample_arms(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept = terms.filter(F.col("den4") > 0)
     sd = lambda c: c.cast("string").cast("double")  # noqa: E731
     inner = kept.agg(*[
-        F.aggregate(
-            F.array_sort(F.collect_list(F.struct(
-                F.col("v"),
-                (F.col("l").cast("double")
-                 * (sd(F.col(f"num{a}")) / sd(F.col("den4"))))
-                .alias("term")))),
-            F.lit(0.0), lambda acc, x: acc + x["term"])
+        ordered_sum(F.col("l").cast("double")
+                    * (sd(F.col(f"num{a}")) / sd(F.col("den4"))), "v")
         .alias(f"s{a}") for a in range(_R17_ARMS)])
     nd = F.col("n").cast("double")
     any0 = F.lit(False)
@@ -2173,9 +2164,7 @@ docb AS (
 scored AS (
     SELECT d.doc_id, d.source, d.lang,
            CAST(sum(d.c) AS BIGINT) AS n_tokens,
-           list_reduce(list_prepend(0.0,
-               list(CAST(d.c AS DOUBLE) * l.lw ORDER BY d.b)),
-               (x, y) -> x + y) AS logw
+           {ordered_sum_sql("CAST(d.c AS DOUBLE) * l.lw", "d.b")} AS logw
     FROM docb d JOIN lp l ON l.b = d.b
     GROUP BY d.doc_id, d.source, d.lang
 )
@@ -2237,12 +2226,8 @@ def dsir_from_tokens(spark: SparkSession, toks: DataFrame,
     scored = (docb.join(F.broadcast(lp), "b")
               .groupBy("doc_id", "source", "lang")
               .agg(F.sum("c").cast("long").alias("n_tokens"),
-                   F.aggregate(
-                       F.array_sort(F.collect_list(F.struct(
-                           "b", (F.col("c").cast("double")
-                                 * F.col("lw")).alias("term")))),
-                       F.lit(0.0),
-                       lambda acc, x: acc + x["term"]).alias("logw")))
+                   ordered_sum(F.col("c").cast("double") * F.col("lw"),
+                               "b").alias("logw")))
     wt = Window.orderBy(F.col("logw").desc(), F.col("doc_id").asc())
     return (scored.orderBy(F.col("logw").desc(), F.col("doc_id").asc())
             .limit(topk)
@@ -2280,10 +2265,9 @@ bydeg AS (
 ),
 tail AS (
     SELECT CAST(sum(cnt) AS BIGINT) AS n_tail,
-           list_reduce(list_prepend(0.0,
-               list(CAST(cnt AS DOUBLE)
-                    * ln(CAST(d AS DOUBLE) / {_PL_DMIN - 0.5!r})
-                    ORDER BY d)), (x, y) -> x + y) AS slog
+           {ordered_sum_sql("CAST(cnt AS DOUBLE)"
+                            f" * ln(CAST(d AS DOUBLE) / {_PL_DMIN - 0.5!r})",
+                            "d")} AS slog
     FROM bydeg WHERE d >= {_PL_DMIN}
 ),
 tot AS (SELECT CAST(count(*) AS BIGINT) AS n_nodes FROM deg)
@@ -2317,14 +2301,10 @@ def powerlaw_degree_alpha(spark: SparkSession,
                                  .alias("cnt"))
     tail = (bydeg.filter(F.col("d") >= _PL_DMIN)
             .agg(F.sum("cnt").cast("long").alias("n_tail"),
-                 F.aggregate(
-                     F.array_sort(F.collect_list(F.struct(
-                         "d", (F.col("cnt").cast("double")
-                               * F.log(F.col("d").cast("double")
-                                       / (_PL_DMIN - 0.5)))
-                         .alias("term")))),
-                     F.lit(0.0),
-                     lambda acc, x: acc + x["term"]).alias("slog")))
+                 ordered_sum(F.col("cnt").cast("double")
+                             * F.log(F.col("d").cast("double")
+                                     / (_PL_DMIN - 0.5)),
+                             "d").alias("slog")))
     tot = deg.agg(F.count("*").cast("long").alias("n_nodes"))
     alpha = (F.when(F.col("slog").isNull() | (F.col("slog") <= 0.0),
                     F.lit(None).cast("double"))
@@ -2375,11 +2355,9 @@ cum AS (
 folded AS (
     SELECT brand, CAST(count(*) AS BIGINT) AS n_ranked,
            CAST(sum(pos) AS BIGINT) AS n_promo,
-           list_reduce(list_prepend(0.0,
-               list(CASE WHEN pos = 1
-                         THEN (1.0 / rn) * pow(0.5, CAST(cpos AS DOUBLE))
-                         ELSE 0.0 END ORDER BY rn)),
-               (x, y) -> x + y) AS err
+           {ordered_sum_sql("CASE WHEN pos = 1 THEN (1.0 / rn)"
+                            " * pow(0.5, CAST(cpos AS DOUBLE)) ELSE 0.0 END",
+                            "rn")} AS err
     FROM cum GROUP BY brand
 )
 SELECT brand, n_ranked, n_promo, {round_sql('err')} + 0.0 AS err
@@ -2412,11 +2390,7 @@ def expected_reciprocal_rank(spark: SparkSession,
     folded = (cum.groupBy("brand")
               .agg(F.count("*").cast("long").alias("n_ranked"),
                    F.sum("pos").cast("long").alias("n_promo"),
-                   F.aggregate(
-                       F.array_sort(F.collect_list(F.struct(
-                           "rn", term.alias("term")))),
-                       F.lit(0.0),
-                       lambda acc, x: acc + x["term"]).alias("err")))
+                   ordered_sum(term, "rn").alias("err")))
     return folded.select("brand", "n_ranked", "n_promo",
                          (F.round("err", 6) + 0.0).alias("err"))
 
@@ -2588,9 +2562,7 @@ ws{t} AS MATERIALIZED (
            0.15 + 0.85 * COALESCE(c.contrib, 0.0) AS v
     FROM vocab n LEFT JOIN (
         SELECT e.dst AS node,
-               list_reduce(list_prepend(0.0,
-                   list((e.w / sw.s) * p.v ORDER BY e.src)),
-                   (x, y) -> x + y) AS contrib
+               {ordered_sum_sql("(e.w / sw.s) * p.v", "e.src")} AS contrib
         FROM dedges e
         JOIN sumw sw ON sw.src = e.src
         JOIN {prev} p ON p.node = e.src

@@ -70,7 +70,9 @@ from travel_data_pipeline_spark.functions.hashing import (
     md5_long,
     md5_long_sql,
 )
-from travel_data_pipeline_spark.functions.parity import round_sql
+from travel_data_pipeline_spark.functions.parity import (
+    ordered_sum, ordered_sum_sql, round_sql,
+)
 from travel_data_pipeline_spark.registry import register
 from travel_data_pipeline_spark.sources.readers import load_table
 
@@ -375,12 +377,6 @@ def palma_ratio_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 # fine (the acf_daily_counts discipline).
 # ---------------------------------------------------------------------------
 
-_CHI2_FOLD = ("list_reduce(list_prepend(0.0, "
-              "list((CAST(o AS DOUBLE) - t.n / 7.0)"
-              " * (CAST(o AS DOUBLE) - t.n / 7.0)"
-              " / (t.n / 7.0) ORDER BY dow)), (x, y) -> x + y)")
-
-
 @register("chisq_gof_weekday", f"""
 WITH daily AS ({_DAILY_SQL.format(where="")}),
 dows AS (
@@ -389,7 +385,9 @@ dows AS (
 ),
 tot AS (SELECT CAST(sum(o) AS BIGINT) AS n FROM dows)
 SELECT t.n AS n_events, CAST(6 AS INT) AS df,
-       {round_sql(_CHI2_FOLD)} + 0.0 AS chi2
+       {round_sql(ordered_sum_sql("(CAST(o AS DOUBLE) - t.n / 7.0)"
+                                  " * (CAST(o AS DOUBLE) - t.n / 7.0)"
+                                  " / (t.n / 7.0)", "dow"))} + 0.0 AS chi2
 FROM tot t CROSS JOIN dows GROUP BY t.n
 """)
 def chisq_gof_weekday(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -406,10 +404,7 @@ def chisq_gof_weekday(spark: SparkSession, sf_dir: str) -> DataFrame:
             * (F.col("o").cast("double") - nd / 7.0) / (nd / 7.0))
     return (dows.crossJoin(F.broadcast(tot))
             .groupBy("n")
-            .agg(F.aggregate(
-                F.array_sort(F.collect_list(F.struct("dow",
-                                                     term.alias("c")))),
-                F.lit(0.0), lambda a, x: a + x["c"]).alias("chi2raw"))
+            .agg(ordered_sum(term, "dow").alias("chi2raw"))
             .select(F.col("n").alias("n_events"),
                     F.lit(6).cast("int").alias("df"),
                     (F.round("chi2raw", 6) + 0.0).alias("chi2")))
@@ -542,11 +537,6 @@ def hodges_lehmann_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
                  / 4.0, 6) + 0.0).alias("hl_estimate"))
 
 
-_BW_NUM_FOLD = ("list_reduce(list_prepend(0.0, list(nt ORDER BY v)), "
-                "(x, y) -> x + y)")
-_BW_DEN_FOLD = ("list_reduce(list_prepend(0.0, list(dt ORDER BY v)), "
-                "(x, y) -> x + y)")
-
 
 @register("biweight_midvariance_daily", f"""
 WITH daily AS ({_DAILY_SQL.format(where="")}),
@@ -597,9 +587,9 @@ SELECT n1.n AS n_days,
        {round_sql('CAST(med.m2 AS DOUBLE) / 2.0')} + 0.0 AS median,
        {round_sql('CAST(mad.mad4 AS DOUBLE) / 4.0')} + 0.0 AS mad,
        CASE WHEN mad.mad4 = 0 THEN NULL
-            ELSE {round_sql(f'n1.n * ({_BW_NUM_FOLD})'
-                            f' / (({_BW_DEN_FOLD})'
-                            f' * ({_BW_DEN_FOLD}))')} + 0.0
+            ELSE {round_sql(f'n1.n * ({ordered_sum_sql("nt", "v")})'
+                            f' / (({ordered_sum_sql("dt", "v")})'
+                            f' * ({ordered_sum_sql("dt", "v")}))')} + 0.0
        END AS biweight_midvar
 FROM n1 CROSS JOIN med CROSS JOIN mad LEFT JOIN terms ON TRUE
 GROUP BY n1.n, med.m2, mad.mad4
@@ -651,14 +641,8 @@ def biweight_midvariance_daily(spark: SparkSession,
     folded = (base.select("n", "m2", "mad4", "v",
                           nt.alias("nt"), dt.alias("dt"))
               .groupBy("n", "m2", "mad4")
-              .agg(F.aggregate(
-                  F.array_sort(F.collect_list(
-                      F.struct("v", F.col("nt").alias("a")))),
-                  F.lit(0.0), lambda a, x: a + x["a"]).alias("sn"),
-                  F.aggregate(
-                  F.array_sort(F.collect_list(
-                      F.struct("v", F.col("dt").alias("a")))),
-                  F.lit(0.0), lambda a, x: a + x["a"]).alias("sd")))
+              .agg(ordered_sum("nt", "v").alias("sn"),
+                   ordered_sum("dt", "v").alias("sd")))
     return folded.select(
         F.col("n").alias("n_days"),
         (F.round(F.col("m2").cast("double") / 2.0, 6) + 0.0)
@@ -1068,10 +1052,9 @@ ps AS (SELECT unnest([{ps}]) AS p)
 SELECT ps.p AS p,
        CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT)
          AS n_rel,
-       {round_sql("(1.0 - ps.p) * list_reduce(list_prepend(0.0, "
-                  "list(CASE WHEN lang = 'en' "
-                  "THEN pow(ps.p, rnk - 1) ELSE 0.0 END "
-                  "ORDER BY rnk)), (x, y) -> x + y)")}
+       {round_sql("(1.0 - ps.p) * " + ordered_sum_sql(
+           "CASE WHEN lang = 'en' THEN pow(ps.p, rnk - 1) ELSE 0.0 END",
+           "rnk"))}
          + 0.0 AS rbp
 FROM top CROSS JOIN ps GROUP BY ps.p ORDER BY ps.p
 """
@@ -1098,11 +1081,7 @@ def rbp_relevance_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("p")
             .agg(F.sum(F.when(F.col("lang") == "en", 1).otherwise(0))
                  .cast("long").alias("n_rel"),
-                 F.aggregate(
-                     F.array_sort(F.collect_list(
-                         F.struct("rnk", term.alias("v")))),
-                     F.lit(0.0),
-                     lambda a, x: a + x["v"]).alias("s"))
+                 ordered_sum(term, "rnk").alias("s"))
             .select("p", "n_rel",
                     (F.round((1.0 - F.col("p")) * F.col("s"), 6) + 0.0)
                     .alias("rbp"))
@@ -1572,9 +1551,7 @@ c2 AS (
 vocab AS (SELECT CAST(count(DISTINCT tok) AS BIGINT) AS v FROM toks),
 scored AS (
     SELECT t.doc_id, CAST(count(*) AS BIGINT) AS n_tri,
-           list_reduce(list_prepend(0.0,
-               list(ln((c3.c + 1.0) / (c2.c + vb.v)) ORDER BY t.pos)),
-               (x, y) -> x + y) AS lp
+           {ordered_sum_sql("ln((c3.c + 1.0) / (c2.c + vb.v))", "t.pos")} AS lp
     FROM tri t
     JOIN c3 ON c3.w1 = t.w1 AND c3.w2 = t.w2 AND c3.w3 = t.w3
     JOIN c2 ON c2.w1 = t.w1 AND c2.w2 = t.w2
@@ -1618,7 +1595,8 @@ def trigram_lm_from_arrays(spark: SparkSession, arrs: DataFrame,
     stress seam (stress_textops drives it at a 5M-doc corpus). One
     linear pair pass, two corpus groupBys (c3/c2 keyed on trigram /
     bigram prefixes), position-pinned per-doc folds, TakeOrdered
-    top-k."""
+    top-k. ``materialize`` picks the pin; unreplicated checkpoint
+    blocks on a cluster: see ``operators.dedup.simhash_near_pairs``."""
     ln3 = F.greatest(F.size("t") - 2, F.lit(0))
     tri = (arrs.select(
         "doc_id",
@@ -1674,11 +1652,7 @@ def trigram_lm_from_arrays(spark: SparkSession, arrs: DataFrame,
     scored = (tri.join(terms, ["w1", "w2", "w3"])
               .groupBy("doc_id")
               .agg(F.count("*").cast("long").alias("n_tri"),
-                   F.aggregate(
-                       F.array_sort(F.collect_list(
-                           F.struct("pos", F.col("x").alias("x")))),
-                       F.lit(0.0), lambda a, x: a + x["x"])
-                   .alias("lp")))
+                   ordered_sum("x", "pos").alias("lp")))
     perp = F.exp(-F.col("lp") / F.col("n_tri"))
     return (scored
             .orderBy(perp.desc(), F.col("doc_id").asc())
@@ -1970,10 +1944,9 @@ strw AS (
 SELECT c.arm, CAST(sum(c.n) AS BIGINT) AS n,
        {round_sql('CAST(sum(c.s) AS DOUBLE) / sum(c.n)')}
          + 0.0 AS raw_mean,
-       {round_sql('list_reduce(list_prepend(0.0, '
-                  'list((CAST(w.ns AS DOUBLE) / w.ntot) '
-                  '* (CAST(c.s AS DOUBLE) / c.n) '
-                  'ORDER BY c.stratum)), (x, y) -> x + y)')}
+       {round_sql(ordered_sum_sql("(CAST(w.ns AS DOUBLE) / w.ntot)"
+                                  " * (CAST(c.s AS DOUBLE) / c.n)",
+                                  "c.stratum"))}
          + 0.0 AS post_strat_mean
 FROM cell c JOIN strw w ON w.stratum = c.stratum
 GROUP BY c.arm ORDER BY c.arm
@@ -2004,10 +1977,7 @@ def post_stratified_mean(spark: SparkSession,
             .agg(F.sum("n").cast("long").alias("n"),
                  (F.round(F.sum("s").cast("double")
                           / F.sum("n"), 6) + 0.0).alias("raw_mean"),
-                 (F.round(F.aggregate(
-                     F.array_sort(F.collect_list(
-                         F.struct("stratum", term.alias("x")))),
-                     F.lit(0.0), lambda a, x: a + x["x"]), 6) + 0.0)
+                 (F.round(ordered_sum(term, "stratum"), 6) + 0.0)
                  .alias("post_strat_mean"))
             .orderBy("arm"))
 
@@ -2274,12 +2244,9 @@ mom AS (
 ),
 ew AS (
     SELECT a.t, a.i, a.cnt,
-           list_reduce(list_prepend(0.0,
-               list(CASE WHEN b.i = 1
-                         THEN pow({lam1}, a.i - 1) * b.cnt
-                         ELSE {lam} * pow({lam1}, a.i - b.i) * b.cnt
-                    END ORDER BY b.i)),
-               (x, y) -> x + y) AS l
+           {ordered_sum_sql(f"CASE WHEN b.i = 1 THEN pow({lam1}, a.i - 1)"
+                            f" * b.cnt ELSE {lam} * pow({lam1}, a.i - b.i)"
+                            " * b.cnt END", "b.i")} AS l
     FROM idx a JOIN idx b ON b.i <= a.i
     GROUP BY a.t, a.i, a.cnt
 ),
@@ -2335,10 +2302,7 @@ def ewma_control_chart_daily(spark: SparkSession,
                    * F.col("cntb"))
     ew = (a.join(F.broadcast(b), F.col("ib") <= F.col("ia"))
           .groupBy("ta", "ia", "cnta")
-          .agg(F.aggregate(
-              F.array_sort(F.collect_list(
-                  F.struct("ib", term.alias("x")))),
-              F.lit(0.0), lambda acc, x: acc + x["x"]).alias("l")))
+          .agg(ordered_sum(term, "ib").alias("l")))
     nd = F.col("n").cast("double")
     lim = mom.select(
         "n", (F.col("s").cast("double") / nd).alias("mu"),
@@ -2514,9 +2478,7 @@ df AS (
 nd AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
 scored AS (
     SELECT s.doc_id, CAST(count(*) AS BIGINT) AS n_shingles,
-           list_reduce(list_prepend(0.0,
-               list(ln(CAST(nd.n AS DOUBLE) / df.df) ORDER BY s.pos)),
-               (x, y) -> x + y) AS sidf
+           {ordered_sum_sql("ln(CAST(nd.n AS DOUBLE) / df.df)", "s.pos")} AS sidf
     FROM sh s JOIN df ON df.g = s.g CROSS JOIN nd
     GROUP BY s.doc_id
 )
@@ -2560,11 +2522,7 @@ def shingle_rarity_scores(spark: SparkSession,
     scored = (sh.join(df, "g").crossJoin(F.broadcast(nd))
               .groupBy("doc_id")
               .agg(F.count("*").cast("long").alias("n_shingles"),
-                   F.aggregate(
-                       F.array_sort(F.collect_list(
-                           F.struct("pos", term.alias("x")))),
-                       F.lit(0.0), lambda a, x: a + x["x"])
-                   .alias("sidf")))
+                   ordered_sum(term, "pos").alias("sidf")))
     mi = F.col("sidf") / F.col("n_shingles")
     return (scored.orderBy(mi.desc(), F.col("doc_id").asc())
             .limit(_SHR_TOPK)

@@ -24,7 +24,9 @@ from travel_data_pipeline_spark.functions.hashing import (
     md5_long,
     md5_long_sql,
 )
-from travel_data_pipeline_spark.functions.parity import round_sql
+from travel_data_pipeline_spark.functions.parity import (
+    ordered_sum, ordered_sum_sql, round_sql,
+)
 from travel_data_pipeline_spark.registry import ORACLES, register
 from travel_data_pipeline_spark.sources.readers import load_table
 
@@ -375,14 +377,13 @@ WITH norms AS (
 folded AS (
     SELECT label, CAST(count(*) AS BIGINT) AS n,
            min(nrm) AS min_n, max(nrm) AS max_n,
-           list(nrm ORDER BY vec_id) AS ns
+           {ordered_sum_sql("nrm", "vec_id")} AS s
     FROM norms GROUP BY label
 )
 SELECT label, n,
        {round_sql("min_n")} AS min_norm,
        {round_sql("max_n")} AS max_norm,
-       {round_sql("list_reduce(ns, (a, b) -> a + b) / CAST(n AS DOUBLE)")}
-         AS mean_norm
+       {round_sql("s / CAST(n AS DOUBLE)")} AS mean_norm
 FROM folded
 """)
 def embedding_norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -395,15 +396,12 @@ def embedding_norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
               .agg(F.count("*").cast("long").alias("n"),
                    F.min("nrm").alias("min_n"),
                    F.max("nrm").alias("max_n"),
-                   F.array_sort(F.collect_list(F.struct("vec_id", "nrm")))
-                   .alias("ns")))
-    total = F.aggregate(F.transform("ns", lambda s: s["nrm"]),
-                        F.lit(0.0), lambda a, x: a + x)
+                   ordered_sum("nrm", "vec_id").alias("s")))
     return folded.select(
         "label", "n",
         F.round("min_n", 6).alias("min_norm"),
         F.round("max_n", 6).alias("max_norm"),
-        F.round(total / F.col("n").cast("double"), 6).alias("mean_norm"))
+        F.round(F.col("s") / F.col("n").cast("double"), 6).alias("mean_norm"))
 
 
 # ---------------------------------------------------------------------------
@@ -431,11 +429,10 @@ terms AS (
 srcs AS (
     SELECT source, CAST(sum(n) AS BIGINT) AS n_docs,
            CAST(count(*) AS BIGINT) AS n_langs,
-           list(term ORDER BY lang) AS terms
+           {ordered_sum_sql("term", "lang")} AS h
     FROM terms GROUP BY source
 )
-SELECT source, n_docs, n_langs,
-       {round_sql("list_reduce(terms, (a, b) -> a + b)")} AS entropy
+SELECT source, n_docs, n_langs, {round_sql("h")} AS entropy
 FROM srcs
 """)
 def source_lang_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -448,12 +445,9 @@ def source_lang_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     folded = (terms.groupBy("source")
               .agg(F.sum("n").cast("long").alias("n_docs"),
                    F.count("*").cast("long").alias("n_langs"),
-                   F.array_sort(F.collect_list(F.struct("lang", "term")))
-                   .alias("terms")))
-    h = F.aggregate(F.transform("terms", lambda s: s["term"]),
-                    F.lit(0.0), lambda a, x: a + x)
+                   ordered_sum("term", "lang").alias("h")))
     return folded.select("source", "n_docs", "n_langs",
-                         F.round(h, 6).alias("entropy"))
+                         F.round("h", 6).alias("entropy"))
 
 
 # ---------------------------------------------------------------------------

@@ -38,7 +38,9 @@ from travel_data_pipeline_spark.functions.hashing import (
     md5_long,
     md5_long_sql,
 )
-from travel_data_pipeline_spark.functions.parity import round_sql
+from travel_data_pipeline_spark.functions.parity import (
+    ordered_sum, ordered_sum_sql, round_sql,
+)
 from travel_data_pipeline_spark.operators import text
 from travel_data_pipeline_spark.registry import ORACLES, register
 from travel_data_pipeline_spark.sources.readers import load_table
@@ -278,8 +280,8 @@ credited AS (
 )
 SELECT event_type,
        CAST(count(*) AS BIGINT) AS n_touches,
-       {round_sql("list_reduce(list(credit ORDER BY event_id),"
-                  " (x, y) -> x + y)")} + 0.0 AS credited_value
+       {round_sql(ordered_sum_sql("credit", "event_id"))} + 0.0
+           AS credited_value
 FROM credited
 GROUP BY event_type
 """)
@@ -320,16 +322,10 @@ def attribution_multi_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     credited = touches.select(
         "event_type", "event_id",
         F.round(weight * F.col("p_value"), 6).alias("credit"))
-    fold = F.aggregate(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("event_id",
-                                                 F.col("credit")
-                                                 .alias("v")))),
-            lambda s: s["v"]),
-        F.lit(0.0), lambda a, x: a + x)
     return (credited.groupBy("event_type")
             .agg(F.count("*").cast("long").alias("n_touches"),
-                 (F.round(fold, 6) + 0.0).alias("credited_value")))
+                 (F.round(ordered_sum("credit", "event_id"), 6) + 0.0)
+                 .alias("credited_value")))
 
 
 # ---------------------------------------------------------------------------

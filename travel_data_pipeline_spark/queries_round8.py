@@ -29,7 +29,9 @@ from travel_data_pipeline_spark.functions.hashing import (
     md5_long,
     md5_long_sql,
 )
-from travel_data_pipeline_spark.functions.parity import round_sql
+from travel_data_pipeline_spark.functions.parity import (
+    ordered_fold, ordered_sum, ordered_sum_sql, round_sql,
+)
 from travel_data_pipeline_spark.functions.oracle_fragments import (
     INT_DOT as _INT_DOT,
     Q8_CTE as _Q8_CTE,
@@ -965,10 +967,9 @@ def _hll_fold_sql(key: str, src: str) -> str:
     return f"""
 folded AS (
     SELECT {key},
-           {_HLL_ALPHA} * {_HLL_M} * {_HLL_M} / list_reduce(
-               list(1.0 / CAST(CAST(1 AS BIGINT) << m AS DOUBLE)
-                    ORDER BY bucket),
-               (x, y) -> x + y) AS harm_est,
+           {_HLL_ALPHA} * {_HLL_M} * {_HLL_M} / {ordered_sum_sql(
+               "1.0 / CAST(CAST(1 AS BIGINT) << m AS DOUBLE)", "bucket")}
+               AS harm_est,
            SUM(CASE WHEN m = 0 THEN 1 ELSE 0 END) AS z
     FROM {src} GROUP BY {key}
 ),
@@ -1009,14 +1010,10 @@ def _hll_fold_spark(full_regs: DataFrame, key: str) -> DataFrame:
     term = F.expr("1.0 / CAST(shiftleft(CAST(1 AS BIGINT), s.m) "
                   "AS DOUBLE)")
     folded = (full_regs.alias("s")
-              .select(f"s.{key}", F.col("s.m").alias("m"), F.struct(
-                  F.col("s.bucket").alias("bucket"),
-                  term.alias("t")).alias("bt"))
+              .select(f"s.{key}", F.col("s.m").alias("m"),
+                      F.col("s.bucket").alias("bucket"), term.alias("t"))
               .groupBy(key)
-              .agg(F.aggregate(
-                  F.array_sort(F.collect_list("bt")),
-                  F.lit(0.0),
-                  lambda acc, x: acc + x["t"]).alias("denom"),
+              .agg(ordered_sum("t", "bucket").alias("denom"),
                    F.sum(F.when(F.col("m") == 0, 1).otherwise(0))
                    .alias("z")))
     harm_est = F.lit(_HLL_ALPHA) * _HLL_M * _HLL_M / F.col("denom")
@@ -1904,7 +1901,7 @@ weighted AS (
 ),
 norm AS (
     SELECT alpha,
-           list_reduce(list(w ORDER BY source), (x, y) -> x + y) AS tw,
+           {ordered_sum_sql("w", "source")} AS tw,
            SUM(sz) AS total
     FROM weighted GROUP BY alpha
 )
@@ -1929,14 +1926,8 @@ def mixture_temperature_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
                         F.when(F.col("alpha") == "1.0", szd)
                         .when(F.col("alpha") == "0.5", F.sqrt(szd))
                         .otherwise(F.sqrt(F.sqrt(szd))).alias("w")))
-    norm = (weighted
-            .select("alpha", "sz",
-                    F.struct(F.col("source").alias("source"),
-                             F.col("w").alias("w")).alias("sw"))
-            .groupBy("alpha")
-            .agg(F.aggregate(F.array_sort(F.collect_list("sw")),
-                             F.lit(0.0),
-                             lambda acc, x: acc + x["w"]).alias("tw"),
+    norm = (weighted.groupBy("alpha")
+            .agg(ordered_sum("w", "source").alias("tw"),
                  F.sum("sz").alias("total")))
     return (weighted.join(F.broadcast(norm), "alpha")
             .select("alpha", "source",
@@ -2047,12 +2038,11 @@ cells AS (
 folded AS (
     SELECT event_type,
            SUM(cnt) AS n_rows,
-           list_reduce(list(
-               cnt / CAST(CAST(1 AS BIGINT) << wk AS DOUBLE)
-               ORDER BY wk), (x, y) -> x + y) AS wsum,
-           list_reduce(list(
-               cnt / CAST(CAST(1 AS BIGINT) << (2 * wk) AS DOUBLE)
-               ORDER BY wk), (x, y) -> x + y) AS w2sum
+           {ordered_sum_sql("cnt / CAST(CAST(1 AS BIGINT) << wk AS DOUBLE)",
+                            "wk")} AS wsum,
+           {ordered_sum_sql(
+               "cnt / CAST(CAST(1 AS BIGINT) << (2 * wk) AS DOUBLE)",
+               "wk")} AS w2sum
     FROM cells GROUP BY event_type
 )
 SELECT event_type, CAST(n_rows AS BIGINT) AS n_rows,
@@ -2078,6 +2068,7 @@ def recency_decay_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "AS DOUBLE)")
     w2 = F.expr("s.cnt / CAST(shiftleft(CAST(1 AS BIGINT), 2 * s.wk) "
                 "AS DOUBLE)")
+    ww = F.array_sort(F.collect_list("ww"))
     folded = (cells.alias("s")
               .select("s.event_type", F.col("s.cnt").alias("cnt"),
                       F.struct(F.col("s.wk").alias("wk"),
@@ -2085,14 +2076,9 @@ def recency_decay_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
                       .alias("ww"))
               .groupBy("event_type")
               .agg(F.sum("cnt").alias("n_rows"),
-                   F.aggregate(F.array_sort(F.collect_list("ww")),
-                               F.lit(0.0),
-                               lambda acc, x: acc + x["w1"])
-                   .alias("wsum"),
-                   F.aggregate(F.array_sort(F.collect_list("ww")),
-                               F.lit(0.0),
-                               lambda acc, x: acc + x["w2"])
-                   .alias("w2sum")))
+                   # one sorted list feeds both sums
+                   ordered_fold(ww, "w1").alias("wsum"),
+                   ordered_fold(ww, "w2").alias("w2sum")))
     return folded.select(
         "event_type", F.col("n_rows").cast("long").alias("n_rows"),
         F.round(F.col("wsum"), 6).alias("weighted_n"),

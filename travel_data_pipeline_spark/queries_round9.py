@@ -379,6 +379,8 @@ def substring_dup_spans(spark: SparkSession, sf_dir: str,
 
     Islands: within a document, consecutive duplicated positions share
     pos - row_number() — one partitioned window, one bounded groupBy.
+    ``materialize`` picks the gram pin; unreplicated checkpoint blocks
+    on a cluster: see ``operators.dedup.simhash_near_pairs``.
     """
     from travel_data_pipeline_spark.operators import dedup
 

@@ -18,6 +18,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from travel_data_pipeline_spark.functions.parity import (
+    ordered_sum, ordered_sum_sql, round_sql,
+)
 from travel_data_pipeline_spark.operators.similarity import as_double, cosine
 from travel_data_pipeline_spark.operators.text import token_array
 from travel_data_pipeline_spark.registry import register
@@ -63,12 +66,10 @@ scored AS (
 ),
 folded AS (
     SELECT doc_id, COUNT(*) AS n_terms,
-           list(s ORDER BY term) AS ss
+           {ordered_sum_sql("s", "term")} AS s
     FROM scored GROUP BY doc_id
 )
-SELECT doc_id, CAST(n_terms AS INT) AS n_terms,
-       CAST(round(CAST(format('{{}}', list_reduce(ss, (x, y) -> x + y))
-                       AS DECIMAL(38,18)), 6) AS DOUBLE) AS bm25
+SELECT doc_id, CAST(n_terms AS INT) AS n_terms, {round_sql("s")} AS bm25
 FROM folded
 """)
 def bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -100,12 +101,10 @@ def bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
               .select("doc_id", "term", (idf * tfn).alias("s")))
     folded = (scored.groupBy("doc_id")
               .agg(F.count("*").alias("n_terms"),
-                   F.array_sort(F.collect_list(
-                       F.struct("term", "s"))).alias("ss")))
+                   ordered_sum("s", "term").alias("s")))
     return folded.select(
         "doc_id", F.col("n_terms").cast("int").alias("n_terms"),
-        F.round(F.aggregate(F.transform("ss", lambda e: e["s"]),
-                            F.lit(0.0), lambda a, x: a + x), 6).alias("bm25"))
+        F.round("s", 6).alias("bm25"))
 
 
 @register("hybrid_search_rrf", f"""
@@ -130,7 +129,7 @@ scored AS (
     CROSS JOIN stats
 ),
 bm AS (
-    SELECT doc_id, CAST(round(CAST(format('{{}}', list_reduce(list(s ORDER BY term), (x, y) -> x + y)) AS DECIMAL(38,18)), 6) AS DOUBLE) AS bm25
+    SELECT doc_id, {round_sql(ordered_sum_sql("s", "term"))} AS bm25
     FROM scored GROUP BY doc_id
 ),
 lex_rank AS (

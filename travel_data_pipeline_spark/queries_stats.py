@@ -15,7 +15,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from travel_data_pipeline_spark.functions.parity import round_sql
+from travel_data_pipeline_spark.functions.parity import (
+    ordered_sum, ordered_sum_sql, round_sql,
+)
 from travel_data_pipeline_spark.operators import joins
 from travel_data_pipeline_spark.registry import register
 from travel_data_pipeline_spark.sources.readers import load_table
@@ -327,7 +329,7 @@ def decile_bins_order_value(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Chi-square independence test — order-controlled double summation.
 # ---------------------------------------------------------------------------
 
-@register("chi2_event_type_by_dow", """
+@register("chi2_event_type_by_dow", f"""
 WITH obs AS (
     SELECT event_type, dayofweek(ts) AS dow, COUNT(*) AS o
     FROM events GROUP BY 1, 2
@@ -336,25 +338,22 @@ rt AS (SELECT event_type, SUM(o) AS rt FROM obs GROUP BY 1),
 ct AS (SELECT dow, SUM(o) AS ct FROM obs GROUP BY 1),
 n AS (SELECT SUM(o) AS n FROM obs),
 cells AS (
-    SELECT obs.event_type, obs.dow, obs.o, rt.rt, ct.ct, n.n
+    SELECT obs.event_type, obs.dow,
+           (CAST(o AS DOUBLE) - (rt * ct) / CAST(n AS DOUBLE))
+           * (CAST(o AS DOUBLE) - (rt * ct) / CAST(n AS DOUBLE))
+           / ((rt * ct) / CAST(n AS DOUBLE)) AS term
     FROM obs JOIN rt USING (event_type) JOIN ct USING (dow) CROSS JOIN n
 ),
 folded AS (
     SELECT COUNT(*) AS n_cells,
            COUNT(DISTINCT event_type) AS r,
            COUNT(DISTINCT dow) AS c,
-           list(
-               (CAST(o AS DOUBLE)
-                - (rt * ct) / CAST(n AS DOUBLE))
-               * (CAST(o AS DOUBLE)
-                  - (rt * ct) / CAST(n AS DOUBLE))
-               / ((rt * ct) / CAST(n AS DOUBLE))
-               ORDER BY event_type, dow) AS terms
+           {ordered_sum_sql("term", "event_type, dow")} AS s
     FROM cells
 )
 SELECT CAST(n_cells AS BIGINT) AS n_cells,
        CAST((r - 1) * (c - 1) AS INT) AS dof,
-       CAST(round(CAST(format('{}', list_reduce(terms, (x, y) -> x + y)) AS DECIMAL(38,18)), 6) AS DOUBLE) AS chi2
+       {round_sql("s")} AS chi2
 FROM folded
 """)
 def chi2_event_type_by_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -388,13 +387,11 @@ def chi2_event_type_by_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_cells"),
         F.countDistinct("event_type").alias("r"),
         F.countDistinct("dow").alias("c"),
-        F.array_sort(F.collect_list(
-            F.struct("event_type", "dow", "term"))).alias("ts"))
+        ordered_sum("term", "event_type", "dow").alias("s"))
     return folded.select(
         F.col("n_cells"),
         ((F.col("r") - 1) * (F.col("c") - 1)).cast("int").alias("dof"),
-        F.round(F.aggregate(F.transform("ts", lambda t: t["term"]),
-                            F.lit(0.0), lambda a, x: a + x), 6).alias("chi2"))
+        F.round("s", 6).alias("chi2"))
 
 
 # ---------------------------------------------------------------------------
@@ -1026,7 +1023,7 @@ def gini_customer_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
                  - (n + 1.0) / n, 6) + 0.0).alias("gini"))
 
 
-@register("hhi_market_concentration", """
+@register("hhi_market_concentration", f"""
 WITH rev AS (
     SELECT r.r_name AS region,
            n.n_name AS nation,
@@ -1047,8 +1044,7 @@ shares AS (
     FROM rev JOIN tot USING (region)
 )
 SELECT region, CAST(count(*) AS BIGINT) AS n_nations,
-       round(list_reduce(list(sq ORDER BY nation), (x, y) -> x + y) * 10000,
-             6) + 0.0 AS hhi
+       round({ordered_sum_sql("sq", "nation")} * 10000, 6) + 0.0 AS hhi
 FROM shares GROUP BY region
 """)
 def hhi_market_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1082,13 +1078,10 @@ def hhi_market_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
                        * (F.col("v") / F.col("tv"))).alias("sq")))
     folded = (shares.groupBy("region")
               .agg(F.count("*").cast("long").alias("n_nations"),
-                   F.array_sort(F.collect_list(F.struct("nation", "sq")))
-                    .alias("ss")))
-    total = F.aggregate(F.transform("ss", lambda s: s["sq"]),
-                        F.lit(0.0), lambda a, x: a + x)
+                   ordered_sum("sq", "nation").alias("s")))
     return folded.select(
         "region", "n_nations",
-        (F.round(total * 10000, 6) + 0.0).alias("hhi"))
+        (F.round(F.col("s") * 10000, 6) + 0.0).alias("hhi"))
 
 
 # ---------------------------------------------------------------------------
@@ -1116,11 +1109,11 @@ terms AS (
 ),
 folded AS (
     SELECT count(*) AS n_cells,
-           list(term ORDER BY event_type, dow) AS ts
+           {ordered_sum_sql("term", "event_type, dow")} AS s
     FROM terms
 )
 SELECT CAST(n_cells AS BIGINT) AS n_cells,
-       {round_sql('list_reduce(ts, (x, y) -> x + y)')} + 0.0 AS mi_nats
+       {round_sql('s')} + 0.0 AS mi_nats
 FROM folded
 """)
 def mutual_info_event_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1142,12 +1135,9 @@ def mutual_info_event_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
              .select("event_type", "dow", term.alias("term")))
     folded = cells.agg(
         F.count("*").cast("long").alias("n_cells"),
-        F.array_sort(F.collect_list(
-            F.struct("event_type", "dow", "term"))).alias("ts"))
-    total = F.aggregate(F.transform("ts", lambda t: t["term"]),
-                        F.lit(0.0), lambda a, x: a + x)
+        ordered_sum("term", "event_type", "dow").alias("s"))
     return folded.select("n_cells",
-                         (F.round(total, 6) + 0.0).alias("mi_nats"))
+                         (F.round("s", 6) + 0.0).alias("mi_nats"))
 
 
 # ---------------------------------------------------------------------------
