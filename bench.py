@@ -3,7 +3,8 @@
 Runs the engine's headline queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]. Each query executes
 fully via the noop sink (no collect cost, no result pruning — every
-computed column materializes).
+computed column materializes). $SPARK_GRAFT_CPUS defaults to the CPUs
+the process may run on.
 
     python bench.py                  # the HEADLINE suite, sidecar record
     python bench.py q1 q2 ...        # just these queries, no sidecar
@@ -161,7 +162,8 @@ def _layers(probe, name: str, df) -> dict:
 
 def main(subset: list[str]) -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
+    os.environ.setdefault("SPARK_GRAFT_CPUS",
+                          str(len(os.sched_getaffinity(0))))
     cpus_env = os.environ["SPARK_GRAFT_CPUS"]
     cpus: int | str = int(cpus_env) if cpus_env.isdigit() else cpus_env
     # external-load fingerprint, sampled BEFORE the engine spins up

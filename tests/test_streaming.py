@@ -485,35 +485,72 @@ def test_stateful_ewma_matches_batch_fold(spark, sf_smoke):
 
 
 def test_rollup_maintenance_stream_matches_batch(spark, sf_smoke, tmp_path):
-    """The streamed continuous aggregate equals the batch recompute."""
-    from pyspark.sql import functions as F
+    """The streamed continuous aggregate equals the batch recompute,
+    each landed row is read once, no pin outlives its micro-batch, and
+    every rewritten partition is one file."""
+    import glob
+    import os
 
+    from tests.test_versioned import (
+        assert_same_rows,
+        empty_rollup,
+        recompute_rollup,
+    )
     from travel_data_pipeline_spark.sources.versioned import (
+        VERSION_DIR_COL,
+        _data_dir,
         read_table,
-        write_table,
     )
 
     path, ckpt = str(tmp_path / "roll"), str(tmp_path / "ckpt")
-    empty = spark.createDataFrame(
-        [], "day string, hour_bucket string, event_type string, "
-            "n long, total_value decimal(18,2)")
-    write_table(empty, path, partition_col="day")
+    empty_rollup(spark, path)
+    pinned = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
     q = jobs.rollup_maintenance_stream(
         jobs.read_events_stream(spark, sf_smoke), path, ckpt)
     q.awaitTermination(120)
 
     ev = load_table(spark, sf_smoke, "events")
-    hour = F.date_trunc("hour", "ts")
-    want = (ev.groupBy(
-                F.date_format(hour, "yyyy-MM-dd").alias("day"),
-                F.date_format(hour, "yyyy-MM-dd HH:00").alias("hour_bucket"),
-                "event_type")
-            .agg(F.count("*").alias("n"),
-                 F.sum(F.col("value").cast("decimal(18,2)"))
-                  .alias("total_value")))
-    got = read_table(spark, path)
-    assert got.count() == want.count()
-    assert got.unionByName(want).distinct().count() == want.count()
+    assert_same_rows(read_table(spark, path), recompute_rollup(ev))
+    # a micro-batch's numInputRows counts every scan of its source
+    assert sum(p["numInputRows"] for p in q.recentProgress) == ev.count()
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keySet()) \
+        == pinned
+    parts = glob.glob(os.path.join(_data_dir(path),
+                                   f"{VERSION_DIR_COL}=*", "day=*"))
+    assert parts
+    for part in parts:
+        assert len(glob.glob(os.path.join(part, "*.parquet"))) == 1, part
+
+
+def test_rollup_fold_replayed_epoch_is_noop(spark, sf_smoke, tmp_path):
+    """An epoch redelivered after its commit (a crash before the
+    checkpoint commit) must not fold its counts in twice; the next
+    epoch, and an epoch of a fresh checkpoint, are applied."""
+    from tests.test_versioned import empty_rollup
+    from travel_data_pipeline_spark.sources.versioned import (
+        current_version,
+        read_table,
+    )
+
+    path = str(tmp_path / "roll")
+    empty_rollup(spark, path)
+    ev = load_table(spark, sf_smoke, "events")
+
+    def rollup():
+        return sorted(tuple(r) for r in read_table(spark, path).collect())
+
+    fold = jobs._rollup_fold(path, str(tmp_path / "ckpt"))
+    fold(ev, 0)
+    once = rollup()
+    fold(ev, 0)
+    assert current_version(path) == 2
+    assert rollup() == once
+    fold(ev, 1)
+    assert current_version(path) == 3
+    jobs._rollup_fold(path, str(tmp_path / "ckpt2"))(ev, 0)
+    assert current_version(path) == 4
+    assert sum(r.n for r in read_table(spark, path).collect()) \
+        == 3 * ev.count()
 
 
 def test_stateful_anomaly_matches_batch_prequential(spark, sf_smoke, tmp_path):

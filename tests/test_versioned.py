@@ -158,6 +158,37 @@ def test_merge_schema_evolution(spark, seeded):
     assert "extra" not in V.read_table(spark, seeded).columns
 
 
+def empty_rollup(spark, path: str) -> None:
+    V.write_table(spark.createDataFrame(
+        [], "day string, hour_bucket string, event_type string, "
+            "n long, total_value decimal(18,2)"), path, partition_col="day")
+
+
+def recompute_rollup(ev):
+    """The hourly rollup of every event, recomputed in one batch."""
+    from pyspark.sql import functions as F
+
+    hour = F.date_trunc("hour", "ts")
+    return (ev.groupBy(
+                F.date_format(hour, "yyyy-MM-dd").alias("day"),
+                F.date_format(hour, "yyyy-MM-dd HH:00").alias("hour_bucket"),
+                "event_type")
+            .agg(F.count("*").alias("n"),
+                 F.sum(F.col("value").cast("decimal(18,2)"))
+                  .alias("total_value")))
+
+
+def assert_same_rows(got, want) -> None:
+    """Equal as multisets, column by column in ``want``'s order: a
+    grain duplicated in place of a missing one fails, where equal
+    counts plus a distinct union would pass it. ``day`` is compared as
+    a string (read_table infers a date from the partition dirs)."""
+    got = got.withColumn("day", got["day"].cast("string")) \
+        .select(*want.columns)
+    assert got.exceptAll(want).collect() == []
+    assert want.exceptAll(got).collect() == []
+
+
 def test_incremental_rollup_equals_recompute(spark, sf_smoke, tmp_path):
     """Two incremental maintenance batches over a time-split event
     stream must produce exactly the rollup a full recompute gives —
@@ -165,11 +196,6 @@ def test_incremental_rollup_equals_recompute(spark, sf_smoke, tmp_path):
     from pyspark.sql import functions as F
 
     from travel_data_pipeline_spark.sources.readers import load_table
-    from travel_data_pipeline_spark.sources.versioned import (
-        maintain_hourly_rollup,
-        read_table,
-        write_table,
-    )
 
     ev = load_table(spark, sf_smoke, "events")
     cut = ev.agg(F.percentile(F.unix_micros("ts"), F.lit(0.5))
@@ -179,24 +205,29 @@ def test_incremental_rollup_equals_recompute(spark, sf_smoke, tmp_path):
     assert first.count() > 0 and second.count() > 0
 
     path = str(tmp_path / "rollup")
-    empty = spark.createDataFrame(
-        [], "day string, hour_bucket string, event_type string, "
-            "n long, total_value decimal(18,2)")
-    write_table(empty, path, partition_col="day")
-    maintain_hourly_rollup(first, path)
-    maintain_hourly_rollup(second, path)
+    empty_rollup(spark, path)
+    V.maintain_hourly_rollup(first, path)
+    V.maintain_hourly_rollup(second, path)
 
-    got = read_table(spark, path)
-    hour = F.date_trunc("hour", "ts")
-    want = (ev.groupBy(
-                F.date_format(hour, "yyyy-MM-dd").alias("day"),
-                F.date_format(hour, "yyyy-MM-dd HH:00").alias("hour_bucket"),
-                "event_type")
-            .agg(F.count("*").alias("n"),
-                 F.sum(F.col("value").cast("decimal(18,2)"))
-                  .alias("total_value")))
-    assert got.count() == want.count()
-    diff = (got.join(want, ["day", "hour_bucket", "event_type", "n",
-                            "total_value"], "full_outer")
-            .filter(F.col("n").isNull() | F.col("total_value").isNull()))
-    assert got.unionByName(want).distinct().count() == want.count()
+    assert_same_rows(V.read_table(spark, path), recompute_rollup(ev))
+
+
+def test_rollup_null_timestamp_grain_accumulates(spark, tmp_path):
+    """Events with a NULL ts share one (NULL day, NULL hour) grain per
+    event type, kept in the null partition: two batches that each carry
+    one NULL-ts view leave one row with n=2, not two rows with n=1. An
+    empty batch commits nothing."""
+    from decimal import Decimal
+
+    path = str(tmp_path / "rollup")
+    empty_rollup(spark, path)
+    batch = spark.sql("SELECT CAST(NULL AS TIMESTAMP) AS ts, "
+                      "'view' AS event_type, 1.5D AS value")
+    assert V.maintain_hourly_rollup(batch, path) == 2
+    assert V.maintain_hourly_rollup(batch, path) == 3
+    assert V.maintain_hourly_rollup(batch.limit(0), path) == 3
+    assert V.current_version(path) == 3
+    got = [tuple(r) for r in V.read_table(spark, path).select(
+        "day", "hour_bucket", "event_type", "n", "total_value").collect()]
+    assert got == [(None, None, "view", 2, Decimal("3.00"))]
+    assert V._read_manifest(path, 3)["partitions"] == {V._NULL_PART: 3}

@@ -130,6 +130,17 @@ def write_table(df: DataFrame, path: str,
     })
 
 
+def _partition_dirs(path: str, man: dict, parts) -> list[str]:
+    """The snapshot directories that hold ``parts`` (partition values of
+    manifest ``man``): one per partition, or each whole snapshot of an
+    unpartitioned table."""
+    pcol = man["partition_col"]
+    return sorted({os.path.join(_data_dir(path),
+                                f"{VERSION_DIR_COL}={man['partitions'][p]}",
+                                *([f"{pcol}={p}"] if pcol else []))
+                   for p in parts})
+
+
 def read_table(spark: SparkSession, path: str,
                version: int | None = None) -> DataFrame:
     """The table as of ``version`` (default: latest). Partition dirs
@@ -139,18 +150,11 @@ def read_table(spark: SparkSession, path: str,
     if v < 1:
         raise FileNotFoundError(f"no committed version at {path}")
     man = _read_manifest(path, v)
-    pcol, base = man["partition_col"], _data_dir(path)
-    if pcol is None:
-        dirs = sorted({os.path.join(base, f"{VERSION_DIR_COL}={sv}")
-                       for sv in man["partitions"].values()})
-    else:
-        dirs = sorted(
-            os.path.join(base, f"{VERSION_DIR_COL}={sv}", f"{pcol}={pval}")
-            for pval, sv in man["partitions"].items())
     # mergeSchema: snapshots written before an additive schema change
     # surface the new columns as NULL
-    return (spark.read.option("basePath", base)
-            .option("mergeSchema", "true").parquet(*dirs)
+    return (spark.read.option("basePath", _data_dir(path))
+            .option("mergeSchema", "true")
+            .parquet(*_partition_dirs(path, man, man["partitions"]))
             .drop(VERSION_DIR_COL))
 
 
@@ -179,7 +183,6 @@ def merge_into(source: DataFrame, path: str, keys: list[str],
             f"merge_into target {path} does not exist; write_table first")
     man = _read_manifest(path, base_version)
     pcol = man["partition_col"]
-    version = base_version + 1
 
     if pcol is None:
         touched = [_NO_PART]
@@ -204,12 +207,9 @@ def merge_into(source: DataFrame, path: str, keys: list[str],
             touched.append(_NULL_PART)
         existing = [p for p in touched if p in man["partitions"]]
         if existing:
-            dirs = [os.path.join(_data_dir(path),
-                                 f"{VERSION_DIR_COL}={man['partitions'][p]}",
-                                 f"{pcol}={p}")
-                    for p in existing]
             current = (spark.read.option("basePath", _data_dir(path))
-                       .parquet(*dirs).drop(VERSION_DIR_COL))
+                       .parquet(*_partition_dirs(path, man, existing))
+                       .drop(VERSION_DIR_COL))
         else:
             current = source.limit(0)
         relevant = source
@@ -222,16 +222,32 @@ def merge_into(source: DataFrame, path: str, keys: list[str],
     if delete_condition:
         merged = merged.filter(f"NOT ({delete_condition})")
 
-    written = _write_snapshot(merged, path, version, pcol)
+    return _replace_partitions(merged, path, man, touched)
+
+
+def _replace_partitions(df: DataFrame, path: str, man: dict,
+                        touched: list[str],
+                        stream: dict | None = None) -> int:
+    """Commit ``df`` as the whole new content of the ``touched``
+    partitions of the table at manifest ``man``; every other partition
+    carries forward by reference, and a touched partition ``df`` leaves
+    empty drops out of the manifest. ``stream`` (a micro-batch's
+    checkpoint and epoch) is recorded in the manifest; without one the
+    base manifest's record carries forward, so a later commit by
+    another writer does not reopen an applied epoch."""
+    version = man["version"] + 1
+    written = _write_snapshot(df, path, version, man["partition_col"])
     partitions = dict(man["partitions"])
     for p in touched:       # fully-deleted partitions leave the manifest
         partitions.pop(p, None)
     for p in written:
         partitions[p] = version
-    return _commit(path, {
-        "version": version, "op": "merge", "partition_col": pcol,
-        "partitions": partitions,
-    })
+    commit = {"version": version, "op": "merge",
+              "partition_col": man["partition_col"], "partitions": partitions}
+    stream = stream or man.get("stream")
+    if stream:
+        commit["stream"] = stream
+    return _commit(path, commit)
 
 
 def history(path: str) -> list[dict]:
@@ -248,47 +264,76 @@ def history(path: str) -> list[dict]:
 def maintain_hourly_rollup(batch: DataFrame, path: str) -> int:
     """Incremental continuous-aggregate maintenance (the hypertable /
     materialized-rollup pattern): aggregate the incoming event batch to
-    (day, hour_bucket, event_type) grain, combine it with the CURRENT
-    rollup rows for exactly those keys, and MERGE the refreshed rows
-    back — matched grains are replaced with updated sums, new grains
-    insert, untouched partitions carry forward by reference
-    (merge_into's copy-on-write).
+    (day, hour_bucket, event_type) grain, add it to the CURRENT rollup
+    rows of exactly the days it touches, and commit the refreshed days
+    as the whole new content of their partitions; untouched partitions
+    carry forward by reference (merge_into's copy-on-write).
 
-    Cost per batch is O(grains touched by the batch), not O(table):
-    the combine reads only the affected day partitions (partition-
-    column filter prunes the snapshot scan) and the MERGE rewrites only
-    those partitions. Counts and DECIMAL sums are exact, so
-    incremental == full recompute bit-for-bit (asserted in
-    tests/test_versioned.py).
+    The batch is read once: its delta (O(grains) rows) is aggregated
+    once and pinned, the touched days (a NULL day is the null
+    partition) are collected from it to the driver, and only those day
+    directories of the current manifest are read, with the delta's
+    schema, so no schema inference runs. The summed frame holds every
+    row of the touched days, so no key probe or anti-join against the
+    old rows is needed. An empty batch commits nothing. Counts and
+    DECIMAL sums are exact, so incremental == full recompute
+    bit-for-bit (asserted in tests/test_versioned.py).
 
     First call may target an empty table created via
     ``write_table(empty_rollup, path, partition_col='day')``.
     """
+    return _maintain_rollup(batch, path, None)
+
+
+def _maintain_rollup(batch: DataFrame, path: str,
+                     stream: dict | None) -> int:
+    """maintain_hourly_rollup for one micro-batch of a stream, when
+    ``stream`` is ``{"checkpoint": <absolute path>, "epoch": <id>}``:
+    the commit records it, and a batch whose checkpoint the latest
+    manifest holds at an epoch >= this one was applied already, so it
+    commits nothing. Returns the table's version after the call."""
     from pyspark.sql import functions as F
 
+    base_version = current_version(path)
+    man = _read_manifest(path, base_version)
+    done = man.get("stream")
+    if (stream and done and done["checkpoint"] == stream["checkpoint"]
+            and done["epoch"] >= stream["epoch"]):
+        return base_version
     hour = F.date_trunc("hour", "ts")
+    grain = ["day", "hour_bucket", "event_type"]
     delta = (batch.groupBy(
                 F.date_format(hour, "yyyy-MM-dd").alias("day"),
                 F.date_format(hour, "yyyy-MM-dd HH:00").alias("hour_bucket"),
                 "event_type")
              .agg(F.count("*").alias("n"),
                   F.sum(F.col("value").cast("decimal(18,2)"))
-                   .alias("total_value")))
-    spark = batch.sparkSession
-    # a freshly-created rollup has a manifest but zero partitions —
-    # there is nothing to read (and no parquet dirs to infer from)
-    man = _read_manifest(path, current_version(path))
-    if man["partitions"]:
-        # affected-day set as a JOIN, not a driver collect: the day
-        # list broadcasts and dynamic partition pruning skips the
-        # untouched day dirs at scan time.
-        current = read_table(spark, path).join(
-            F.broadcast(delta.select("day").distinct()), "day", "semi")
-    else:
-        current = delta.limit(0)
-    combined = (current.unionByName(delta)
-                .groupBy("day", "hour_bucket", "event_type")
-                .agg(F.sum("n").cast("long").alias("n"),
-                     F.sum("total_value").cast("decimal(18,2)")
-                      .alias("total_value")))
-    return merge_into(combined, path, keys=["hour_bucket", "event_type"])
+                   .cast("decimal(18,2)").alias("total_value"))
+             .persist())
+    try:
+        touched = sorted({_NULL_PART if r.day is None else r.day
+                          for r in delta.select("day").collect()})
+        if not touched:
+            return base_version
+        if man["partition_col"] is None:
+            touched = [_NO_PART]
+        existing = [p for p in touched if p in man["partitions"]]
+        if existing:
+            current = (batch.sparkSession.read.schema(delta.schema)
+                       .option("basePath", _data_dir(path))
+                       .parquet(*_partition_dirs(path, man, existing))
+                       .drop(VERSION_DIR_COL))
+        else:
+            current = delta.limit(0)
+        # clustered by day, so each touched partition is written as one
+        # file (the grain aggregate reuses that clustering), in grain
+        # order (the writer's own sort by day is then a no-op)
+        combined = (current.unionByName(delta).repartition("day")
+                    .groupBy(*grain)
+                    .agg(F.sum("n").cast("long").alias("n"),
+                         F.sum("total_value").cast("decimal(18,2)")
+                          .alias("total_value"))
+                    .sortWithinPartitions(*grain))
+        return _replace_partitions(combined, path, man, touched, stream)
+    finally:
+        delta.unpersist()

@@ -493,22 +493,37 @@ def rollup_maintenance_stream(events: DataFrame, table_path: str,
                               checkpoint: str):
     """Streaming continuous aggregate: every micro-batch folds into the
     versioned hourly rollup via maintain_hourly_rollup — the streaming
-    producer of the same table the batch path maintains. foreachBatch
-    + the MERGE's copy-on-write gives effectively-once grain updates
-    on at-least-once redelivery (a replayed batch re-derives the same
-    grain values)."""
-    from travel_data_pipeline_spark.sources.versioned import (
-        maintain_hourly_rollup,
-    )
+    producer of the same table the batch path maintains, reading each
+    landed row once.
 
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        maintain_hourly_rollup(batch_df, table_path)
-
-    return (events.writeStream.foreachBatch(fold)
+    Effectively-once on at-least-once redelivery: each commit records
+    the absolute checkpoint path and the epoch, and an epoch the latest
+    manifest already holds for the same checkpoint (a crash between the
+    table commit and the checkpoint commit replays it) is a no-op, where
+    folding it again would add its counts twice. As with
+    token_shard_stream, the gate is bound to the checkpoint's lifetime:
+    a fresh checkpoint restarts epochs at 0 and is applied, so
+    re-feeding already-applied data under a fresh checkpoint
+    double-counts."""
+    return (events.writeStream
+            .foreachBatch(_rollup_fold(table_path, checkpoint))
             .option("checkpointLocation", checkpoint)
             .trigger(availableNow=True).start())
+
+
+def _rollup_fold(table_path: str, checkpoint: str):
+    """rollup_maintenance_stream's foreachBatch function."""
+    import os
+
+    from travel_data_pipeline_spark.sources.versioned import _maintain_rollup
+
+    ckpt_id = os.path.abspath(checkpoint)
+
+    def fold(batch_df: DataFrame, epoch_id: int) -> None:
+        _maintain_rollup(batch_df, table_path,
+                         {"checkpoint": ckpt_id, "epoch": epoch_id})
+
+    return fold
 
 
 def anomaly_stateful(daily_counts: DataFrame,
