@@ -91,8 +91,8 @@ def test_bench_names_form(sf_smoke):
 
 
 def test_bench_isolate_drops_pins(spark, sf_smoke):
-    # theil_sen_daily_trend persists its pair relation
-    # (two_phase_kth(materialize=True)); without the isolation step
+    # theil_sen_daily_trend persists its pair relation (two_phase_kth
+    # pins its input); without the isolation step
     # bench.py's reps 2-3 read that cached relation
     sys.path.insert(0, REPO_ROOT)
     from bench import _isolate

@@ -431,8 +431,8 @@ def test_two_phase_ordered_cummax_matches_global_window(spark):
 
 # ---------------------------------------------------------------------------
 # two_phase_kth (r14) — exact global order statistic; must agree with
-# the naive global sort for every k, both materialize modes, and the
-# callable-k (rank defined on COUNT(*)) form used by conformal.
+# the naive global sort for every k and for the callable-k (rank
+# defined on COUNT(*)) form used by conformal.
 # ---------------------------------------------------------------------------
 
 def test_two_phase_kth_matches_global_sort(spark):
@@ -514,16 +514,16 @@ def test_two_phase_kth_multi_k_rank_and_n_cols(spark):
     assert {"rk", "n"} <= set(empty.columns)
 
 
-def test_two_phase_kth_ties_straddle_and_materialize_off(spark):
-    """All-equal bucket keys (bounds collapse to one bucket) and
-    materialize=False must both stay exact."""
+def test_two_phase_kth_ties_straddle(spark):
+    """All-equal bucket keys (bounds collapse to one bucket) must stay
+    exact."""
     from travel_data_pipeline_spark.operators import windows as W
 
     rows = [(i, 1.0) for i in range(50)]
     df = spark.createDataFrame(rows, "id long, v double")
     order = [F.col("v").asc(), F.col("id").asc()]
     got = W.two_phase_kth(df, order, F.col("v"), 17,
-                          num_buckets=8, materialize=False).collect()
+                          num_buckets=8).collect()
     assert len(got) == 1 and got[0]["id"] == 16
 
 

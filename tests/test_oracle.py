@@ -55,3 +55,22 @@ def test_every_query_has_oracle_or_reason():
                          "streaming_bronze_passthrough", "streaming_foreachbatch_merge"}
     unexpected = [m for m in missing if m not in allowed_rows_only]
     assert not unexpected, f"queries without oracle: {unexpected}"
+
+
+def test_registered_queries_take_spark_and_sf_dir():
+    """Every registered query honours the (spark, sf_dir) contract;
+    the only further parameters are the injection seams non-test
+    callers pass (tools/stress_*, dedup_scorecard), each defaulted."""
+    import inspect
+
+    from travel_data_pipeline_spark import registry
+
+    seams = {"units", "pairs"}
+    bad = []
+    for name, fn in registry.QUERIES.items():
+        params = list(inspect.signature(fn).parameters.values())
+        if [p.name for p in params[:2]] != ["spark", "sf_dir"] or any(
+                p.name not in seams or p.default is inspect.Parameter.empty
+                for p in params[2:]):
+            bad.append(f"{name}{inspect.signature(fn)}")
+    assert not bad, f"queries off the (spark, sf_dir) contract: {bad}"

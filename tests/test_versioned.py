@@ -84,6 +84,27 @@ def test_merge_null_partition_bucket_dedups(spark, tmp_path):
     assert now == [(1, None, 99.0), (2, "A", 20.0)]
 
 
+@pytest.mark.parametrize("days", [["2024-01-02", "2024-01-03", None],
+                                  ["007", "010"]])
+def test_partition_column_reads_back_as_written_string(spark, tmp_path,
+                                                       days):
+    """Date-like and zero-padded partition values come back as the
+    strings written, not as Spark's inferred DATE or integer, through
+    read_table and through merge_into's read of touched partitions;
+    a NULL value still reads as NULL."""
+    path = str(tmp_path / "days")
+    rows = list(enumerate(days))
+    V.write_table(spark.createDataFrame(rows, "id long, day string"),
+                  path, partition_col="day")
+    got = V.read_table(spark, path)
+    assert got.schema["day"].dataType.simpleString() == "string"
+    assert _rows(got.select("id", "day")) == rows
+    V.merge_into(spark.createDataFrame([(9, days[1])], "id long, day string"),
+                 path, keys=["id"])
+    assert _rows(V.read_table(spark, path).select("id", "day")) == \
+        rows + [(9, days[1])]
+
+
 def test_crash_before_pointer_swap_is_invisible(spark, seeded):
     # simulate a crash: v2 data + manifest written, _latest not swapped
     batch = spark.createDataFrame([(9, "A", 9.0)],
@@ -181,10 +202,8 @@ def recompute_rollup(ev):
 def assert_same_rows(got, want) -> None:
     """Equal as multisets, column by column in ``want``'s order: a
     grain duplicated in place of a missing one fails, where equal
-    counts plus a distinct union would pass it. ``day`` is compared as
-    a string (read_table infers a date from the partition dirs)."""
-    got = got.withColumn("day", got["day"].cast("string")) \
-        .select(*want.columns)
+    counts plus a distinct union would pass it."""
+    got = got.select(*want.columns)
     assert got.exceptAll(want).collect() == []
     assert want.exceptAll(got).collect() == []
 

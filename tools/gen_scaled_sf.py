@@ -25,8 +25,9 @@ Replication rules (schema-faithful, fully deterministic — no RNG):
   * timestamps, prices, labels, vectors are untouched: k-fold density
     over the same time range / value domain.
 
-Big tables are written as 16 files so scan parallelism at 8 vs 32
-cores is governed by splits, not a single-file scan.
+Big tables are written as max(16, 2 x usable CPUs) files so scan
+parallelism is governed by splits, not a single-file scan, on hosts of
+any size.
 """
 
 from __future__ import annotations
@@ -80,6 +81,8 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     os.makedirs(dst, exist_ok=True)
 
+    # same CPU count bench.py defaults to; 16 stays the floor
+    n_files = max(16, 2 * len(os.sched_getaffinity(0)))
     bases: dict[tuple[str, str], int] = {}
     for col, (tbl, pk) in KEY_BASE.items():
         if (tbl, pk) not in bases:
@@ -111,7 +114,7 @@ def main() -> None:
         out = reps[0]
         for rep in reps[1:]:
             out = out.unionByName(rep)
-        nf = 16 if tbl in MULTI_FILE else 1
+        nf = n_files if tbl in MULTI_FILE else 1
         (out.repartition(nf, *keycols[:1]).write.mode("overwrite")
          .parquet(f"{dst}/{tbl}.parquet"))
         n = spark.read.parquet(f"{dst}/{tbl}.parquet").count()

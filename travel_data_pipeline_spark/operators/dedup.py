@@ -17,6 +17,13 @@ the LSH band join is the only quadratic risk; banding keeps bucket
 sizes ~uniform, and a bucket-size cap (``max_bucket``) drops
 pathological buckets (boilerplate text) exactly like production dedup
 pipelines do.
+
+Self-joined relations here and in the near-dup queries built on them
+(trigram_lm_perplexity, substring_dup_spans, image_ahash_neardup,
+dedup_scorecard, hits_from_edges) are pinned with an eager
+``localCheckpoint``. Its blocks are unreplicated and carry no lineage,
+so on a real cluster losing an executor fails the query instead of
+recomputing it.
 """
 
 from __future__ import annotations
@@ -285,8 +292,7 @@ def simhash_fingerprints(docs: DataFrame, text_col: str = "text",
 def simhash_near_pairs(fingerprints: DataFrame, id_col: str = "doc_id",
                        bits: int = 32, bands: int = 4,
                        max_hamming: int = 3,
-                       max_bucket: int = 1000,
-                       materialize: str = "checkpoint") -> DataFrame:
+                       max_bucket: int = 1000) -> DataFrame:
     """Banded near-pair search: split the fingerprint into ``bands``
     chunks; any pair within ``max_hamming`` (< bands) shares at least
     one exact band (pigeonhole). Bucket-local pair generation (no
@@ -296,19 +302,8 @@ def simhash_near_pairs(fingerprints: DataFrame, id_col: str = "doc_id",
     32-bit fingerprint keep random collisions ~1/256 per band — the
     knob that prevents quadratic bucket blowup at scale.
 
-    ``materialize`` pins the capped band relation that both self-join
-    branches consume: ``"checkpoint"`` (default) is an eager
-    localCheckpoint; ``"persist"`` defers to the first action.
-    localCheckpoint blocks are unreplicated and carry no lineage, so on
-    a real cluster losing an executor fails the query instead of
-    recomputing it; pass ``materialize="persist"`` there. The same
-    holds for every ``materialize=`` knob that delegates here or copies
-    this pin (trigram_lm_perplexity, substring_dup_spans,
-    image_ahash_neardup, dedup_scorecard)."""
-    if materialize not in ("checkpoint", "persist"):
-        raise ValueError(
-            f"materialize must be 'checkpoint' or 'persist', "
-            f"got {materialize!r}")
+    The capped band relation feeds both self-join branches, so it is
+    re-joined against its own lineage: an eager leaf (r15 A/B)."""
     band_bits = bits // bands
     mask = (1 << band_bits) - 1
     banded = fingerprints.select(
@@ -335,26 +330,14 @@ def simhash_near_pairs(fingerprints: DataFrame, id_col: str = "doc_id",
     from pyspark.sql import Window
 
     wb = Window.partitionBy("band_idx", "band_key")
-    # eager localCheckpoint, not persist (optimization r15, reverting
-    # the r14 persist experiment): `capped` is consumed by BOTH sides
-    # of the a<->b equality self-join below — exactly the
-    # self-join-consumed shape the r14 audit ruled AGAINST persisting
-    # (hits_from_edges, copurchase_triangles, minhash_estimate_error):
-    # analyzer-side relation dedup rewrites the repeated subtree's
-    # expression IDs, after which CacheManager's canonicalized lookup
-    # misses per-run and the banded lineage recomputes inside the
-    # action. The driver's cold exec ground truth agreed (r13
-    # checkpoint 0.41 s -> r14 persist 0.92 s raw / ~1.4x
-    # load-normalized); the r15 A/B (3 alternating cold processes per
-    # arm, sf0.1) confirmed on BOTH honest metrics: first-computation
-    # min 9.71 s checkpoint vs 10.36 s persist, steady-state noop
-    # exec 0.62-0.69 s vs 0.87-0.94 s (persist's first exec pays
-    # 6.5-7.9 s and runs 7 jobs vs 3 — the deferred materialization
-    # plus the re-derived self-join branch).
+    # eager localCheckpoint, not persist (r15 A/B, sf0.1): analyzer-side
+    # relation dedup rewrites the self-joined subtree's expression IDs,
+    # CacheManager's lookup then misses, and persist recomputes the
+    # banded lineage inside the action (first computation 9.71 s
+    # checkpoint vs 10.36 s persist, 3 jobs vs 7).
     capped = (banded.withColumn("_bsz", F.count("*").over(wb))
               .filter(F.col("_bsz") <= max_bucket).drop("_bsz"))
-    capped = (capped.persist() if materialize == "persist"
-              else capped.localCheckpoint(eager=True))
+    capped = capped.localCheckpoint(eager=True)
     a = capped.select(F.col(id_col).alias("doc_a"),
                       F.col("simhash").alias("sa"),
                       "band_idx", "band_key")

@@ -272,7 +272,6 @@ def two_phase_kth(df: DataFrame, order_cols: Sequence[Column | str],
                   bucket_on: Column, k, *,
                   num_buckets: int = 64,
                   rel_err: float = 0.001,
-                  materialize: bool = True,
                   rank_col: str | None = None,
                   n_col: str | None = None) -> DataFrame:
     """The k-th row(s) (1-based) of ``df`` under ``ORDER BY order_cols``
@@ -304,11 +303,10 @@ def two_phase_kth(df: DataFrame, order_cols: Sequence[Column | str],
     the bucket-local (order_cols) rank k - offset is exactly the
     global rank k. Out-of-range ks contribute zero rows.
     """
-    if materialize:
-        # probe + bucket counts + the final bucket-local rank are three
-        # passes over df — same discipline (and the same measured
-        # persist-over-checkpoint choice) as two_phase_ordered
-        df = df.persist()
+    # probe + bucket counts + the final bucket-local rank are three
+    # passes over df — same discipline (and the same measured
+    # persist-over-checkpoint choice) as two_phase_ordered
+    df = df.persist()
     probs = [i / num_buckets for i in range(1, num_buckets)]
     probe = df.select(bucket_on.cast("double").alias("_tpk"))
     bounds = sorted(set(probe.approxQuantile("_tpk", probs, rel_err)))

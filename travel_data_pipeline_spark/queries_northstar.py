@@ -341,12 +341,10 @@ SELECT doc_a, doc_b, hamming FROM (
      AND a.doc_id < b.doc_id
 ) WHERE hamming <= 3
 """)
-def simhash_near_pairs(spark: SparkSession, sf_dir: str,
-                       materialize: str = "checkpoint") -> DataFrame:
+def simhash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _augmented_docs(spark, sf_dir)
     fp = dedup.simhash_fingerprints(docs)
-    return dedup.simhash_near_pairs(fp, max_bucket=MAX_BUCKET,
-                                    materialize=materialize)
+    return dedup.simhash_near_pairs(fp, max_bucket=MAX_BUCKET)
 
 
 # ---------------------------------------------------------------------------

@@ -1050,20 +1050,12 @@ WHERE bit_count(xor(fa.band0, fb.band0))
 
 
 @register("image_ahash_neardup", _ahash_oracle)
-def image_ahash_neardup(spark: SparkSession, sf_dir: str,
-                        materialize: str = "checkpoint") -> DataFrame:
+def image_ahash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """aHash near-dup pairs over the synthesized media table.
 
-    ``materialize`` pins the fingerprint relation consumed by THREE
-    join legs (cand via the banding, fa, fb): ``"checkpoint"``
-    (default) is an eager localCheckpoint, ``"persist"`` the r14
-    experiment — see the site comment for the r15 A/B verdict.
-    Unreplicated checkpoint blocks on a cluster: see
-    ``operators.dedup.simhash_near_pairs``."""
-    if materialize not in ("checkpoint", "persist"):
-        raise ValueError(
-            f"materialize must be 'checkpoint' or 'persist', "
-            f"got {materialize!r}")
+    The fingerprint relation feeds THREE join legs (cand via the
+    banding, fa, fb), so it is re-joined against its own lineage: an
+    eager leaf (r15 A/B)."""
     from travel_data_pipeline_spark.operators import dedup
     from travel_data_pipeline_spark.operators.multimodal import (
         ahash_bands,
@@ -1084,17 +1076,9 @@ def image_ahash_neardup(spark: SparkSession, sf_dir: str,
     # once across banding and verification
     media = media.repartition(spark.sparkContext.defaultParallelism,
                               "media_id")
-    # eager localCheckpoint, not persist (optimization r15): `fps`
-    # feeds a 3-leg self-join (cand embeds the banding lineage, then
-    # joins fa and fb — the copurchase_triangles shape the r14 audit
-    # reverted): relation dedup can rewrite the repeated subtrees past
-    # CacheManager's canonical match and the Arrow fingerprint pass
-    # re-runs inside the action. The r14 persist A/B (1.61 -> 0.98 s)
-    # ran on a contended box; the r15 idle A/B reversed it — see the
-    # A/B table in OPTIMIZATION_r15.md.
-    fps = ahash_fingerprints(media)
-    fps = (fps.persist() if materialize == "persist"
-           else fps.localCheckpoint(eager=True))
+    # the r14 persist A/B (1.61 -> 0.98 s) ran on a contended box; the
+    # r15 idle A/B reversed it (OPTIMIZATION_r15.md)
+    fps = ahash_fingerprints(media).localCheckpoint(eager=True)
     banded = ahash_bands(fps)
     cand = (dedup.bucket_pairs(banded, ["band_idx", "band_val"],
                                F.struct(F.col("media_id").alias("id")),

@@ -1862,8 +1862,7 @@ FROM sw_q WHERE threshold = {_DS_TAU}
 
 
 @register("dedup_scorecard", _dedup_scorecard_oracle)
-def dedup_scorecard(spark: SparkSession, sf_dir: str,
-                    materialize: str = "checkpoint") -> DataFrame:
+def dedup_scorecard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(method, n_pairs, n_docs_flagged, flag_rate) scorecard over the
     registered dedup audits.
 
@@ -1874,20 +1873,9 @@ def dedup_scorecard(spark: SparkSession, sf_dir: str,
     signature+banding work. Measured at sf0.01 (best-of-3 warm):
     build+exec 4.5+1.7s before -> 3.5+1.7s after (~16% total).
 
-    ``materialize`` picks the pin for the injected relation:
-    ``"checkpoint"`` (default, optimization r15) because the
-    containment consumer re-joins lsh_pairs against the shingle
-    relation EMBEDDED IN ITS OWN LINEAGE — the r14 self-join boundary
-    (and the standalone containment_pairs path already measured
-    checkpoint ahead for exactly this consumer); ``"persist"`` keeps
-    the r08-r14 variant re-testable. A/B r15 (alternating cold
-    processes, sf0.1): see OPTIMIZATION_r15.md. Unreplicated
-    checkpoint blocks on a cluster: see
-    ``operators.dedup.simhash_near_pairs``."""
-    if materialize not in ("checkpoint", "persist"):
-        raise ValueError(
-            f"materialize must be 'checkpoint' or 'persist', "
-            f"got {materialize!r}")
+    The containment consumer re-joins the injected lsh_pairs against
+    the shingle relation embedded in its own lineage, so an eager leaf
+    (r15 A/B)."""
     from travel_data_pipeline_spark.queries_northstar import (
         containment_pairs,
         dedup_minhash_lsh,
@@ -1924,9 +1912,7 @@ def dedup_scorecard(spark: SparkSession, sf_dir: str,
                      F.round(F.col("n_flagged").cast("double")
                              / F.col("n_docs").cast("double"), 6)
                      .alias("flag_rate")))
-    lsh_pairs = dedup_minhash_lsh(spark, sf_dir)
-    lsh_pairs = (lsh_pairs.persist() if materialize == "persist"
-                 else lsh_pairs.localCheckpoint(eager=True))
+    lsh_pairs = dedup_minhash_lsh(spark, sf_dir).localCheckpoint(eager=True)
     mh = pair_row(lsh_pairs, "minhash_lsh")
     sh = pair_row(simhash_near_pairs(spark, sf_dir), "simhash")
     ct = pair_row(containment_pairs(spark, sf_dir, pairs=lsh_pairs),

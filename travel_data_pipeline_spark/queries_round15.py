@@ -329,8 +329,7 @@ SELECT 'authority' AS role, node AS node_id,
 
 def hits_from_edges(spark: SparkSession, edges: DataFrame,
                     n_iter: int = _HITS_ITER,
-                    iter_seconds: list | None = None,
-                    materialize: str | None = None) -> DataFrame:
+                    iter_seconds: list | None = None) -> DataFrame:
     """The HITS power-iteration body over an (s, p, w) edge relation —
     factored out so tools/stress_hits.py can drive the REGISTERED code
     path at a synthetic 10M-edge graph (VERDICT r10 #5).
@@ -341,50 +340,13 @@ def hits_from_edges(spark: SparkSession, edges: DataFrame,
     flat values certify the lag-1 materialization pattern keeps
     lineage from re-growing across iterations.
 
-    ``materialize`` (optimization r14, guide §5): ``"persist"`` pins
-    each double-referenced relation (edges; per-iteration raw scores,
-    consumed by the max normalizer AND the normalized output) with
-    ``persist()`` so the whole 3-iteration recursion becomes ONE
-    action. MEASURED NEGATIVE as the default (interleaved A/B at
-    sf0.1): the first full computation ran 12.6 -> 20.9 s because the
-    iterative self-join (edges joins a hub/auth whose lineage embeds
-    edges) forces analyzer-side relation deduplication, after which
-    the rewritten subtrees no longer canonically match the cache and
-    the 2^k re-derivation the per-iteration pins exist to prevent
-    comes back. The eager-checkpoint default stands — each iteration
-    plans against a materialized LEAF, which no dedup rewrite can
-    un-match. Outputs of the two modes are bit-identical
-    (test_hits_persist_mode_bit_equals_checkpoint_mode); a list in
-    ``iter_seconds`` also forces checkpoint mode because only eager
-    per-iteration actions give the stress harness real per-round
-    walls.
+    Edges and each per-iteration raw-score relation are re-joined
+    against their own lineage, so each is an eager leaf (r15 A/B).
     """
     import time as _time
 
-    if materialize is None:
-        materialize = "checkpoint"
-    # ADVICE r14: a typo'd mode must fail loudly, and an explicit
-    # persist request cannot silently coexist with iter_seconds
-    # (which REQUIRES eager per-iteration actions to mean anything)
-    if materialize not in ("checkpoint", "persist"):
-        raise ValueError(
-            f"materialize must be 'checkpoint' or 'persist', "
-            f"got {materialize!r}")
-    if iter_seconds is not None:
-        if materialize == "persist":
-            raise ValueError(
-                "iter_seconds requires materialize='checkpoint': "
-                "per-iteration walls only bracket real work when each "
-                "iteration ends on an eager action")
-        materialize = "checkpoint"
-
-    def _pin(df: DataFrame) -> DataFrame:
-        if materialize == "persist":
-            return df.persist()
-        return df.localCheckpoint(eager=True)
-
     n_part = spark.sparkContext.defaultParallelism
-    edges = _pin(edges.repartition(n_part, "p"))
+    edges = edges.repartition(n_part, "p").localCheckpoint(eager=True)
     hub = edges.select("s").distinct().select(
         F.col("s").alias("node"), F.lit(1.0).alias("v"))
     auth = None
@@ -395,17 +357,19 @@ def hits_from_edges(spark: SparkSession, edges: DataFrame,
         # doubles per normalization (2^6 re-derivations; the same
         # value+max double-reference the oracle needed MATERIALIZED
         # for; plan audit read 660 exchanges before this)
-        ar = _pin(edges.join(hub, edges.s == hub.node)
-                  .groupBy(edges.p.alias("node"))
-                  .agg(ordered_sum(edges.w * F.col("v"), edges.s.alias("s"))
-                       .alias("r")))
+        ar = (edges.join(hub, edges.s == hub.node)
+              .groupBy(edges.p.alias("node"))
+              .agg(ordered_sum(edges.w * F.col("v"), edges.s.alias("s"))
+                   .alias("r"))
+              .localCheckpoint(eager=True))
         am = ar.agg(F.max("r").alias("m"))
         auth = (ar.crossJoin(F.broadcast(am))
                 .select("node", (F.col("r") / F.col("m")).alias("v")))
-        hr = _pin(edges.join(auth, edges.p == auth.node)
-                  .groupBy(edges.s.alias("node"))
-                  .agg(ordered_sum(edges.w * F.col("v"), edges.p.alias("p"))
-                       .alias("r")))
+        hr = (edges.join(auth, edges.p == auth.node)
+              .groupBy(edges.s.alias("node"))
+              .agg(ordered_sum(edges.w * F.col("v"), edges.p.alias("p"))
+                   .alias("r"))
+              .localCheckpoint(eager=True))
         hm = hr.agg(F.max("r").alias("m"))
         hub = (hr.crossJoin(F.broadcast(hm))
                .select("node", (F.col("r") / F.col("m")).alias("v")))

@@ -1573,9 +1573,7 @@ ORDER BY exp(-lp / n_tri) DESC, doc_id LIMIT {_TRI_TOPK}
 
 
 @register("trigram_lm_perplexity", lambda: _trigram_oracle())
-def trigram_lm_perplexity(spark: SparkSession,
-                          sf_dir: str,
-                          materialize: str = "checkpoint") -> DataFrame:
+def trigram_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Add-1-smoothed trigram LM perplexity per document, top-20
     hardest docs. Trigrams via the LINEAR two-lead zip-with-tail
     pairing; counts are corpus groupBys; the per-doc ln-probability
@@ -1585,18 +1583,18 @@ def trigram_lm_perplexity(spark: SparkSession,
     docs = load_table(spark, sf_dir, "documents")
     arrs = docs.select("doc_id",
                        text.token_array(F.col("text")).alias("t"))
-    return trigram_lm_from_arrays(spark, arrs, materialize=materialize)
+    return trigram_lm_from_arrays(spark, arrs)
 
 
 def trigram_lm_from_arrays(spark: SparkSession, arrs: DataFrame,
-                           topk: int = _TRI_TOPK,
-                           materialize: str = "checkpoint") -> DataFrame:
+                           topk: int = _TRI_TOPK) -> DataFrame:
     """Trigram-LM body over (doc_id, t array<string>) rows — the
     stress seam (stress_textops drives it at a 5M-doc corpus). One
     linear pair pass, two corpus groupBys (c3/c2 keyed on trigram /
     bigram prefixes), position-pinned per-doc folds, TakeOrdered
-    top-k. ``materialize`` picks the pin; unreplicated checkpoint
-    blocks on a cluster: see ``operators.dedup.simhash_near_pairs``."""
+    top-k. The trigram relation is re-joined against its own lineage
+    (scored = tri JOIN terms, terms derived from c3 <- tri), so an
+    eager leaf (r15 A/B)."""
     ln3 = F.greatest(F.size("t") - 2, F.lit(0))
     tri = (arrs.select(
         "doc_id",
@@ -1613,24 +1611,10 @@ def trigram_lm_from_arrays(spark: SparkSession, arrs: DataFrame,
         .select("doc_id", (F.col("pos0") + 1).alias("pos"),
                 F.col("g.w1").alias("w1"), F.col("g.w2").alias("w2"),
                 F.col("g.w3").alias("w3"))
-        # eager localCheckpoint, not persist (optimization r15,
-        # reversing r14's persist-over-lazy-ckpt choice): tri IS
-        # re-joined against its own lineage (scored = tri JOIN terms,
-        # terms derived from c3 <- tri) — the r14 self-join boundary.
-        # The r15 A/B (3 alternating cold processes per arm, sf0.1,
-        # contaminated-calib runs excluded) caught the persist arm's
-        # cache matching failing intermittently: first noop exec
-        # 6.98-12.49 s persist vs 2.94-3.29 s checkpoint;
-        # first-computation min 9.59 vs 7.56 s; steady exec 1.31 vs
-        # 1.23 s. r14's 1.80 -> 1.39 A/B compared persist against the
-        # LAZY checkpoint only — the eager leaf beats both.
-        )
-    if materialize not in ("checkpoint", "persist"):
-        raise ValueError(
-            f"materialize must be 'checkpoint' or 'persist', "
-            f"got {materialize!r}")
-    tri = (tri.persist() if materialize == "persist"
-           else tri.localCheckpoint(eager=True))
+        # r15 A/B, sf0.1: persist's cache matching failed
+        # intermittently (first exec 6.98-12.49 s vs 2.94-3.29 s
+        # checkpoint); r14's persist win was against the LAZY checkpoint
+        .localCheckpoint(eager=True))
     c3 = tri.groupBy("w1", "w2", "w3").agg(
         F.count("*").cast("long").alias("c3"))
     # r14 (guide §2.3/§3.3): fold the bigram count INTO the

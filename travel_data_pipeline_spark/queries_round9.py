@@ -371,25 +371,23 @@ SELECT p.doc_id, CAST(s.n_grams AS BIGINT) AS n_grams,
        {round_sql("p.dup_grams / CAST(s.n_grams AS DOUBLE)")} AS dup_share
 FROM per_doc p JOIN sizes s ON s.doc_id = p.doc_id
 """)
-def substring_dup_spans(spark: SparkSession, sf_dir: str,
-                        materialize: str = "checkpoint") -> DataFrame:
+def substring_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Maximal cross-document duplicated 5-gram runs per document
     (docs with no duplicated gram are omitted — inner-join semantics
     on both sides; docs under 5 words carry no gram slots at all).
 
     Islands: within a document, consecutive duplicated positions share
     pos - row_number() — one partitioned window, one bounded groupBy.
-    ``materialize`` picks the gram pin; unreplicated checkpoint blocks
-    on a cluster: see ``operators.dedup.simhash_near_pairs``.
+    The gram relation is re-joined against its own lineage, so an
+    eager leaf (r15 A/B).
     """
     from travel_data_pipeline_spark.operators import dedup
 
     # spread the single-file scan before the CPU-heavy gram explode
     # (engine-wide design rule; same spelling as dedup.shingle_sets),
-    # and persist grams across its THREE consumers (sizes, dup
-    # detection, position join): recompute measured 2.02 s vs 1.27 s
-    # persisted at sf0.1 warm — unlike the r05/r06 persist
-    # experiments, the md5-gram explode is CPU-bound enough to win
+    # and pin grams across its THREE consumers (sizes, dup detection,
+    # position join): recompute measured 2.02 s vs 1.27 s pinned at
+    # sf0.1 warm — the md5-gram explode is CPU-bound enough to win
     docs = load_table(spark, sf_dir, "documents").repartition(
         spark.sparkContext.defaultParallelism, "doc_id")
     grams = (docs.select(
@@ -398,20 +396,8 @@ def substring_dup_spans(spark: SparkSession, sf_dir: str,
          .alias("p0", "g"))
         .select("doc_id", (F.col("p0") + 1).alias("pos"),
                 md5_long(F.col("g")).alias("gh")))
-    # r15 self-join-rule audit: grams is re-joined against its own
-    # lineage (dpos = grams JOIN dup, dup derived from grams), the
-    # shape that can defeat CacheManager matching. A/B (3 alternating
-    # cold processes per arm, sf0.1): eager checkpoint wins
-    # first-computation 7.94 vs 9.21 s min (persist's first exec pays
-    # 6.78-8.15 s re-deriving the gram explode inside the action);
-    # steady exec a near-tie (ckpt 1.08-1.23 vs persist 1.00-1.50).
-    # Checkpoint default per the r14 first-computation bar.
-    if materialize not in ("checkpoint", "persist"):
-        raise ValueError(
-            f"materialize must be 'checkpoint' or 'persist', "
-            f"got {materialize!r}")
-    grams = (grams.persist() if materialize == "persist"
-             else grams.localCheckpoint(eager=True))
+    # r15 A/B, sf0.1 first computation: 7.94 s checkpoint vs 9.21 s persist
+    grams = grams.localCheckpoint(eager=True)
     sizes = grams.groupBy("doc_id").agg(F.count("*").alias("n_grams"))
     dup = (grams.groupBy("gh")
            .agg(F.countDistinct("doc_id").alias("nd"))

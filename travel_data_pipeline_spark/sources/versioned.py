@@ -39,6 +39,7 @@ import os
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StringType, StructField, StructType
 
 VERSION_DIR_COL = "tdpv"  # internal hive key for snapshot dirs
 _NO_PART = "__all__"
@@ -141,21 +142,36 @@ def _partition_dirs(path: str, man: dict, parts) -> list[str]:
                    for p in parts})
 
 
+def _read_parts(spark: SparkSession, path: str, man: dict, parts,
+                **options: str) -> DataFrame:
+    """The rows of ``parts`` (partition values of manifest ``man``).
+    Partition dirs are passed explicitly with a shared basePath, so
+    partition columns come back and scans prune per-dir. The partition
+    column comes back as the string its directory was written with:
+    Spark would infer its type (``2024-01-02`` reads as a DATE, ``007``
+    as the integer 7), so the inferred schema is re-read with that
+    column typed string."""
+    reader = spark.read.options(basePath=_data_dir(path), **options)
+    dirs = _partition_dirs(path, man, parts)
+    pcol = man["partition_col"]
+    if pcol:
+        reader = reader.schema(StructType([
+            StructField(f.name, StringType()) if f.name == pcol else f
+            for f in reader.parquet(*dirs).schema]))
+    return reader.parquet(*dirs).drop(VERSION_DIR_COL)
+
+
 def read_table(spark: SparkSession, path: str,
                version: int | None = None) -> DataFrame:
-    """The table as of ``version`` (default: latest). Partition dirs
-    are passed explicitly with a shared basePath, so partition columns
-    come back and scans prune per-dir."""
+    """The table as of ``version`` (default: latest)."""
     v = version if version is not None else current_version(path)
     if v < 1:
         raise FileNotFoundError(f"no committed version at {path}")
     man = _read_manifest(path, v)
     # mergeSchema: snapshots written before an additive schema change
     # surface the new columns as NULL
-    return (spark.read.option("basePath", _data_dir(path))
-            .option("mergeSchema", "true")
-            .parquet(*_partition_dirs(path, man, man["partitions"]))
-            .drop(VERSION_DIR_COL))
+    return _read_parts(spark, path, man, man["partitions"],
+                       mergeSchema="true")
 
 
 def merge_into(source: DataFrame, path: str, keys: list[str],
@@ -207,9 +223,7 @@ def merge_into(source: DataFrame, path: str, keys: list[str],
             touched.append(_NULL_PART)
         existing = [p for p in touched if p in man["partitions"]]
         if existing:
-            current = (spark.read.option("basePath", _data_dir(path))
-                       .parquet(*_partition_dirs(path, man, existing))
-                       .drop(VERSION_DIR_COL))
+            current = _read_parts(spark, path, man, existing)
         else:
             current = source.limit(0)
         relevant = source
