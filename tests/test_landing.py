@@ -33,15 +33,16 @@ def raw_dir(tmp_path_factory):
 
 def test_landed_exchange_equals_fixture_path(spark, raw_dir):
     cells = landing.read_exchange_cells_raw(spark, str(raw_dir / "cells.jsonl"))
-    master = FX.to_spark(spark, FX.COUNTRY_MASTER_ROWS, FX.COUNTRY_MASTER_SCHEMA)
+    master = FX.local_relation(spark, FX.COUNTRY_MASTER_ROWS,
+                               FX.COUNTRY_MASTER_SCHEMA)
     assert _rows(exchange_scores_from(cells, master)) == \
         _rows(exchange_scores(spark))
 
 
 def test_landed_trends_equals_fixture_path(spark, raw_dir):
     trends = landing.read_trends_raw(spark, str(raw_dir / "trends.jsonl"))
-    alias_dim = FX.to_spark(spark, FX.COUNTRY_ALIAS_ROWS,
-                            FX.COUNTRY_ALIAS_SCHEMA)
+    alias_dim = FX.local_relation(spark, FX.COUNTRY_ALIAS_ROWS,
+                                  FX.COUNTRY_ALIAS_SCHEMA)
     assert _rows(trend_scores_from(trends, alias_dim)) == \
         _rows(trend_scores(spark))
 

@@ -12,7 +12,8 @@ from travel_data_pipeline_spark.sources.readers import load_table
 
 
 def _master(spark):
-    return FX.to_spark(spark, FX.COUNTRY_MASTER_ROWS, FX.COUNTRY_MASTER_SCHEMA)
+    return FX.local_relation(spark, FX.COUNTRY_MASTER_ROWS,
+                             FX.COUNTRY_MASTER_SCHEMA)
 
 
 def test_currency_fanout_multiplicity(spark):
@@ -31,7 +32,8 @@ def test_standardize_join_defaults(spark):
     """J3: suffix strip + alias lookup; misses fill Unknown defaults."""
     facts = spark.createDataFrame(
         [("미국 여행",), ("무명국 여행",)], "keyword string")
-    alias_dim = FX.to_spark(spark, FX.COUNTRY_ALIAS_ROWS, FX.COUNTRY_ALIAS_SCHEMA)
+    alias_dim = FX.local_relation(spark, FX.COUNTRY_ALIAS_ROWS,
+                                  FX.COUNTRY_ALIAS_SCHEMA)
     out = joins.standardize_join(
         facts, alias_dim, "keyword",
         defaults={"korean_name": "Unknown_Korean", "country_code_3": "N/A"})

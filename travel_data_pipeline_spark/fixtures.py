@@ -1,17 +1,25 @@
 """Inline domain fixtures (FIXTURES.md §B) shared by the Spark queries
 and their DuckDB oracles.
 
-One Python literal per fixture; ``to_spark`` materializes it as a
-DataFrame and ``values_cte`` renders the *same rows* as a SQL VALUES
-clause — so both engines provably consume identical inputs. Every
-edge case the reference exhibits is present and flagged with a comment.
+One Python literal per fixture, rendered for both engines from the
+*same rows*, so both provably consume identical inputs:
+``local_relation`` turns it into a Spark ``LocalRelation`` (an inline
+``VALUES`` table cast to the fixture's DDL schema, scanned in the JVM
+with no Python worker) and ``values_cte`` into the DuckDB oracle's
+VALUES clause. ``local_relation`` is also the package's one way to turn
+any driver-side Python list (a parameter grid, a driver-computed result)
+into a DataFrame. Every edge case the reference exhibits is present and
+flagged with a comment.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
+import math
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 # ---------------------------------------------------------------------------
 # B1 — country_master (mirrors config/master_country_crawler.json shape)
@@ -248,19 +256,79 @@ def duck_literal(v) -> str:
 # ---------------------------------------------------------------------------
 
 
-def to_spark(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
-    return spark.createDataFrame(rows, schema)
+def local_relation(spark: SparkSession, rows, schema: str) -> DataFrame:
+    """``rows`` as a JVM-side ``LocalRelation`` typed exactly as the DDL
+    ``schema``: an inline ``VALUES`` table of typed literals, cast per
+    column. Nothing is pickled and no Python worker runs when it is
+    scanned (``createDataFrame(list)`` builds a Python RDD instead).
+
+    A row, like a struct value, is a tuple in field order or a dict
+    keyed by field name. Timestamps are wall times in the session time
+    zone, not the host's."""
+    st = T.StructType.fromDDL(schema)
+    cols = [f"c{i}" for i in range(len(st.fields))]
+    body = ", ".join("(" + ", ".join(_field_literals(r, st)) + ")"
+                     for r in rows or [[None] * len(cols)])
+    df = spark.sql(f"SELECT * FROM VALUES {body} AS t({', '.join(cols)})")
+    if not rows:
+        df = df.limit(0)
+    return df.select([F.col(c).cast(f.dataType).alias(f.name)
+                      for c, f in zip(cols, st.fields)])
+
+
+_INT_SUFFIX = {"int": "", "bigint": "L"}
+
+
+def _field_literals(v, st: T.StructType) -> list[str]:
+    vals = [v.get(n) for n in st.names] if isinstance(v, dict) else v
+    if len(vals) != len(st.fields):
+        raise ValueError(f"{len(vals)} values for {st.simpleString()}")
+    return [_spark_literal(x, f.dataType) for x, f in zip(vals, st.fields)]
+
+
+def _spark_literal(v, dt: T.DataType) -> str:
+    """A Spark SQL literal of exactly type ``dt`` holding ``v``."""
+    t = dt.simpleString()
+    if v is None:
+        return f"CAST(NULL AS {t})"
+    if isinstance(dt, T.StructType):
+        return "named_struct(" + ", ".join(
+            f"{_spark_literal(f.name, T.StringType())}, {x}"
+            for f, x in zip(dt.fields, _field_literals(v, dt))) + ")"
+    if isinstance(dt, T.ArrayType):
+        items = ", ".join(_spark_literal(x, dt.elementType) for x in v)
+        return f"CAST(array({items}) AS {t})" if not v else f"array({items})"
+    if isinstance(dt, T.BooleanType):
+        return "TRUE" if v else "FALSE"
+    if t in _INT_SUFFIX:
+        return f"{int(v)}{_INT_SUFFIX[t]}"
+    if isinstance(dt, T.DoubleType):
+        # repr: the shortest round-trip spelling; nan, inf, -0.0 as well
+        return f"CAST('{float(v)!r}' AS {t})"
+    if isinstance(dt, T.DecimalType):
+        return f"CAST('{v}' AS {t})"
+    if isinstance(dt, T.StringType):
+        return "'" + str(v).replace("\\", "\\\\").replace("'", "\\'") + "'"
+    if isinstance(dt, T.DateType):
+        return f"DATE '{v.isoformat()}'"
+    if isinstance(dt, T.TimestampType):
+        return f"TIMESTAMP '{v.isoformat(' ')}'"
+    raise TypeError(f"local_relation: no literal for {t}")
 
 
 def _sql_literal(v) -> str:
+    """A DuckDB literal for a scalar fixture value (``values_cte``)."""
     if v is None:
         return "NULL"
     if isinstance(v, bool):
         return "TRUE" if v else "FALSE"
+    if isinstance(v, float) and (not math.isfinite(v) or (
+            v == 0.0 and math.copysign(1.0, v) < 0)):
+        return f"'{v!r}'::DOUBLE"  # bare nan/inf is no literal; -0.0 reads 0
     if isinstance(v, (int, float)):
         return repr(v)
     if isinstance(v, _dt.datetime):
-        return f"TIMESTAMP '{v:%Y-%m-%d %H:%M:%S}'"
+        return f"TIMESTAMP '{v.isoformat(' ')}'"
     s = str(v).replace("'", "''")
     return f"'{s}'"
 

@@ -64,8 +64,10 @@ def exchange_scores_from(cells: DataFrame, master: DataFrame) -> DataFrame:
 
 def exchange_scores(spark: SparkSession, sf_dir: str = "") -> DataFrame:
     """Country-grain exchange records with change% + score."""
-    cells = FX.to_spark(spark, FX.EXCHANGE_CELLS_ROWS, FX.EXCHANGE_CELLS_SCHEMA)
-    master = FX.to_spark(spark, FX.COUNTRY_MASTER_ROWS, FX.COUNTRY_MASTER_SCHEMA)
+    cells = FX.local_relation(spark, FX.EXCHANGE_CELLS_ROWS,
+                               FX.EXCHANGE_CELLS_SCHEMA)
+    master = FX.local_relation(spark, FX.COUNTRY_MASTER_ROWS,
+                                FX.COUNTRY_MASTER_SCHEMA)
     return exchange_scores_from(cells, master)
 
 
@@ -86,8 +88,10 @@ def monthly_map_from(cells: DataFrame, master: DataFrame) -> DataFrame:
 
 
 def monthly_map_long(spark: SparkSession, sf_dir: str = "") -> DataFrame:
-    cells = FX.to_spark(spark, FX.EXCHANGE_CELLS_ROWS, FX.EXCHANGE_CELLS_SCHEMA)
-    master = FX.to_spark(spark, FX.COUNTRY_MASTER_ROWS, FX.COUNTRY_MASTER_SCHEMA)
+    cells = FX.local_relation(spark, FX.EXCHANGE_CELLS_ROWS,
+                               FX.EXCHANGE_CELLS_SCHEMA)
+    master = FX.local_relation(spark, FX.COUNTRY_MASTER_ROWS,
+                                FX.COUNTRY_MASTER_SCHEMA)
     return monthly_map_from(cells, master)
 
 
@@ -162,7 +166,8 @@ def exchange_scores_stream(spark: SparkSession, cells_stream: DataFrame) -> Data
             .groupBy("currency_code")
             .agg(*[F.max(F.when(F.col("rate_type") == rt, F.col("rate")))
                    .alias(rt) for rt in RATE_TYPES]))
-    master = FX.to_spark(spark, FX.COUNTRY_MASTER_ROWS, FX.COUNTRY_MASTER_SCHEMA)
+    master = FX.local_relation(spark, FX.COUNTRY_MASTER_ROWS,
+                                FX.COUNTRY_MASTER_SCHEMA)
     joined = wide.join(F.broadcast(master), "currency_code", "inner")
     rt, yr = F.col("realtime"), F.col("yearly_avg")
     return joined.select(

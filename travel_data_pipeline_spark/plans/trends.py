@@ -49,7 +49,7 @@ def keyword_stats_from(t: DataFrame) -> DataFrame:
 
 def keyword_stats(spark: SparkSession) -> DataFrame:
     return keyword_stats_from(
-        FX.to_spark(spark, FX.TRENDS_ROWS, FX.TRENDS_SCHEMA))
+        FX.local_relation(spark, FX.TRENDS_ROWS, FX.TRENDS_SCHEMA))
 
 
 def _growth(recent, prior, anchor: bool):
@@ -117,9 +117,9 @@ def trend_scores_from(trends_long: DataFrame,
 
 
 def trend_scores(spark: SparkSession, sf_dir: str = "") -> DataFrame:
-    trends_long = FX.to_spark(spark, FX.TRENDS_ROWS, FX.TRENDS_SCHEMA)
-    alias_dim = FX.to_spark(spark, FX.COUNTRY_ALIAS_ROWS,
-                            FX.COUNTRY_ALIAS_SCHEMA)
+    trends_long = FX.local_relation(spark, FX.TRENDS_ROWS, FX.TRENDS_SCHEMA)
+    alias_dim = FX.local_relation(spark, FX.COUNTRY_ALIAS_ROWS,
+                                  FX.COUNTRY_ALIAS_SCHEMA)
     return trend_scores_from(trends_long, alias_dim)
 
 
@@ -137,7 +137,7 @@ def marked_trends(spark: SparkSession) -> DataFrame:
     """The fixture series with the pytrends-shaped isPartial marker:
     the last observation of each (group, keyword) series is the
     still-accumulating partial bucket."""
-    t = FX.to_spark(spark, FX.TRENDS_ROWS, FX.TRENDS_SCHEMA)
+    t = FX.local_relation(spark, FX.TRENDS_ROWS, FX.TRENDS_SCHEMA)
     w = Window.partitionBy("group_id", "keyword")
     return t.withColumn("isPartial",
                         F.col("ts") == F.max("ts").over(w))
@@ -158,9 +158,9 @@ def keyword_coverage(spark: SparkSession, sf_dir: str = "") -> DataFrame:
     skipped. Expressed as a left join of the requested sets against
     the returned series, with the warn+skip policy as a status column
     (an audit relation instead of a log line)."""
-    requested = FX.to_spark(spark, FX.TRENDS_REQUESTED_ROWS,
-                            FX.TRENDS_REQUESTED_SCHEMA)
-    t = FX.to_spark(spark, FX.TRENDS_ROWS, FX.TRENDS_SCHEMA)
+    requested = FX.local_relation(spark, FX.TRENDS_REQUESTED_ROWS,
+                                  FX.TRENDS_REQUESTED_SCHEMA)
+    t = FX.local_relation(spark, FX.TRENDS_ROWS, FX.TRENDS_SCHEMA)
     returned = (t.groupBy("group_id", "keyword")
                 .agg(F.count("interest").cast("int").alias("n_obs")))
     return (requested.join(F.broadcast(returned),

@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from travel_data_pipeline_spark.fixtures import local_relation
 from travel_data_pipeline_spark.functions import scalars as X
 from travel_data_pipeline_spark.operators.aggregates import dec_avg, dec_sum
 from travel_data_pipeline_spark.operators.joins import anti, broadcast_left, semi
@@ -946,7 +947,8 @@ def nullsafe_join_props(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id",
         F.when(raw_k % 10 == 0, F.lit(None)).otherwise(raw_k % 3)
          .cast("int").alias("k"))
-    dim = ev.sparkSession.createDataFrame(
+    dim = local_relation(
+        ev.sparkSession,
         [(0, "zero"), (1, "one"), (2, "two"), (None, "missing")],
         "k int, label string")
     return (keyed.join(F.broadcast(dim),

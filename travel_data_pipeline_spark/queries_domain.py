@@ -126,7 +126,7 @@ def flatten_flights(raw: DataFrame) -> DataFrame:
 @register("flight_nested_flatten", _flight_flatten_oracle())
 def flight_nested_flatten(spark: SparkSession, sf_dir: str) -> DataFrame:
     return flatten_flights(
-        spark.createDataFrame(FX.FLIGHT_ROWS, FX.FLIGHT_SCHEMA))
+        FX.local_relation(spark, FX.FLIGHT_ROWS, FX.FLIGHT_SCHEMA))
 
 
 # ---------------------------------------------------------------------------
@@ -181,7 +181,8 @@ def f8_dropna_meta_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     survives — the exact pandas-dropna(subset=...) semantics of
     _archive/flight_avg_merge.py:95."""
     flat = flight_nested_flatten(spark, sf_dir)
-    meta = spark.createDataFrame(_DST_REGION_ROWS, list(_DST_REGION_COLS))
+    meta = FX.local_relation(spark, _DST_REGION_ROWS,
+                             "dst_airport string, dst_region string")
     joined = (flat.join(F.broadcast(meta), "dst_airport", "left")
               .select("itinerary_id", "segment_idx", "dst_airport",
                       "dst_region",
@@ -233,8 +234,8 @@ def j9_attractiveness(spark: SparkSession, sf_dir: str) -> DataFrame:
                                     .cast("decimal(18,6)")).cast("double")
                               / F.count("final_trend_score"))
                              .alias("trend_score")))
-    flight = FX.to_spark(spark, FX.FLIGHT_COUNTRY_SCORES_ROWS,
-                         FX.FLIGHT_COUNTRY_SCORES_SCHEMA)
+    flight = FX.local_relation(spark, FX.FLIGHT_COUNTRY_SCORES_ROWS,
+                               FX.FLIGHT_COUNTRY_SCORES_SCHEMA)
     joined = (ex.select("country_code_3", "country_name_kor",
                         "exchange_rate_score")
               .join(trend_by_country, "country_code_3", "left")

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from travel_data_pipeline_spark.fixtures import local_relation
 from travel_data_pipeline_spark.functions.hashing import md5_long, md5_long_sql
 from travel_data_pipeline_spark.functions.parity import (
     ordered_fold, ordered_sum, ordered_sum_sql, round_sql,
@@ -1002,7 +1003,7 @@ def heaps_law_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     firsts = (docs.select(
         "doc_id", F.explode(token_array(F.col("text"))).alias("term"))
         .groupBy("term").agg(F.min("doc_id").alias("first_doc")))
-    steps = spark.createDataFrame([(k,) for k in _HEAPS_STEPS], "k int")
+    steps = local_relation(spark, [(k,) for k in _HEAPS_STEPS], "k int")
     ndocs = (docs.select("doc_id").crossJoin(F.broadcast(steps))
              .filter(F.col("doc_id") < F.col("k"))
              .groupBy("k").agg(F.count("*").cast("long").alias("n_docs")))

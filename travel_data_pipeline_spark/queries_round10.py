@@ -34,6 +34,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from travel_data_pipeline_spark.fixtures import local_relation
 from travel_data_pipeline_spark.functions.hashing import (
     md5_long,
     md5_long_sql,
@@ -1963,8 +1964,8 @@ def markov_removal_attribution(spark: SparkSession,
     channels = (c.select(F.col("f").alias("ch")).distinct()
                 .filter(F.col("ch") != "start"))
     scen = (channels.select(F.col("ch").alias("r"))
-            .unionByName(channels.sparkSession.createDataFrame(
-                [("NONE",)], "r string")))
+            .unionByName(local_relation(
+                channels.sparkSession, [("NONE",)], "r string")))
     states = m.select("f").distinct()
     bvec = m.filter(F.col("t") == "conv").select("f", F.col("p6").alias("b0"))
     zero6 = F.lit(0).cast("decimal(18,6)")

@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from travel_data_pipeline_spark.fixtures import local_relation
 from travel_data_pipeline_spark.functions.hashing import md5_long_sql
 from travel_data_pipeline_spark.functions.parity import (
     ordered_fold, ordered_sum, ordered_sum_sql, round_sql,
@@ -1465,7 +1466,7 @@ def quantile_treatment_effects(spark: SparkSession, sf_dir: str,
     if units is None:
         units = ipw_units(spark, sf_dir)
     units = units.select("c_custkey", "arm", "y")
-    grid = spark.createDataFrame([(q,) for q in _QTE_QS], "q int")
+    grid = local_relation(spark, [(q,) for q in _QTE_QS], "q int")
     picked = []
     for arm_v in (0, 1):
         side = units.filter(F.col("arm") == arm_v)

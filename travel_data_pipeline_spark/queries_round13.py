@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from travel_data_pipeline_spark.fixtures import local_relation
 from travel_data_pipeline_spark.functions.hashing import (
     md5_long,
     md5_long_sql,
@@ -1140,8 +1141,8 @@ def shapley_channel_attribution(spark: SparkSession,
     hist = (umask.groupBy("mask")
             .agg(F.count("*").alias("n_u"), F.sum("conv").alias("n_c"))
             .persist())
-    grid = spark.createDataFrame([(m,) for m in range(1 << n)],
-                                 "coal int")
+    grid = local_relation(spark, [(m,) for m in range(1 << n)],
+                          "coal int")
     rates = (F.broadcast(grid)
              .join(F.broadcast(hist),
                    F.col("mask").bitwiseAND(F.col("coal"))
@@ -1163,8 +1164,9 @@ def shapley_channel_attribution(spark: SparkSession,
                 continue
             pair_rows.append((c, m, m | (1 << i),
                               w[bin(m).count("1")]))
-    pairs = spark.createDataFrame(
-        pair_rows, "channel string, s_without int, s_with int, w double")
+    pairs = local_relation(
+        spark, pair_rows,
+        "channel string, s_without int, s_with int, w double")
     r_wo = rates.select(F.col("coal").alias("s_without"),
                         F.col("rate").alias("r0"))
     r_wi = rates.select(F.col("coal").alias("s_with"),

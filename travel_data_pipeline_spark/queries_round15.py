@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from travel_data_pipeline_spark.fixtures import local_relation
 from travel_data_pipeline_spark.functions.hashing import (
     md5_long,
     md5_long_sql,
@@ -667,8 +668,8 @@ def rank_biased_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     wnd = Window.orderBy(F.col("v").desc(), F.col("l_partkey").asc())
     rx = rev.select("l_partkey", F.row_number().over(wnd).alias("rx"))
     ry = qty.select("l_partkey", F.row_number().over(wnd).alias("ry"))
-    grid = spark.createDataFrame(
-        [(d, float(w)) for d, w in _RBO_W], "d int, w double")
+    grid = local_relation(
+        spark, [(d, float(w)) for d, w in _RBO_W], "d int, w double")
     both = rx.join(ry, "l_partkey")  # <= D rows
     ov = (F.broadcast(grid)
           .join(F.broadcast(both),

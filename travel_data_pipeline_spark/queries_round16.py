@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from travel_data_pipeline_spark.fixtures import local_relation
 from travel_data_pipeline_spark.functions.hashing import (
     md5_long,
     md5_long_sql,
@@ -446,7 +447,7 @@ def logrank_arms(spark: SparkSession, sf_dir: str) -> DataFrame:
     byt = (life.groupBy("arm", "t")
            .agg(F.sum(1 - F.col("censored")).alias("d"),
                 F.sum("censored").alias("c")))
-    arms = byt.sparkSession.createDataFrame([(0,), (1,)], "arm int")
+    arms = local_relation(byt.sparkSession, [(0,), (1,)], "arm int")
     grid = (life.select("t").distinct()
             .crossJoin(F.broadcast(arms))
             .join(byt, ["t", "arm"], "left")

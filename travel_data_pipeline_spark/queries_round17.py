@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from travel_data_pipeline_spark.fixtures import local_relation
 from travel_data_pipeline_spark.functions.hashing import (
     md5_long,
     md5_long_sql,
@@ -412,8 +413,7 @@ def hurst_rs_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
               .agg(F.count("*").alias("cnt")))
     seq = hourly.withColumn(
         "rn", F.row_number().over(Window.orderBy("h")))
-    sizes = spark.createDataFrame(
-        [(b,) for b in _HURST_SIZES], "b int")
+    sizes = local_relation(spark, [(b,) for b in _HURST_SIZES], "b int")
     dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     tagged = (sizes.crossJoin(seq)
               .select("b", "cnt",
@@ -2699,8 +2699,8 @@ def textrank_from_arrays(spark: SparkSession, arrs: DataFrame,
                 contrib += (w / sw[src]) * v[src]
             nv[node] = 0.15 + 0.85 * contrib
         v = nv
-    ws = spark.createDataFrame(
-        [(t, v[t]) for t in vocab_toks], schema="node string, v double")
+    ws = local_relation(
+        spark, [(t, v[t]) for t in vocab_toks], "node string, v double")
     wr = Window.orderBy(F.col("v").desc(), F.col("node").asc())
     return (ws.withColumn("rnk", F.row_number().over(wr))
             .filter(F.col("rnk") <= topk)

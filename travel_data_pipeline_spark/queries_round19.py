@@ -32,6 +32,7 @@ import zlib
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from travel_data_pipeline_spark.fixtures import local_relation
 from travel_data_pipeline_spark.registry import register
 from travel_data_pipeline_spark.sources.readers import load_table
 
@@ -835,7 +836,8 @@ def observe_metrics_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.when(F.col("o_orderstatus") == "O", 1)).alias("n_open"))
     observed.count()  # the action that materializes the metrics
     m = obs.get
-    return spark.createDataFrame(
+    return local_relation(
+        spark,
         [(int(m["n_rows"]), float(m["sum_price"]),
           float(m["min_price"]), float(m["max_price"]),
           int(m["n_open"]))],

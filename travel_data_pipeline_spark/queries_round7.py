@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from travel_data_pipeline_spark.fixtures import local_relation
 from travel_data_pipeline_spark.functions.hashing import (
     md5_long,
     md5_long_sql,
@@ -840,7 +841,7 @@ def classifier_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         + F.lit(0.0)
     truth = (n_tokens >= 10) & (mwl <= 12.0) & (sym_ratio <= 0.35)
     judged = docs.select(score.alias("score"), truth.alias("truth"))
-    grid = spark.createDataFrame([(float(t),) for t in _THR], ["thr"])
+    grid = local_relation(spark, [(float(t),) for t in _THR], "thr double")
     hit = F.col("score") >= F.col("thr")
     cells = (judged.crossJoin(F.broadcast(grid))
              .groupBy("thr")
@@ -1171,8 +1172,8 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = (docs.select(text.token_array(F.col("text")).alias("t"))
             .filter(F.size("t") >= 2))
     rows = _bpe_train(toks)
-    return spark.createDataFrame(
-        rows, "merge_rank long, pair string, n_pairs long")
+    return local_relation(
+        spark, rows, "merge_rank long, pair string, n_pairs long")
 
 
 # ---------------------------------------------------------------------------
@@ -1386,8 +1387,8 @@ def watermark_lateness_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         cummax_cols={"tus": "run_max"})
     late = rm.select((F.col("run_max") - F.col("tus"))
                      .alias("lateness_us"))
-    grid = spark.createDataFrame([(t,) for t in _WM_THRESHOLDS],
-                                 "thr_seconds long")
+    grid = local_relation(spark, [(t,) for t in _WM_THRESHOLDS],
+                          "thr_seconds long")
     n = late.agg(F.count("*").alias("total"))
     dropped = F.sum(
         F.when(F.col("lateness_us")
@@ -1440,8 +1441,8 @@ def session_gap_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     tus = F.unix_micros(F.col("ts"))
     gaps = events.select(
         "user_id", (tus - F.lag(tus).over(w)).alias("gap_us"))
-    grid = spark.createDataFrame([(t,) for t in _GAP_THRESHOLDS],
-                                 "gap_seconds long")
+    grid = local_relation(spark, [(t,) for t in _GAP_THRESHOLDS],
+                          "gap_seconds long")
     u = events.agg(F.countDistinct("user_id").cast("long")
                    .alias("n_users"))
     breaks = F.sum(

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from travel_data_pipeline_spark.fixtures import local_relation
 from travel_data_pipeline_spark.functions.hashing import (
     md5_long,
     md5_long_sql,
@@ -439,9 +440,9 @@ def bpe_apply_learned(spark: SparkSession, sf_dir: str) -> DataFrame:
         cur.unpersist()
         if prev is not None:
             prev.unpersist()
-    return spark.createDataFrame(
-        rows, "merge_rank long, pair string, n_train_pairs long, "
-              "n_applied_heldout long, heldout_tokens_after long")
+    return local_relation(
+        spark, rows, "merge_rank long, pair string, n_train_pairs long, "
+                     "n_applied_heldout long, heldout_tokens_after long")
 
 
 # ---------------------------------------------------------------------------
@@ -529,7 +530,7 @@ def quantile_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     w_cdf = Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, 0)
     cdf = merged.select("bin", F.sum("cnt").over(w_cdf).alias("cum"))
     n = o.agg(F.count("*").alias("n"))
-    grid = spark.createDataFrame([(float(q),) for q in _QSK_QS], ["q"])
+    grid = local_relation(spark, [(float(q),) for q in _QSK_QS], "q double")
     target = F.ceil(F.col("q") * F.col("n")).cast("long")
     est = (cdf.crossJoin(F.broadcast(grid)).crossJoin(F.broadcast(n))
            .filter(F.col("cum") >= target)
@@ -1918,8 +1919,8 @@ def mixture_temperature_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     src = docs.groupBy("source").agg(F.count("*").alias("n_docs"),
                                      F.sum("n_chars").alias("sz"))
-    alphas = docs.sparkSession.createDataFrame(
-        [("1.0",), ("0.5",), ("0.25",)], ["alpha"])
+    alphas = local_relation(
+        docs.sparkSession, [("1.0",), ("0.5",), ("0.25",)], "alpha string")
     szd = F.col("sz").cast("double")
     weighted = (src.crossJoin(F.broadcast(alphas))
                 .select("alpha", "source", "n_docs", "sz",

@@ -34,6 +34,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from travel_data_pipeline_spark.fixtures import local_relation
 from travel_data_pipeline_spark.functions.hashing import (
     md5_long,
     md5_long_sql,
@@ -649,8 +650,8 @@ def cosine_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = similarity.cosine_near_dup_lsh(
         emb, planes, bands=_SWEEP_BANDS, threshold=-1.0,
         max_bucket=_SWEEP_MAX_BUCKET)
-    grid = spark.createDataFrame([(t,) for t in _SWEEP_TAUS],
-                                 "threshold double")
+    grid = local_relation(spark, [(t,) for t in _SWEEP_TAUS],
+                          "threshold double")
     tot = emb.agg(F.count("*").alias("n_total"))
     hits = (pairs.join(F.broadcast(grid),
                        F.col("cosine_sim") >= F.col("threshold"))

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from travel_data_pipeline_spark.fixtures import local_relation
 from travel_data_pipeline_spark.functions.hashing import (
     affine_hash,
     affine_hash_sql,
@@ -147,8 +148,8 @@ def bloom_candidate_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                          & (F.col(f"w{s}").bitwiseAND(F.expr(
                              f"shiftleft(CAST(1 AS BIGINT), "
                              f"CAST(p{s} % {_WORD} AS INT))")) != 0)))
-    return spark.createDataFrame(
-        [(true_rows, probe.count(), lineitem.count())],
+    return local_relation(
+        spark, [(true_rows, probe.count(), lineitem.count())],
         "true_rows long, candidates long, total long")
 
 

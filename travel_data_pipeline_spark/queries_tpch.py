@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from travel_data_pipeline_spark.fixtures import local_relation
 from travel_data_pipeline_spark.operators.aggregates import dec_sum
 from travel_data_pipeline_spark.registry import register
 from travel_data_pipeline_spark.sources.readers import load_table
@@ -454,7 +455,7 @@ GROUP BY t.tier
 """)
 def range_join_value_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
-    tiers = spark.createDataFrame(_TIERS, "tier string, lo double, hi double")
+    tiers = local_relation(spark, _TIERS, "tier string, lo double, hi double")
     joined = e.join(F.broadcast(tiers),
                     (e["value"] >= tiers["lo"]) & (e["value"] < tiers["hi"]))
     return (joined.groupBy("tier")

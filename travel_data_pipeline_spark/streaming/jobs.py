@@ -26,6 +26,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
+from travel_data_pipeline_spark.fixtures import local_relation
+
+
 def _events_stream_schema(ts_type: T.DataType) -> T.StructType:
     return T.StructType([
         T.StructField("event_id", T.LongType()),
@@ -926,8 +929,8 @@ def token_shard_stream(incoming: DataFrame, state_path: str,
                     return
             offsets = state.select("source", "lang", "base_tokens")
         except FileNotFoundError:
-            offsets = spark.createDataFrame(
-                [], "source string, lang string, base_tokens long")
+            offsets = local_relation(
+                spark, [], "source string, lang string, base_tokens long")
 
         w = (Window.partitionBy("source", "lang").orderBy("doc_id")
              .rowsBetween(Window.unboundedPreceding, 0))
@@ -1001,7 +1004,7 @@ def hll_register_stream(incoming: DataFrame, state_path: str,
             state = (versioned.read_table(spark, state_path)
                      .select("bucket", "m"))
         except FileNotFoundError:
-            state = spark.createDataFrame([], "bucket int, m int")
+            state = local_relation(spark, [], "bucket int, m int")
         merged = (state.unionByName(
             batch_regs.select(F.col("bucket").cast("int").alias("bucket"),
                               F.col("m").cast("int").alias("m")))
@@ -1512,8 +1515,8 @@ def weighted_reservoir_stream(incoming: DataFrame, state_path: str,
             state = (versioned.read_table(spark, state_path)
                      .select("doc_id", "weight", "sel_key"))
         except FileNotFoundError:
-            state = spark.createDataFrame(
-                [], "doc_id long, weight long, sel_key double")
+            state = local_relation(
+                spark, [], "doc_id long, weight long, sel_key double")
         merged = (state.unionByName(
             batch_keys.select(F.col("doc_id").cast("long"),
                               F.col("weight").cast("long"),
@@ -1613,8 +1616,8 @@ def count_min_stream(incoming: DataFrame, state_path: str,
                 return  # replayed batch within this lineage: no-op
             cells = state.select("seed", "bucket", "c")
         except FileNotFoundError:
-            cells = spark.createDataFrame(
-                [], "seed int, bucket int, c long")
+            cells = local_relation(
+                spark, [], "seed int, bucket int, c long")
 
         batch_cells = user_cm_cells(batch_df.select("user_id"))
         merged = (cells.unionByName(
@@ -1789,8 +1792,7 @@ def group_sequential_stream(events: DataFrame, state_path: str,
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
-        d0_df = spark.createDataFrame(
-            [(d0,)], "d0s string").select(
+        d0_df = local_relation(spark, [(d0,)], "d0s string").select(
             F.to_timestamp("d0s").alias("d0"))
         incoming = gs_user_firsts(batch_df, d0_df)
         try:
