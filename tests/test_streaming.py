@@ -1761,3 +1761,322 @@ def test_stateful_ewma_chart_matches_folds_and_drops_replays(
                    spark.read.parquet(str(tmp_path / "ewma_out"))
                    .collect())
     assert after == before
+
+
+# --- the monotone-scan driver: one contract for the eight sequential twins.
+# Every twin folds the same eight days: input row i carries day i + 1 and
+# count _CNTS[i]; _ARRIVAL is the order they land in (05,01,02,...,08).
+
+_DAYS = [f"2024-01-{d:02d}" for d in range(1, 9)]
+_CNTS = [3, 1, 4, 1, 5, 9, 2, 6]
+_ARRIVAL = [(i, _CNTS[i]) for i in (4, 0, 1, 2, 3, 5, 6, 7)]
+_IN_ORDER = sorted(_ARRIVAL)
+_MU, _SD = 4.0, 1.5
+
+
+def _d6(x):
+    from decimal import ROUND_HALF_UP, Decimal
+
+    return Decimal(x).quantize(Decimal("0.000001"), rounding=ROUND_HALF_UP)
+
+
+def _r6(x):
+    return float(_d6(repr(float(x)))) + 0.0
+
+
+def _ewma_ref(xs):
+    out, e = [], None
+    for i, c in xs:
+        e = float(c) if e is None else 0.3 * c + (1.0 - 0.3) * e
+        out.append((1, i + 1, e))
+    return out
+
+
+def _anomaly_ref(xs):
+    import math
+
+    out, n, s, ss = [], 0, 0, 0
+    for i, c in xs:
+        if n >= 2:
+            var = (float(ss) - float(s) * float(s) / float(n)) \
+                / (float(n) - 1.0)
+            z = (float(c) - float(s) / float(n)) / math.sqrt(var)
+            out.append(("e", _DAYS[i], c, round(z, 6) + 0.0))
+        n, s, ss = n + 1, s + c, ss + c * c
+    return out
+
+
+def _holt_ref(xs):
+    out, lvl, trd = [], None, None
+    for i, c in xs:
+        if lvl is None:
+            lvl, trd = float(c), 0.0
+        else:
+            new = 0.3 * c + (1.0 - 0.3) * (lvl + trd)
+            trd = 0.1 * (new - lvl) + (1.0 - 0.1) * trd
+            lvl = new
+        out.append(("e", _DAYS[i], c, round(lvl, 6), round(trd, 6) + 0.0))
+    return out
+
+
+def _holt_winters_ref(xs):
+    from decimal import Decimal as D
+
+    seed = [c for _, c in xs[:7]]
+    lvl, trd = _d6(repr(float(sum(seed)) / 7.0)), D(0)
+    seas = [c - lvl for c in seed]
+    out = [("e", _DAYS[i], c, float(lvl), 0.0, float(s), None)
+           for (i, c), s in zip(xs, seas)]
+    for i, c in xs[7:]:
+        sm = seas[0]
+        lt = _d6(D("0.25") * (c - sm) + D("0.75") * (lvl + trd))
+        bt = _d6(D("0.05") * (lt - lvl) + D("0.95") * trd)
+        st = _d6(D("0.2") * (c - lt) + D("0.8") * sm)
+        out.append(("e", _DAYS[i], c, float(lt), float(bt), float(st),
+                    float(lvl + trd + sm)))
+        lvl, trd, seas = lt, bt, seas[1:] + [st]
+    return out
+
+
+def _croston_ref(xs):
+    from decimal import Decimal as D
+
+    out, zs, ps, prev = [], None, None, None
+    for n, (i, c) in enumerate(xs, 1):
+        z = D(f"{c}.25")
+        if zs is None:
+            zs, ps = _d6(z), _d6(1)
+        else:
+            zs = _d6(D("0.2") * z + D("0.8") * zs)
+            ps = _d6(D("0.2") * (i - prev) + D("0.8") * ps)
+        prev = i
+        out.append(("b", _DAYS[i], f"{c}.25", n, float(zs), float(ps),
+                    float(_d6(repr(float(zs) / float(ps))))))
+    return out
+
+
+def _page_hinkley_ref(xs):
+    out, s, m, minm, maxph, arg = [], 0, 0.0, 0.0, 0.0, None
+    for n, (i, c) in enumerate(xs, 1):
+        s += c
+        if n == 1:
+            arg = i + 1
+        else:
+            m = m + c - s / n
+            minm = min(minm, m)
+            if m - minm > maxph:
+                maxph, arg = m - minm, i + 1
+        out.append((i + 1, c, n, _r6(m - minm), _r6(maxph), arg))
+    return out
+
+
+def _spc_ref(xs):
+    def rule(w, k, hits, lim):
+        return len(w) >= k and (len([v for v in w[-k:] if v > lim]) >= hits
+                                or len([v for v in w[-k:] if v < -lim])
+                                >= hits)
+
+    out, zs = [], []
+    for i, c in xs:
+        z = (float(c) - _MU) / _SD
+        zs.append(z)
+        out.append((i + 1, c, _r6(z), abs(z) > 3.0, rule(zs, 3, 2, 2.0),
+                    rule(zs, 5, 4, 1.0), rule(zs, 8, 8, 0.0)))
+    return out
+
+
+def _ewma_chart_ref(xs):
+    import math
+
+    out, lam, l, p = [], 0.2, 0.0, 1.0
+    for n, (i, c) in enumerate(xs, 1):
+        l = float(c) if n == 1 else lam * c + (1.0 - lam) * l
+        p *= (1.0 - lam) * (1.0 - lam)
+        half = 3.0 * _SD * math.sqrt(lam / (2.0 - lam) * (1.0 - p))
+        out.append((i + 1, c, n, _r6(l), _r6(_MU + half), _r6(_MU - half),
+                    l > _MU + half or l < _MU - half))
+    return out
+
+
+_DAILY = "event_type string, day string, cnt long"
+_GLOBAL = "t long, cnt long"
+
+# twin -> (input DDL, input row of (day index i, count c), the twin
+# applied to a stream, its pure-Python recurrence over in-order rows)
+_TWINS = {
+    "ewma_stateful": (
+        "user_id long, event_id long, ts timestamp, value double",
+        lambda i, c: (1, i + 1, _DAYS[i], float(c)),
+        jobs.ewma_stateful, _ewma_ref),
+    "anomaly_stateful": (
+        _DAILY, lambda i, c: ("e", _DAYS[i], c),
+        lambda df: jobs.anomaly_stateful(df, min_n=2), _anomaly_ref),
+    "holt_stateful": (
+        _DAILY, lambda i, c: ("e", _DAYS[i], c),
+        jobs.holt_stateful, _holt_ref),
+    "holt_winters_stateful": (
+        _DAILY, lambda i, c: ("e", _DAYS[i], c),
+        jobs.holt_winters_stateful, _holt_winters_ref),
+    "croston_stateful": (
+        "brand string, day string, z string",
+        lambda i, c: ("b", _DAYS[i], f"{c}.25"),
+        jobs.croston_stateful, _croston_ref),
+    "page_hinkley_stateful": (
+        _GLOBAL, lambda i, c: (i + 1, c),
+        jobs.page_hinkley_stateful, _page_hinkley_ref),
+    "spc_stateful": (
+        _GLOBAL, lambda i, c: (i + 1, c),
+        lambda df: jobs.spc_stateful(df, _MU, _SD), _spc_ref),
+    "ewma_chart_stateful": (
+        _GLOBAL, lambda i, c: (i + 1, c),
+        lambda df: jobs.ewma_chart_stateful(df, _MU, _SD), _ewma_chart_ref),
+}
+
+
+def _run_twin(spark, name, batches, feed_dir):
+    """Land each batch of (i, c) rows as one file, in order, and drain
+    them through the twin one micro-batch per file; the emitted rows,
+    sorted."""
+    import os
+
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    ddl, make_row, twin, _ = _TWINS[name]
+    cols = [f.split()[0] for f in ddl.split(", ")]
+    os.makedirs(feed_dir)
+    for k, batch in enumerate(batches):
+        pdf = pd.DataFrame([make_row(i, c) for i, c in batch], columns=cols)
+        if "ts" in cols:
+            pdf["ts"] = pd.to_datetime(pdf["ts"], utc=True)
+        path = os.path.join(feed_dir, f"b{k}.parquet")
+        pq.write_table(pa.Table.from_pandas(pdf, preserve_index=False),
+                       path, coerce_timestamps="us")
+        os.utime(path, (1700000000 + 60 * k, 1700000000 + 60 * k))
+    stream = (spark.readStream.schema(ddl).option("maxFilesPerTrigger", 1)
+              .parquet(feed_dir))
+    sink = f"scan_{uuid.uuid4().hex[:8]}"
+    q = (twin(stream).writeStream.format("memory").queryName(sink)
+         .outputMode("append").trigger(availableNow=True).start())
+    q.awaitTermination(120)
+    return sorted(tuple(r) for r in spark.table(sink).collect())
+
+
+@pytest.mark.parametrize("name", list(_TWINS))
+def test_monotone_scan_sorts_the_whole_micro_batch(spark, tmp_path, name):
+    """A key's rows reach the state function in several Arrow chunks;
+    the twin must sort the whole micro-batch, not each chunk. One key,
+    one micro-batch landing 05,01,02,...,08, two rows per chunk: the
+    output equals the one-chunk run and the pure-Python recurrence."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        chunked = _run_twin(spark, name, [_ARRIVAL], str(tmp_path / "c2"))
+    finally:
+        spark.conf.set(key, old)
+    single = _run_twin(spark, name, [_ARRIVAL], str(tmp_path / "c1"))
+    want = sorted(_TWINS[name][3](_IN_ORDER))
+    assert single == want
+    assert chunked == want
+
+
+@pytest.mark.parametrize("name", list(_TWINS))
+def test_monotone_scan_raises_on_duplicate_order(spark, tmp_path, name):
+    """Two rows with one order value in a micro-batch are the wrong
+    grain, and which one folds first would be arbitrary: every twin
+    fails the query with ValueError."""
+    from pyspark.errors import StreamingQueryException
+
+    with pytest.raises(StreamingQueryException, match="ValueError"):
+        _run_twin(spark, name, [_ARRIVAL + [(2, 7)]], str(tmp_path / "f"))
+
+
+@pytest.mark.parametrize("name", list(_TWINS))
+def test_monotone_scan_drops_late_rows(spark, tmp_path, name):
+    """A later micro-batch replaying an old day with a poisoned value
+    is dropped by every twin (for ewma_stateful: an event at or before
+    the user's last folded (ts, event_id)); the output is the
+    recurrence over the in-order rows alone."""
+    got = _run_twin(spark, name, [_ARRIVAL, [(4, 999)]], str(tmp_path / "f"))
+    assert got == sorted(_TWINS[name][3](_IN_ORDER))
+
+
+_ISOLATED = """
+import json, sys
+sys.path.insert(0, sys.argv[1])
+from pyspark.sql import SparkSession
+spark = (SparkSession.builder.master("local[2]")
+         .config("spark.ui.enabled", "false")
+         .config("spark.sql.shuffle.partitions", "2").getOrCreate())
+from tests.test_streaming import _ARRIVAL, _IN_ORDER, _TWINS, _run_twin
+bad = [name for k, (name, (_, _, _, ref)) in enumerate(_TWINS.items())
+       if _run_twin(spark, name, [_ARRIVAL], f"feed{k}")
+       != sorted(ref(_IN_ORDER))]
+spark.stop()
+print(json.dumps(bad))
+"""
+
+
+def test_twins_run_without_the_package_on_the_worker_path(tmp_path):
+    """The verify setup: a driver in a directory outside the repo that
+    reaches the package only through a sys.path insert, so a Python
+    worker cannot import travel_data_pipeline_spark. Every twin's state
+    function and step must still run there (they reference only the
+    standard library, pandas and their closure)."""
+    import json
+    import os
+    import signal
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    repo = str(Path(__file__).resolve().parents[1])
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.Popen(
+        [sys.executable, "-c", _ISOLATED, repo], stdout=subprocess.PIPE,
+        stderr=subprocess.PIPE, text=True, env=env, cwd=tmp_path,
+        start_new_session=True)
+    try:
+        out, err = proc.communicate(timeout=600)
+    finally:
+        if proc.poll() is None:
+            os.killpg(proc.pid, signal.SIGKILL)
+            proc.wait()
+    assert proc.returncode == 0, err[-3000:]
+    assert json.loads(out.strip().splitlines()[-1]) == []
+
+
+# Package definitions allowed to call applyInPandasWithState, keyed by
+# (module, enclosing top-level definition): a reason each.
+_STATEFUL_ALLOW = {
+    ("streaming/jobs.py", "_monotone_scan"):
+        "the one driver of the sequential twins",
+    ("streaming/jobs.py", "trends_growth_stateful"):
+        "update mode, one row per key: not a monotone scan",
+    ("streaming/jobs.py", "running_totals_stateful"):
+        "update mode, one row per key: not a monotone scan",
+}
+
+
+def test_apply_in_pandas_with_state_only_in_the_driver():
+    import ast
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parents[1] / "travel_data_pipeline_spark"
+    hits, seen = [], set()
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        for stmt in ast.parse(path.read_text()).body:
+            for node in ast.walk(stmt):
+                if (isinstance(node, ast.Attribute)
+                        and node.attr == "applyInPandasWithState"):
+                    where = (rel, getattr(stmt, "name", "<module>"))
+                    seen.add(where)
+                    if where not in _STATEFUL_ALLOW:
+                        hits.append(f"{rel}:{node.lineno} ({where[1]})")
+    assert not hits, ("a sequential stateful twin goes through "
+                      f"streaming.jobs._monotone_scan: {hits}")
+    assert set(_STATEFUL_ALLOW) <= seen, \
+        f"stale: {set(_STATEFUL_ALLOW) - seen}"

@@ -66,3 +66,22 @@ def test_unverified_fill_the_sample_before_green():
     assert not (wasted and unverified_outside), (
         f"wasted sample slots {wasted} while {len(unverified_outside)} "
         "unverified queries wait outside")
+
+
+def test_canonical_oracle_texts_hold_no_checkout_path():
+    """tools/registry_digest.py hashes the oracle texts with the package
+    root replaced by a fixed token, so two checkouts of one registry
+    print the same digest: no canonical text may still embed the
+    checkout's absolute path."""
+    import importlib.util
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parents[1]
+    spec = importlib.util.spec_from_file_location(
+        "registry_digest", repo / "tools" / "registry_digest.py")
+    digest = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(digest)
+    texts = digest.canonical_oracles()
+    assert len(texts) == len(registry.ORACLES)
+    leaks = sorted(n for n, sql in texts.items() if str(repo) in sql)
+    assert not leaks, f"oracle texts embed the checkout path: {leaks}"

@@ -21,6 +21,10 @@ batch reader.
 
 from __future__ import annotations
 
+import datetime
+import math
+from decimal import ROUND_HALF_UP, Decimal
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -450,18 +454,92 @@ def unconverted_clicks_stream(clicks: DataFrame, purchases: DataFrame,
                     F.col("purchase_id").isNotNull().alias("converted")))
 
 
-def ewma_stateful(events: DataFrame, alpha: float = 0.3) -> DataFrame:
-    """Streaming EWMA per user via applyInPandasWithState — the
-    streaming twin of queries_stats.ewma_values_per_user: state is one
-    double (the last smoothed value) per user; each micro-batch sorts
-    its rows by (ts, event_id) and continues the recurrence
-    E = alpha*v + (1-alpha)*E from state. Emits one row per event
-    (append mode). With the same arrival order, the doubles match the
-    batch fold exactly — asserted in tests/test_streaming.py."""
-    import pandas as pd  # noqa: F401
+def _monotone_scan(rows: DataFrame, keys: list[str], order: list[str],
+                   out_schema: T.StructType, state_schema: T.StructType,
+                   init: tuple, step) -> DataFrame:
+    """The one driver of the sequential stateful twins: per key, fold
+    each micro-batch's rows in ``order`` through ``step(state, row) ->
+    (state, rows_to_emit)`` and emit those rows, the key prepended to
+    each, in append mode. ``state`` is a tuple shaped as
+    ``state_schema`` (``init`` before the key's first row); ``row`` is
+    a namedtuple of the input columns. An empty ``keys`` is one global
+    fold in ONE state partition by design: hand it a bounded grain
+    (one row per day), never raw events.
 
+    The monotone-ingestion contract, the same for every twin:
+    - a key's rows are gathered from all of its Arrow chunks and
+      sorted once, stably, on ``order``. Arrow hands a group over in
+      chunks of at most spark.sql.execution.arrow.maxRecordsPerBatch
+      unsorted rows, so a per-chunk sort folds rows out of order and
+      makes the drop below discard in-order ones;
+    - a duplicate ``order`` value inside one micro-batch raises
+      ValueError: which copy folds first would be arbitrary, and the
+      input is at the wrong grain (raw events, not one row per day);
+    - a row at or before the last folded ``order`` value, kept in the
+      state after the twin's own fields, is dropped: a late arrival or
+      an at-least-once replay of an old batch is a no-op instead of
+      folding into the recurrence out of order. Each twin folds the
+      monotone subsequence of arrivals, exactly what a watermark would
+      admit, and on an in-order feed matches its batch fold.
+
+    The state function and every ``step`` run in Python workers that
+    may not have this package on their path, so they reference only
+    the standard library, pandas and their own closure.
+    """
+    schema = T.StructType(
+        [T.StructField(k, rows.schema[k].dataType) for k in keys]
+        + out_schema.fields)
+    full_state = T.StructType(
+        state_schema.fields
+        + [T.StructField(f"last_{c}", rows.schema[c].dataType)
+           for c in order])
+    n_state = len(state_schema.fields)
+    names = schema.fieldNames()
+
+    def update(key, pdfs, state):
+        import pandas as pd
+
+        st, last = init, None
+        if state.exists:
+            st, last = state.get[:n_state], state.get[n_state:]
+        batch = pd.concat(list(pdfs)).sort_values(order, kind="stable")
+        if batch.duplicated(order).any():
+            raise ValueError(f"duplicate {order} value in one micro-batch "
+                             f"for key {tuple(key)}: the input must hold "
+                             f"one row per {order} (e.g. the daily grain, "
+                             "not raw events)")
+        prefix, out = tuple(key)[:len(keys)], []
+        for row in batch.itertuples(index=False):
+            pos = tuple(getattr(row, c) for c in order)
+            if last is not None and pos <= last:
+                continue  # late arrival / replay: drop
+            st, emit = step(st, row)
+            out += [prefix + tuple(r) for r in emit]
+            last = pos
+        if last is not None:
+            state.update((*st, *last))
+        yield pd.DataFrame.from_records(out, columns=names)
+
+    grouped = (rows.groupBy(*keys) if keys
+               else rows.withColumn("g", F.lit(0)).groupBy("g"))
+    return grouped.applyInPandasWithState(update, schema, full_state,
+                                          "append", "NoTimeout")
+
+
+def ewma_stateful(events: DataFrame, alpha: float = 0.3) -> DataFrame:
+    """Streaming EWMA per user — the streaming twin of
+    queries_stats.ewma_values_per_user: state is one double (the last
+    smoothed value) per user; each event, in (ts, event_id) order,
+    continues the recurrence E = alpha*v + (1-alpha)*E from state.
+    Emits one row per event (append mode). With the same arrival
+    order, the doubles match the batch fold exactly — asserted in
+    tests/test_streaming.py.
+
+    Late rows: an event at or before the user's last folded
+    (ts, event_id) — a late arrival or a replay — is dropped, not
+    folded out of order; a duplicate (ts, event_id) in one micro-batch
+    raises ValueError (_monotone_scan's contract)."""
     out_schema = T.StructType([
-        T.StructField("user_id", T.LongType()),
         T.StructField("event_id", T.LongType()),
         T.StructField("ewma", T.DoubleType()),
     ])
@@ -469,27 +547,13 @@ def ewma_stateful(events: DataFrame, alpha: float = 0.3) -> DataFrame:
         T.StructField("last_ewma", T.DoubleType()),
     ])
 
-    # self-contained closure: executors may not have this repo on path
-    def update(key, pdfs, state):
-        import pandas as pd
+    def step(state, row):
+        prev, v = state[0], float(row.value)
+        e = v if prev is None else alpha * v + (1.0 - alpha) * prev
+        return (e,), [(row.event_id, e)]
 
-        prev = state.get[0] if state.exists else None
-        out_ids, out_vals = [], []
-        for pdf in pdfs:
-            pdf = pdf.sort_values(["ts", "event_id"])
-            for eid, v in zip(pdf["event_id"], pdf["value"]):
-                prev = (float(v) if prev is None
-                        else alpha * float(v) + (1.0 - alpha) * prev)
-                out_ids.append(int(eid))
-                out_vals.append(prev)
-        if prev is not None:
-            state.update((prev,))
-        yield pd.DataFrame({"user_id": [key[0]] * len(out_ids),
-                            "event_id": out_ids, "ewma": out_vals})
-
-    return (events.groupBy("user_id")
-            .applyInPandasWithState(update, out_schema, state_schema,
-                                    "append", "NoTimeout"))
+    return _monotone_scan(events, ["user_id"], ["ts", "event_id"],
+                          out_schema, state_schema, (None,), step)
 
 
 def rollup_maintenance_stream(events: DataFrame, table_path: str,
@@ -531,26 +595,15 @@ def _rollup_fold(table_path: str, checkpoint: str):
 
 def anomaly_stateful(daily_counts: DataFrame,
                      min_n: int = 7) -> DataFrame:
-    """Streaming prequential anomaly monitor via applyInPandasWithState
-    — the streaming twin of queries_ops.anomaly_prequential: state is
-    the exact integer moment triple (n, s, ss) per event_type plus the
-    last folded day; each day's count is z-scored against the history
-    accumulated so far, THEN folded into the moments. Emits one row per
-    scored day (append mode).
-
-    Ordering contract (ADVICE r04): within a micro-batch rows are
-    sorted by day; ACROSS micro-batches a day at or before the last
-    folded day (a late arrival or an at-least-once replay) is DROPPED
-    deterministically rather than folded into the moments out of order
-    — the monitor scores the monotone subsequence of arrivals, exactly
-    what a watermark would admit. On an in-order feed the doubles match
-    the batch expanding-window spelling bit-for-bit; both the in-order
-    equality and the late-day drop are asserted in
-    tests/test_streaming.py."""
-    import pandas as pd  # noqa: F401
-
+    """Streaming prequential anomaly monitor — the streaming twin of
+    queries_ops.anomaly_prequential: state is the exact integer moment
+    triple (n, s, ss) per event_type; each day's count is z-scored
+    against the history accumulated so far, THEN folded into the
+    moments. Emits one row per scored day (append mode). On an
+    in-order feed the doubles match the batch expanding-window
+    spelling bit-for-bit; both the in-order equality and the late-day
+    drop are asserted in tests/test_streaming.py."""
     out_schema = T.StructType([
-        T.StructField("event_type", T.StringType()),
         T.StructField("day", T.StringType()),
         T.StructField("cnt", T.LongType()),
         T.StructField("zscore", T.DoubleType()),
@@ -559,70 +612,38 @@ def anomaly_stateful(daily_counts: DataFrame,
         T.StructField("n", T.LongType()),
         T.StructField("s", T.LongType()),
         T.StructField("ss", T.LongType()),
-        T.StructField("last_day", T.StringType()),
     ])
 
-    # self-contained closure: executors may not have this repo on path
-    def update(key, pdfs, state):
-        import math
+    def step(state, row):
+        (n, s, ss), cnt, emit = state, int(row.cnt), []
+        if n >= min_n:
+            # identical spelling to _Z_SQL: all-double over exact
+            # integer moments, with the same degenerate guard
+            # (zero-variance history -> NULL zscore)
+            var_num = float(ss) - (float(s) * float(s)) / float(n)
+            if var_num <= 0.0:
+                z = None
+            else:
+                mean = float(s) / float(n)
+                var = var_num / (float(n) - 1.0)
+                z = round((float(cnt) - mean) / math.sqrt(var), 6) + 0.0
+            emit = [(str(row.day), cnt, z)]
+        return (n + 1, s + cnt, ss + cnt * cnt), emit
 
-        import pandas as pd
-
-        n, s, ss, last_day = (state.get if state.exists
-                              else (0, 0, 0, None))
-        days, cnts, zs = [], [], []
-        for pdf in pdfs:
-            pdf = pdf.sort_values("day")
-            for day, cnt in zip(pdf["day"], pdf["cnt"]):
-                day, cnt = str(day), int(cnt)
-                if last_day is not None and day <= last_day:
-                    continue  # late cross-batch arrival / replay: drop
-                if n >= min_n:
-                    # identical spelling to _Z_SQL: all-double over
-                    # exact integer moments, with the same degenerate
-                    # guard (zero-variance history -> NULL zscore)
-                    var_num = (float(ss)
-                               - (float(s) * float(s)) / float(n))
-                    if var_num <= 0.0:
-                        z = None
-                    else:
-                        mean = float(s) / float(n)
-                        var = var_num / (float(n) - 1.0)
-                        z = round((float(cnt) - mean)
-                                  / math.sqrt(var), 6) + 0.0
-                    days.append(day)
-                    cnts.append(cnt)
-                    zs.append(z)
-                n, s, ss = n + 1, s + cnt, ss + cnt * cnt
-                last_day = day
-        state.update((n, s, ss, last_day))
-        yield pd.DataFrame({"event_type": [key[0]] * len(days),
-                            "day": days, "cnt": cnts, "zscore": zs})
-
-    return (daily_counts.groupBy("event_type")
-            .applyInPandasWithState(update, out_schema, state_schema,
-                                    "append", "NoTimeout"))
+    return _monotone_scan(daily_counts, ["event_type"], ["day"],
+                          out_schema, state_schema, (0, 0, 0), step)
 
 
 def holt_stateful(daily_counts: DataFrame, alpha: float = 0.3,
                   gamma: float = 0.1) -> DataFrame:
-    """Streaming Holt linear smoothing via applyInPandasWithState — the
-    streaming twin of queries_timeseries.holt_linear_daily: state is
-    the (level, trend) double pair per event_type; each day's count
-    continues the two-state recurrence
+    """Streaming Holt linear smoothing — the streaming twin of
+    queries_timeseries.holt_linear_daily: state is the (level, trend)
+    double pair per event_type; each day's count continues the
+    two-state recurrence
         l' = a*x + (1-a)*(l + b);  b' = g*(l' - l) + (1-g)*b
     with the identical double spelling, so the outputs match the batch
-    sorted-array fold exactly — asserted in tests/test_streaming.py.
-
-    Ordering contract (ADVICE r04): same as anomaly_stateful — rows
-    are sorted by day within a micro-batch, and a cross-batch day at or
-    before the last folded day (late arrival / replay) is DROPPED
-    deterministically instead of perturbing the (level, trend)
-    recurrence out of order."""
-    import pandas as pd  # noqa: F401
-
+    sorted-array fold exactly — asserted in tests/test_streaming.py."""
     out_schema = T.StructType([
-        T.StructField("event_type", T.StringType()),
         T.StructField("day", T.StringType()),
         T.StructField("cnt", T.LongType()),
         T.StructField("level", T.DoubleType()),
@@ -631,42 +652,21 @@ def holt_stateful(daily_counts: DataFrame, alpha: float = 0.3,
     state_schema = T.StructType([
         T.StructField("lvl", T.DoubleType()),
         T.StructField("trd", T.DoubleType()),
-        T.StructField("last_day", T.StringType()),
     ])
 
-    # self-contained closure: executors may not have this repo on path
-    def update(key, pdfs, state):
-        import pandas as pd
+    def step(state, row):
+        (lvl, trd), x = state, int(row.cnt)
+        if lvl is None:
+            lvl, trd = float(x), 0.0
+        else:
+            new_lvl = alpha * x + (1.0 - alpha) * (lvl + trd)
+            trd = gamma * (new_lvl - lvl) + (1.0 - gamma) * trd
+            lvl = new_lvl
+        return (lvl, trd), [(str(row.day), x, round(lvl, 6),
+                             round(trd, 6) + 0.0)]
 
-        lvl, trd, last_day = (state.get if state.exists
-                              else (None, None, None))
-        days, cnts, lvls, trds = [], [], [], []
-        for pdf in pdfs:
-            pdf = pdf.sort_values("day")
-            for day, cnt in zip(pdf["day"], pdf["cnt"]):
-                day, x = str(day), int(cnt)
-                if last_day is not None and day <= last_day:
-                    continue  # late cross-batch arrival / replay: drop
-                if lvl is None:
-                    lvl, trd = float(x), 0.0
-                else:
-                    new_lvl = alpha * x + (1.0 - alpha) * (lvl + trd)
-                    trd = gamma * (new_lvl - lvl) + (1.0 - gamma) * trd
-                    lvl = new_lvl
-                last_day = day
-                days.append(day)
-                cnts.append(x)
-                lvls.append(round(lvl, 6))
-                trds.append(round(trd, 6) + 0.0)
-        if lvl is not None:
-            state.update((lvl, trd, last_day))
-        yield pd.DataFrame({"event_type": [key[0]] * len(days),
-                            "day": days, "cnt": cnts,
-                            "level": lvls, "trend": trds})
-
-    return (daily_counts.groupBy("event_type")
-            .applyInPandasWithState(update, out_schema, state_schema,
-                                    "append", "NoTimeout"))
+    return _monotone_scan(daily_counts, ["event_type"], ["day"],
+                          out_schema, state_schema, (None, None), step)
 
 
 def enrich_stream_static(events: DataFrame, dim: DataFrame,
@@ -1017,31 +1017,25 @@ def hll_register_stream(incoming: DataFrame, state_path: str,
 
 
 def holt_winters_stateful(daily_counts: DataFrame) -> DataFrame:
-    """Streaming additive Holt-Winters via applyInPandasWithState —
-    the stateful twin of queries_round11.holt_winters_daily: per
-    event_type the state is the EXACT 6-dp decimal (level, trend,
-    seasonal deque of 7) carried as strings (decimals survive the
-    state roundtrip losslessly as text), plus the init buffer (the
-    first 7 days must all arrive before l0 = round(mean, 6) and the
-    seasonal seeds exist — the seed rows are emitted retroactively in
-    the micro-batch that completes the buffer).
+    """Streaming additive Holt-Winters — the stateful twin of
+    queries_round11.holt_winters_daily: per event_type the state is
+    the EXACT 6-dp decimal (level, trend, seasonal deque of 7) carried
+    as strings (decimals survive the state roundtrip losslessly as
+    text), plus the init buffer (the first 7 days must all arrive
+    before l0 = round(mean, 6) and the seasonal seeds exist — the seed
+    rows are emitted retroactively with the eighth day, the first
+    recurrence row).
 
     The recurrence spelling is digit-identical to the batch fold
     (same python-literal constants, same HALF_UP quantization), so
     outputs are bit-equal to the batch query over the union of
-    monotone batches — asserted in tests/test_streaming.py. Ordering
-    contract (the holt/anomaly twins'): rows sort by day within a
-    micro-batch; cross-batch days at or before the last folded day
-    are DROPPED deterministically.
+    monotone batches — asserted in tests/test_streaming.py.
 
     The input must be the ZERO-FILLED daily grid the batch query
     folds (seasonality indexes by calendar position); feeding raw
     observed-day counts would silently shift the season.
     """
-    import pandas as pd  # noqa: F401
-
     out_schema = T.StructType([
-        T.StructField("event_type", T.StringType()),
         T.StructField("day", T.StringType()),
         T.StructField("cnt", T.LongType()),
         T.StructField("level", T.DoubleType()),
@@ -1055,125 +1049,70 @@ def holt_winters_stateful(daily_counts: DataFrame) -> DataFrame:
         T.StructField("seas", T.ArrayType(T.StringType())),
         T.StructField("buf_days", T.ArrayType(T.StringType())),
         T.StructField("buf_cnts", T.ArrayType(T.LongType())),
-        T.StructField("last_day", T.StringType()),
     ])
+    A, A1 = Decimal("0.25"), Decimal("0.75")
+    B, B1 = Decimal("0.05"), Decimal("0.95")
+    G, G1 = Decimal("0.2"), Decimal("0.8")
+    m = 7
 
-    # self-contained closure: executors may not have this repo on path
-    def update(key, pdfs, state):
-        from decimal import ROUND_HALF_UP, Decimal
+    def d6(x):
+        return Decimal(x).quantize(Decimal("0.000001"),
+                                   rounding=ROUND_HALF_UP)
 
-        import pandas as pd
-
-        A, A1 = Decimal("0.25"), Decimal("0.75")
-        B, B1 = Decimal("0.05"), Decimal("0.95")
-        G, G1 = Decimal("0.2"), Decimal("0.8")
-        m = 7
-
-        def d6(x):
-            return Decimal(x).quantize(Decimal("0.000001"),
-                                       rounding=ROUND_HALF_UP)
-
-        if state.exists:
-            lvl_s, trd_s, seas_s, buf_d, buf_c, last_day = state.get
-            lvl = Decimal(lvl_s) if lvl_s is not None else None
-            trd = Decimal(trd_s) if trd_s is not None else None
-            seas = [Decimal(s) for s in seas_s] if seas_s else []
-            buf = list(zip(buf_d or [], buf_c or []))
+    def step(state, row):
+        lvl, trd, seas, buf_d, buf_c = state
+        day, x = str(row.day), int(row.cnt)
+        out = []
+        if lvl is None:
+            if len(buf_d) < m:
+                return (None, None, [], [*buf_d, day], [*buf_c, x]), []
+            # the (m+1)-th day arrived: NOW init + emit the seed rows
+            # retroactively — the batch query requires a grid LONGER
+            # than m days before emitting anything (size > 7 gate), so
+            # a 7-day-total stream must stay silent exactly like the
+            # batch (review r08)
+            lvl = d6(repr(float(sum(buf_c)) / float(m)))
+            trd = Decimal(0)
+            seas = [Decimal(c) - lvl for c in buf_c]
+            out = [(d, c, float(lvl), float(trd), float(s), None)
+                   for d, c, s in zip(buf_d, buf_c, seas)]
         else:
-            lvl = trd = last_day = None
-            seas, buf = [], []
+            lvl, trd = Decimal(lvl), Decimal(trd)
+            seas = [Decimal(s) for s in seas]
+        sm = seas[0]
+        fc = lvl + trd + sm
+        lt = d6(A * (Decimal(x) - sm) + A1 * (lvl + trd))
+        bt = d6(B * (lt - lvl) + B1 * trd)
+        st = d6(G * (Decimal(x) - lt) + G1 * sm)
+        out.append((day, x, float(lt), float(bt), float(st), float(fc)))
+        return (str(lt), str(bt), [str(s) for s in seas[1:] + [st]],
+                [], []), out
 
-        out = {"day": [], "cnt": [], "level": [], "trend": [],
-               "season": [], "forecast": []}
-
-        def emit(day, cnt, lv, tr, se, fc):
-            out["day"].append(day)
-            out["cnt"].append(int(cnt))
-            out["level"].append(float(lv))
-            out["trend"].append(float(tr))
-            out["season"].append(float(se))
-            out["forecast"].append(None if fc is None else float(fc))
-
-        # one SORT across the whole micro-batch: Arrow delivers a
-        # group's rows as MULTIPLE chunks in arbitrary cross-chunk
-        # order, and a per-chunk sort would make the monotone drop
-        # rule discard genuinely in-order days (review r08)
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            batch = pd.concat(chunks).sort_values("day")
-            rows_iter = zip(batch["day"], batch["cnt"])
-        else:
-            rows_iter = []
-        for day, cnt in rows_iter:
-            day, x = str(day), int(cnt)
-            if last_day is not None and day <= last_day:
-                continue  # late cross-batch arrival / replay: drop
-            last_day = day
-            if lvl is None:
-                if len(buf) < m:
-                    buf.append((day, x))
-                    continue
-                # the (m+1)-th day arrived: NOW init + emit the seed
-                # rows retroactively — the batch query requires a
-                # grid LONGER than m days before emitting anything
-                # (size > 7 gate), so a 7-day-total stream must stay
-                # silent exactly like the batch (review r08)
-                mean = float(sum(c for _, c in buf)) / float(m)
-                lvl = d6(repr(mean))
-                trd = Decimal(0)
-                seas = [Decimal(c) - lvl for _, c in buf]
-                for (d, c), s in zip(buf, seas):
-                    emit(d, c, lvl, trd, s, None)
-                buf = []
-                # fall through: this day is the first recurrence row
-            sm = seas[0]
-            fc = lvl + trd + sm
-            lt = d6(A * (Decimal(x) - sm) + A1 * (lvl + trd))
-            bt = d6(B * (lt - lvl) + B1 * trd)
-            st = d6(G * (Decimal(x) - lt) + G1 * sm)
-            seas = seas[1:] + [st]
-            lvl, trd = lt, bt
-            emit(day, x, lvl, trd, st, fc)
-
-        state.update((str(lvl) if lvl is not None else None,
-                      str(trd) if trd is not None else None,
-                      [str(s) for s in seas],
-                      [d for d, _ in buf], [c for _, c in buf],
-                      last_day))
-        yield pd.DataFrame({"event_type": [key[0]] * len(out["day"]),
-                            **out})
-
-    return (daily_counts.groupBy("event_type")
-            .applyInPandasWithState(update, out_schema, state_schema,
-                                    "append",
-                                    "NoTimeout"))
+    return _monotone_scan(daily_counts, ["event_type"], ["day"],
+                          out_schema, state_schema,
+                          (None, None, [], [], []), step)
 
 
 def croston_stateful(demand_rows: DataFrame) -> DataFrame:
-    """Streaming Croston/SBA smoother via applyInPandasWithState —
-    the stateful twin of queries_round16.croston_intermittent_demand:
-    per brand the state is the EXACT 6-dp decimal (Z level, P
-    interval) carried as strings plus the last folded day; demand
-    sizes arrive as exact decimal STRINGS (2-dp text survives the
-    Arrow roundtrip losslessly, doubles would not).
+    """Streaming Croston/SBA smoother — the stateful twin of
+    queries_round16.croston_intermittent_demand: per brand the state
+    is the EXACT 6-dp decimal (Z level, P interval) carried as strings
+    plus the previous demand day; demand sizes arrive as exact decimal
+    STRINGS (2-dp text survives the Arrow roundtrip losslessly,
+    doubles would not).
 
     The recurrence spelling is digit-identical to the batch fold
     (same Decimal constants, same HALF_UP quantization), so the LAST
     emitted row per brand is bit-equal to the registered batch query
     over any MONOTONE batch split — asserted in
-    tests/test_streaming.py. Ordering contract (the holt twins'):
-    rows sort by day within a micro-batch; cross-batch days at or
-    before the last folded day are DROPPED deterministically, which
-    also makes at-least-once redelivery of an old batch a no-op.
+    tests/test_streaming.py; at-least-once redelivery of an old batch
+    is a no-op.
 
     Input must be the NONZERO-demand day rows (brand, day
     'yyyy-MM-dd', z decimal-string) — Croston consumes gaps through
     the interval smoother, never zero rows.
     """
-    import pandas as pd  # noqa: F401
-
     out_schema = T.StructType([
-        T.StructField("brand", T.StringType()),
         T.StructField("day", T.StringType()),
         T.StructField("z", T.StringType()),
         T.StructField("n_demand_days", T.LongType()),
@@ -1184,85 +1123,42 @@ def croston_stateful(demand_rows: DataFrame) -> DataFrame:
     state_schema = T.StructType([
         T.StructField("zs", T.StringType()),
         T.StructField("ps", T.StringType()),
-        T.StructField("last_day", T.StringType()),
+        T.StructField("prev_day", T.StringType()),
         T.StructField("n_days", T.LongType()),
     ])
+    A, A1 = Decimal("0.2"), Decimal("0.8")
 
-    # self-contained closure: executors may not have this repo on path
-    def update(key, pdfs, state):
-        import datetime
-        from decimal import ROUND_HALF_UP, Decimal
+    def d6(x):
+        return Decimal(x).quantize(Decimal("0.000001"),
+                                   rounding=ROUND_HALF_UP)
 
-        import pandas as pd
-
-        A, A1 = Decimal("0.2"), Decimal("0.8")
-
-        def d6(x):
-            return Decimal(x).quantize(Decimal("0.000001"),
-                                       rounding=ROUND_HALF_UP)
-
-        if state.exists:
-            zs_s, ps_s, last_day, n_days = state.get
-            zs = Decimal(zs_s) if zs_s is not None else None
-            ps = Decimal(ps_s) if ps_s is not None else None
+    def step(state, row):
+        zs, ps, prev, n = state
+        day, z = str(row.day), Decimal(row.z)
+        if zs is None:
+            zs, ps = d6(z), d6(1)
         else:
-            zs = ps = last_day = None
-            n_days = 0
+            gap = (datetime.date.fromisoformat(day)
+                   - datetime.date.fromisoformat(prev)).days
+            zs = d6(A * z + A1 * Decimal(zs))
+            ps = d6(A * Decimal(gap) + A1 * Decimal(ps))
+        # Spark F.round(double, 6): HALF_UP on the shortest repr
+        fc = float(d6(repr(float(zs) / float(ps))))
+        return ((str(zs), str(ps), day, n + 1),
+                [(day, str(row.z), n + 1, float(zs), float(ps), fc)])
 
-        out = {"day": [], "z": [], "n_demand_days": [],
-               "z_level": [], "p_interval": [], "forecast": []}
-
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            batch = pd.concat(chunks).sort_values("day")
-            rows_iter = zip(batch["day"], batch["z"])
-        else:
-            rows_iter = []
-        for day, z_s in rows_iter:
-            day = str(day)
-            if last_day is not None and day <= last_day:
-                continue  # late cross-batch arrival / replay: drop
-            z = Decimal(z_s)
-            if zs is None:
-                zs, ps = d6(z), d6(1)
-            else:
-                gap = (datetime.date.fromisoformat(day)
-                       - datetime.date.fromisoformat(last_day)).days
-                zs = d6(A * z + A1 * zs)
-                ps = d6(A * Decimal(gap) + A1 * ps)
-            last_day = day
-            n_days += 1
-            out["day"].append(day)
-            out["z"].append(str(z_s))
-            out["n_demand_days"].append(n_days)
-            out["z_level"].append(float(zs))
-            out["p_interval"].append(float(ps))
-            # Spark F.round(double, 6): HALF_UP on the shortest repr
-            fc = float(zs) / float(ps)
-            out["forecast"].append(float(
-                Decimal(repr(fc)).quantize(Decimal("0.000001"),
-                                           rounding=ROUND_HALF_UP)))
-
-        state.update((str(zs) if zs is not None else None,
-                      str(ps) if ps is not None else None,
-                      last_day, n_days))
-        yield pd.DataFrame({"brand": [key[0]] * len(out["day"]),
-                            **out})
-
-    return (demand_rows.groupBy("brand")
-            .applyInPandasWithState(update, out_schema, state_schema,
-                                    "append",
-                                    "NoTimeout"))
+    return _monotone_scan(demand_rows, ["brand"], ["day"], out_schema,
+                          state_schema, (None, None, None, 0), step)
 
 
 def page_hinkley_stateful(daily_rows: DataFrame) -> DataFrame:
     """Streaming Page-Hinkley mean-shift monitor — the stateful twin
     of queries_round16.page_hinkley_drift (VERDICT r11 #5): one
-    global fold keyed on a constant, state = the exact
-    (rn, s, m, min m, max PH, argmax day) tuple the batch recurrence
-    carries. m/minm/maxph are IEEE doubles — they cross the Arrow
-    state boundary bit-exactly (no string shim needed; the croston
-    twin carries decimal strings only because ITS state is decimal).
+    global fold, state = the exact (rn, s, m, min m, max PH, argmax
+    day) tuple the batch recurrence carries. m/minm/maxph are IEEE
+    doubles — they cross the Arrow state boundary bit-exactly (no
+    string shim needed; the croston twin carries decimal strings only
+    because ITS state is decimal).
 
     The recurrence spelling is step-identical to the batch fold:
     m += cnt - s/rn with s, rn exact integers (< 2^53, so Python's
@@ -1271,21 +1167,12 @@ def page_hinkley_stateful(daily_rows: DataFrame) -> DataFrame:
     the same shortest-repr HALF_UP 6-dp round as Spark F.round. The
     LAST emitted row per feed therefore bit-matches the registered
     batch query over any MONOTONE day split — asserted in
-    tests/test_streaming.py. Ordering contract (croston's): rows
-    sort by day within a micro-batch; cross-batch days at or before
-    the last folded day are DROPPED, making at-least-once redelivery
-    of an old batch a strict output no-op.
+    tests/test_streaming.py.
 
     Input must be the daily count rows (t day-index long, cnt long)
-    — the _daily_counts grain, one row per day. ENFORCED (ADVICE
-    r12): a duplicate day within a micro-batch raises ValueError in
-    the state function. The constant-key fold funnels everything
-    through ONE state partition by design — correct only because the
-    bounded day grid keeps per-batch state tiny; never hand this raw
+    — the _daily_counts grain, one row per day; never hand this raw
     event-grain input (pre-aggregate with _daily_counts first).
     """
-    import pandas as pd  # noqa: F401
-
     out_schema = T.StructType([
         T.StructField("t", T.LongType()),
         T.StructField("cnt", T.LongType()),
@@ -1301,73 +1188,30 @@ def page_hinkley_stateful(daily_rows: DataFrame) -> DataFrame:
         T.StructField("minm", T.DoubleType()),
         T.StructField("maxph", T.DoubleType()),
         T.StructField("argmax_t", T.LongType()),
-        T.StructField("last_t", T.LongType()),
     ])
 
-    # self-contained closure: executors may not have this repo on path
-    def update(key, pdfs, state):
-        from decimal import ROUND_HALF_UP, Decimal
+    def r6(x):
+        return float(Decimal(repr(float(x))).quantize(
+            Decimal("0.000001"), rounding=ROUND_HALF_UP)) + 0.0
 
-        import pandas as pd
-
-        def r6(x):
-            return float(Decimal(repr(float(x))).quantize(
-                Decimal("0.000001"), rounding=ROUND_HALF_UP)) + 0.0
-
-        if state.exists:
-            rn, s, m, minm, maxph, argmax_t, last_t = state.get
+    def step(state, row):
+        rn, s, m, minm, maxph, argmax_t = state
+        t, cnt = int(row.t), int(row.cnt)
+        rn, s = rn + 1, s + cnt
+        if rn == 1:
+            # seed: m0 = cnt - double(cnt) = 0.0 exactly
+            m = minm = float(cnt) - float(cnt)
+            maxph, argmax_t = 0.0, t
         else:
-            rn = s = 0
-            m = minm = maxph = 0.0
-            argmax_t = last_t = None
+            m = m + cnt - s / rn
+            minm = min(minm, m)
+            if m - minm > maxph:
+                maxph, argmax_t = m - minm, t
+        return ((rn, s, m, minm, maxph, argmax_t),
+                [(t, cnt, rn, r6(m - minm), r6(maxph), argmax_t)])
 
-        out = {"t": [], "cnt": [], "n_days": [], "ph_final": [],
-               "ph_max": [], "drift_day": []}
-
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            batch = pd.concat(chunks).sort_values("t")
-            if batch["t"].duplicated().any():  # grain guard (ADVICE r12)
-                raise ValueError(
-                    "page_hinkley_stateful: duplicate day index in a "
-                    "micro-batch — input must be the _daily_counts "
-                    "grain (one row per day), not raw events")
-            rows_iter = zip(batch["t"], batch["cnt"])
-        else:
-            rows_iter = []
-        for t, cnt in rows_iter:
-            t, cnt = int(t), int(cnt)
-            if last_t is not None and t <= last_t:
-                continue  # late cross-batch arrival / replay: drop
-            rn += 1
-            s += cnt
-            if rn == 1:
-                # seed: m0 = cnt - double(cnt) = 0.0 exactly
-                m = minm = float(cnt) - float(cnt)
-                maxph = 0.0
-                argmax_t = t
-            else:
-                m = m + cnt - s / rn
-                minm = min(minm, m)
-                ph = m - minm
-                if ph > maxph:
-                    maxph = ph
-                    argmax_t = t
-            last_t = t
-            out["t"].append(t)
-            out["cnt"].append(cnt)
-            out["n_days"].append(rn)
-            out["ph_final"].append(r6(m - minm))
-            out["ph_max"].append(r6(maxph))
-            out["drift_day"].append(argmax_t)
-
-        state.update((rn, s, m, minm, maxph, argmax_t, last_t))
-        yield pd.DataFrame(out)
-
-    return (daily_rows.withColumn("g", F.lit(0)).groupBy("g")
-            .applyInPandasWithState(update, out_schema, state_schema,
-                                    "append",
-                                    "NoTimeout"))
+    return _monotone_scan(daily_rows, [], ["t"], out_schema, state_schema,
+                          (0, 0, 0.0, 0.0, 0.0, None), step)
 
 
 def spc_stateful(daily_rows: DataFrame, mu: float,
@@ -1376,22 +1220,17 @@ def spc_stateful(daily_rows: DataFrame, mu: float,
     of queries_round17.spc_western_electric: limits (mu, sigma) are
     FIXED inputs (in production the Phase-I batch query fits them on
     a reference window; the monitor then applies them to live data),
-    state = the trailing 8 z-side flags + the last folded day.
+    state = the trailing 8 raw z values, one global fold.
 
     z = (cnt - mu) / sigma with mu/sigma passed as the SAME IEEE
     doubles the batch spelling produces (exact-integer moments ->
     identical division/sqrt), so every emitted flag row is bit-equal
     to the batch query over any MONOTONE day split — asserted in
-    tests/test_streaming.py. Cross-batch days at or before last_t
-    drop (replay no-op), the page_hinkley contract.
+    tests/test_streaming.py.
 
-    Input: the daily count rows (t long, cnt long) — one row per
-    day, ENFORCED (ADVICE r12): a duplicate day within a micro-batch
-    raises ValueError. The constant-key fold uses ONE state partition
-    by design; pre-aggregate raw events to the daily grain first.
+    Input: the daily count rows (t long, cnt long) — one row per day;
+    pre-aggregate raw events to the daily grain first.
     """
-    import pandas as pd  # noqa: F401
-
     out_schema = T.StructType([
         T.StructField("t", T.LongType()),
         T.StructField("cnt", T.LongType()),
@@ -1404,7 +1243,6 @@ def spc_stateful(daily_rows: DataFrame, mu: float,
     state_schema = T.StructType([
         # trailing window of raw z values (<= 8), oldest first
         T.StructField("zs", T.ArrayType(T.DoubleType())),
-        T.StructField("last_t", T.LongType()),
     ])
 
     mu_l, sigma_l = float(mu), float(sigma)
@@ -1414,66 +1252,24 @@ def spc_stateful(daily_rows: DataFrame, mu: float,
                          "zero-variance series; a Phase-II monitor "
                          "needs real limits)")
 
-    def update(key, pdfs, state):
-        from decimal import ROUND_HALF_UP, Decimal
+    def r6(x):
+        return float(Decimal(repr(float(x))).quantize(
+            Decimal("0.000001"), rounding=ROUND_HALF_UP)) + 0.0
 
-        import pandas as pd
+    def rule(zs, k, hits, lim):  # >= hits of the last k z on one side
+        w = zs[-k:]
+        return len(w) >= k and (sum(v > lim for v in w) >= hits
+                                or sum(v < -lim for v in w) >= hits)
 
-        def r6(x):
-            return float(Decimal(repr(float(x))).quantize(
-                Decimal("0.000001"), rounding=ROUND_HALF_UP)) + 0.0
+    def step(state, row):
+        t, cnt = int(row.t), int(row.cnt)
+        z = (float(cnt) - mu_l) / sigma_l
+        zs = (state[0] + [z])[-8:]
+        return (zs,), [(t, cnt, r6(z), abs(z) > 3.0, rule(zs, 3, 2, 2.0),
+                        rule(zs, 5, 4, 1.0), rule(zs, 8, 8, 0.0))]
 
-        if state.exists:
-            zs, last_t = state.get
-            zs = list(zs)
-        else:
-            zs, last_t = [], None
-
-        out = {"t": [], "cnt": [], "z": [], "r1": [], "r2": [],
-               "r3": [], "r4": []}
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            batch = pd.concat(chunks).sort_values("t")
-            if batch["t"].duplicated().any():  # grain guard (ADVICE r12)
-                raise ValueError(
-                    "spc_stateful: duplicate day index in a "
-                    "micro-batch — input must be the daily grain "
-                    "(one row per day), not raw events")
-            rows_iter = zip(batch["t"], batch["cnt"])
-        else:
-            rows_iter = []
-        for t, cnt in rows_iter:
-            t, cnt = int(t), int(cnt)
-            if last_t is not None and t <= last_t:
-                continue  # late cross-batch arrival / replay: drop
-            z = (float(cnt) - mu_l) / sigma_l
-            zs = (zs + [z])[-8:]
-            last_t = t
-            w3, w5, w8 = zs[-3:], zs[-5:], zs[-8:]
-            r2 = (len(w3) >= 3
-                  and (sum(1 for v in w3 if v > 2.0) >= 2
-                       or sum(1 for v in w3 if v < -2.0) >= 2))
-            r3 = (len(w5) >= 5
-                  and (sum(1 for v in w5 if v > 1.0) >= 4
-                       or sum(1 for v in w5 if v < -1.0) >= 4))
-            r4 = (len(w8) >= 8
-                  and (sum(1 for v in w8 if v > 0.0) >= 8
-                       or sum(1 for v in w8 if v < 0.0) >= 8))
-            out["t"].append(t)
-            out["cnt"].append(cnt)
-            out["z"].append(r6(z))
-            out["r1"].append(abs(z) > 3.0)
-            out["r2"].append(r2)
-            out["r3"].append(r3)
-            out["r4"].append(r4)
-
-        state.update((zs, last_t))
-        yield pd.DataFrame(out)
-
-    return (daily_rows.withColumn("g", F.lit(0)).groupBy("g")
-            .applyInPandasWithState(update, out_schema, state_schema,
-                                    "append",
-                                    "NoTimeout"))
+    return _monotone_scan(daily_rows, [], ["t"], out_schema, state_schema,
+                          ([],), step)
 
 
 def weighted_reservoir_stream(incoming: DataFrame, state_path: str,
@@ -1833,8 +1629,8 @@ def ewma_chart_stateful(daily_rows: DataFrame, mu: float, sd: float,
     queries_round18.ewma_control_chart_daily (round-13 policy: a new
     sequential family gets its twin). Limits (mu, sd) are FIXED
     inputs (the batch query fits them Phase-I from the whole
-    series); state = (level, (1-lam)^(2i) running product, i,
-    last_t).
+    series); state = (level, (1-lam)^(2i) running product, i), one
+    global fold.
 
     The recurrence l = lam*y + (1-lam)*l (seed l_1 = y_1) and the
     limit product p *= (1-lam)^2 use only IEEE *, +, /, sqrt — all
@@ -1847,14 +1643,9 @@ def ewma_chart_stateful(daily_rows: DataFrame, mu: float, sd: float,
     IEEE sequence — so the batch comparison asserts ~1e-6 agreement,
     never bits (the module's closed-form-vs-recurrence gotcha).
 
-    Input: daily count rows (t long, cnt long) — one row per day,
-    ENFORCED (ValueError on in-batch duplicates); cross-batch days
-    at or before last_t drop (replay no-op, the page_hinkley
-    contract); constant-key single state partition by design
-    (pre-aggregate to the daily grain first).
+    Input: daily count rows (t long, cnt long) — one row per day;
+    pre-aggregate to the daily grain first.
     """
-    import pandas as pd  # noqa: F401
-
     out_schema = T.StructType([
         T.StructField("t", T.LongType()),
         T.StructField("cnt", T.LongType()),
@@ -1868,63 +1659,25 @@ def ewma_chart_stateful(daily_rows: DataFrame, mu: float, sd: float,
         T.StructField("l", T.DoubleType()),
         T.StructField("p", T.DoubleType()),
         T.StructField("i", T.LongType()),
-        T.StructField("last_t", T.LongType()),
     ])
 
     mu_l, sd_l, lam_l = float(mu), float(sd), float(lam)
     lam1sq = (1.0 - lam_l) * (1.0 - lam_l)
 
-    def update(key, pdfs, state):
-        import math
-        from decimal import ROUND_HALF_UP, Decimal
+    def r6(x):
+        return float(Decimal(repr(float(x))).quantize(
+            Decimal("0.000001"), rounding=ROUND_HALF_UP)) + 0.0
 
-        import pandas as pd
+    def step(state, row):
+        (l, p, i), t, cnt = state, int(row.t), int(row.cnt)
+        i += 1
+        l = float(cnt) if i == 1 \
+            else lam_l * float(cnt) + (1.0 - lam_l) * l
+        p = p * lam1sq
+        half = 3.0 * sd_l * math.sqrt(lam_l / (2.0 - lam_l) * (1.0 - p))
+        ucl, lcl = mu_l + half, mu_l - half
+        return (l, p, i), [(t, cnt, i, r6(l), r6(ucl), r6(lcl),
+                            l > ucl or l < lcl)]
 
-        def r6(x):
-            return float(Decimal(repr(float(x))).quantize(
-                Decimal("0.000001"), rounding=ROUND_HALF_UP)) + 0.0
-
-        if state.exists:
-            l, p, i, last_t = state.get
-        else:
-            l, p, i, last_t = 0.0, 1.0, 0, None
-
-        out = {"t": [], "cnt": [], "n_days": [], "ewma": [],
-               "ucl": [], "lcl": [], "breach": []}
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            batch = pd.concat(chunks).sort_values("t")
-            if batch["t"].duplicated().any():  # grain guard
-                raise ValueError(
-                    "ewma_chart_stateful: duplicate day index in a "
-                    "micro-batch — input must be the daily grain "
-                    "(one row per day), not raw events")
-            rows_iter = zip(batch["t"], batch["cnt"])
-        else:
-            rows_iter = []
-        for t, cnt in rows_iter:
-            t, cnt = int(t), int(cnt)
-            if last_t is not None and t <= last_t:
-                continue  # late cross-batch arrival / replay: drop
-            i += 1
-            l = float(cnt) if i == 1 \
-                else lam_l * float(cnt) + (1.0 - lam_l) * l
-            p = p * lam1sq
-            half = 3.0 * sd_l * math.sqrt(
-                lam_l / (2.0 - lam_l) * (1.0 - p))
-            ucl, lcl = mu_l + half, mu_l - half
-            last_t = t
-            out["t"].append(t)
-            out["cnt"].append(cnt)
-            out["n_days"].append(i)
-            out["ewma"].append(r6(l))
-            out["ucl"].append(r6(ucl))
-            out["lcl"].append(r6(lcl))
-            out["breach"].append(l > ucl or l < lcl)
-
-        state.update((l, p, i, last_t))
-        yield pd.DataFrame(out)
-
-    return (daily_rows.withColumn("g", F.lit(0)).groupBy("g")
-            .applyInPandasWithState(update, out_schema, state_schema,
-                                    "append", "NoTimeout"))
+    return _monotone_scan(daily_rows, [], ["t"], out_schema, state_schema,
+                          (0.0, 1.0, 0), step)
